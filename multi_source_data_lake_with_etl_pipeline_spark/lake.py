@@ -50,9 +50,17 @@ import time
 import uuid
 from collections import OrderedDict
 
+from pyspark.errors import (
+    AnalysisException,
+    ArithmeticException,
+    DateTimeException,
+    NumberFormatException,
+    PySparkTypeError,
+    PySparkValueError,
+)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 _LOG = "_log"
 _DATA = "data"
@@ -527,6 +535,55 @@ def _ident_refs(predicate: str, name: str) -> bool:
     return re.search(rf"(?i)(?<![A-Za-z0-9_]){re.escape(name)}(?![A-Za-z0-9_])", predicate) is not None
 
 
+# What makes driver-side literal evaluation (:func:`_literal_rows`)
+# give up: a value that doesn't fit its column's type, an expression
+# Spark can't parse or analyze over the given columns, or a
+# value-dependent evaluation error (ANSI cast/arithmetic/datetime).
+# Anything else is a real failure and propagates.
+_NOT_EVALUABLE = (
+    AnalysisException,  # ParseException included
+    ArithmeticException,
+    DateTimeException,
+    NumberFormatException,
+    PySparkTypeError,
+    PySparkValueError,
+)
+
+
+def _literal_rows(
+    spark: SparkSession, fields: list[StructField], rows: list[tuple]
+) -> DataFrame:
+    """A few typed literal rows as a LocalRelation: a projection or
+    filter over it is folded by the optimizer on the driver, so
+    collecting it launches NO Spark job (~0.03 s). ``createDataFrame``
+    over a list of tuples parallelizes an RDD instead, and one
+    ``first()`` over it costs two jobs (~0.3 s).
+
+    The rows travel as a pyarrow Table built with each field's Arrow
+    type, so a NULL keeps its column's type. Values are checked and
+    converted by Spark's own rules (the ones ``createDataFrame`` and
+    ``F.lit`` apply: a naive datetime is local time), so a value that
+    doesn't fit its field raises ``PySparkTypeError`` /
+    ``PySparkValueError`` exactly as the tuple path did."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _make_type_verifier
+
+    schema = StructType(fields)
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    arrays = []
+    for i, f in enumerate(fields):
+        dt = f.dataType
+        vals = [r[i] for r in rows]
+        if dt.needConversion():
+            vals = [None if x is None else dt.toInternal(x) for x in vals]
+        arrays.append(pa.array(vals, type=to_arrow_type(dt)))
+    table = pa.Table.from_arrays(arrays, names=[f.name for f in fields])
+    return spark.createDataFrame(table, schema)
+
+
 class LakeTable:
     """Handle to a versioned lake table at ``path``."""
 
@@ -664,8 +721,6 @@ class LakeTable:
             dt = df.select(F.expr(expr).alias(name)).schema[0].dataType
             df = df.withColumn(name, F.expr(expr).cast(dt))
             fields.append(StructField(name, dt, True, {_GEN_KEY: expr}))
-        from pyspark.sql.types import LongType
-
         for name, spec in (identity_columns or {}).items():
             if isinstance(spec, dict):
                 start, step = spec.get("start", 1), spec.get("step", 1)
@@ -2210,7 +2265,10 @@ class LakeTable:
         write job itself via an Observation over the batch's LOGICAL
         columns (guide §1.2: validations and counts that used to be
         their own Spark actions fuse into the write's single pass).
-        When given, the return value is ``(adds, observed_dict)``.
+        When given, the return value is ``(adds, observed_dict)``. The
+        metrics may read helper columns outside ``schema`` (merge's
+        updated/inserted marker): those columns end at the observation
+        and never reach the files.
         ``validate``: callable invoked with the observed metrics AFTER
         the staging write but BEFORE any file is renamed into data/ —
         raising aborts the write with nothing landed, preserving the
@@ -2223,6 +2281,9 @@ class LakeTable:
             df = df.observe(
                 obs_user, *[c.alias(n) for n, c in observe.items()]
             )
+            if schema is not None:
+                names = {f.name for f in schema.fields}
+                df = df.select(*[c for c in df.columns if c in names])
 
         def _validated(tmp_dir: str) -> dict | None:
             if obs_user is None:
@@ -2791,8 +2852,9 @@ class LakeTable:
             # bucket-transform case ``pmod(xxhash64(k), N)`` included):
             # no monotonicity needed, because X = v implies g = f(v)
             # for a deterministic f. The value is computed by one
-            # driver-side evaluation of the expression over the
-            # literal; any failure (type mismatch, non-evaluable)
+            # job-free driver-side evaluation of the expression over
+            # the literal (:func:`_literal_rows`); a literal or
+            # expression that can't be evaluated (``_NOT_EVALUABLE``)
             # conservatively derives nothing.
             srcs = [
                 g.name
@@ -2805,16 +2867,14 @@ class LakeTable:
                 if col != srcs[0] or lo is None or lo != hi:
                     continue
                 try:
-                    row = (
-                        self.spark.createDataFrame(
-                            [(lo,)], StructType([by_field[col]])
-                        )
+                    (row,) = (
+                        _literal_rows(self.spark, [by_field[col]], [(lo,)])
                         .select(F.expr(e).cast(f.dataType).alias("_v"))
-                        .first()
+                        .collect()
                     )
-                except Exception:
+                except _NOT_EVALUABLE:
                     continue
-                if row is not None and row["_v"] is not None:
+                if row["_v"] is not None:
                     v = _json_safe(row["_v"])
                     out.append((f.name, v, v))
         return out
@@ -3600,14 +3660,21 @@ class LakeTable:
                 for i, p in enumerate(pp)
             )
 
-        uniq = {key_of(a) for a in prunable}
+        uniq = list({key_of(a) for a in prunable})
         if not uniq:
             return []
-        pdf = self.spark.createDataFrame(
-            sorted(uniq, key=lambda t: tuple(map(str, t))),
-            StructType(part_fields),
-        )
-        hits = {tuple(r) for r in pdf.filter(F.expr(predicate)).collect()}
+        # matches come back by row number, never by re-comparing the
+        # collected values with the keys
+        idx = StructField("_mdl_row", LongType(), False)
+        hits = {
+            uniq[r[idx.name]]
+            for r in _literal_rows(
+                self.spark, part_fields + [idx], [(*t, i) for i, t in enumerate(uniq)]
+            )
+            .filter(F.expr(predicate))
+            .select(idx.name)
+            .collect()
+        }
         return [a for a in prunable if key_of(a) in hits]
 
     def _partition_candidates(
@@ -3620,15 +3687,21 @@ class LakeTable:
         rewrites any other partition's files); otherwise every active
         entry (conservative — the predicate references data columns,
         so file location can't be decided from partition values).
+        A predicate naming a non-partition column returns every entry
+        without attempting the analysis that would fail on it.
         Files from an EARLIER partition layout (partition evolution)
         are always candidates — their values aren't in metadata, and
         excluding them would let matching rows silently survive a
         row-level DELETE/UPDATE."""
-        if not self._partition_phys():
+        pp = set(self._partition_phys())
+        if not pp or any(
+            _phys(f) not in pp and _ident_refs(predicate, f.name)
+            for f in schema.fields
+        ):
             return active
         try:
             matched = self._matching_entries(active, predicate, schema)
-        except Exception:
+        except _NOT_EVALUABLE:
             return active
         _, legacy = self._split_by_layout(active)
         return matched + legacy
@@ -4148,19 +4221,22 @@ class LakeTable:
             metrics={"restored_to_version": version},
         )
 
-    def _touched_files(
+    def _touched_counts(
         self,
         marker: DataFrame,
-        col: str = "_f",
+        col: str = "_dv_base",
         active: list[dict] | None = None,
-    ) -> list[str]:
+    ) -> tuple[list[str], int]:
         """STORED path strings of active files containing ≥1 marker
-        row. ``marker`` carries either a ``_f`` column captured with
-        input_file_name() AT SCAN TIME (the expression is thread-local
-        to the scan and evaluates to '' after any exchange, so it
-        cannot be added after a join/shuffle) or — for DV-aware flows,
-        which read through ``_read_entries(keep_meta=True)`` — the
-        ``_dv_base`` column, whose values survive joins.
+        row, and the total marker-row count — ONE per-file grouped
+        aggregate instead of a distinct+collect job followed by a count
+        job (each a full pass over the marker frame).
+
+        ``marker`` carries the ``_dv_base`` column of a read through
+        ``_read_entries(keep_meta=True)``: file identity captured at
+        scan time, which survives joins (``input_file_name()`` is
+        thread-local to the scan and evaluates to '' after any
+        exchange, so it cannot be added after a join/shuffle).
 
         ``active``: the CALLER'S snapshot entries. Resolving against
         the caller's snapshot (not the latest) matters for the rebase
@@ -4177,28 +4253,6 @@ class LakeTable:
         some files as ABSOLUTE paths into the source table, and those
         must resolve to their stored absolute string so commit remove
         lists match the active set."""
-        if active is None:
-            _, active, _ = self._snapshot()
-        by_base = {os.path.basename(a["path"]): a["path"] for a in active}
-        rows = marker.select(col).distinct().collect()
-        out = {
-            by_base[base]
-            for r in rows
-            if (base := os.path.basename(r[col])) in by_base
-        }
-        return sorted(out)
-
-    def _touched_counts(
-        self,
-        marker: DataFrame,
-        col: str = "_dv_base",
-        active: list[dict] | None = None,
-    ) -> tuple[list[str], int]:
-        """:meth:`_touched_files` fused with the marker-row count the
-        callers all need next — ONE per-file grouped aggregate instead
-        of a distinct+collect job followed by a count job (each a full
-        pass over the marker frame). Returns (stored paths, total
-        marker rows); path resolution rules are _touched_files'."""
         if active is None:
             _, active, _ = self._snapshot()
         by_base = {os.path.basename(a["path"]): a["path"] for a in active}
@@ -4254,52 +4308,49 @@ class LakeTable:
                 source, schema, id_props_base, fill_only=True
             )
         src = source.persist()
-        # merge output rows are exactly the source rows (source wins on
-        # match) plus untouched old rows — validating the source batch
-        # covers every row the commit can introduce. The violation
-        # counts ride the updated/inserted count aggregate below
-        # (guide §1.2: no standalone validation scan); a violation
-        # raises there, before any file or commit is written.
-        cons = self.constraints(v)
-        viol = {
-            n: F.expr(f"coalesce(not ({p}), false)")
-            for n, p in (cons or {}).items()
-        }
-        src_keys = src.select(key).distinct()
+        # semi joins ignore duplicate keys: no distinct (and no shuffle
+        # stage) needed on the source side
+        src_keys = src.select(key)
         matched_old = cur.join(src_keys, key, "left_semi").persist()
-        touched = self._touched_files(matched_old, col="_dv_base", active=active)
+        touched, _ = self._touched_counts(matched_old, active=active)
         by_path = {a["path"]: a for a in active}
         t_entries = [by_path[p] for p in touched]
         data_cols = [f.name for f in schema.fields]
-        affected = matched_old.select(*data_cols)
-        # one pass over src for BOTH counts: a left join against the
-        # distinct matched keys marks each source row updated/inserted
-        # (NULL keys never match — they stay inserts, as before)
-        mk = affected.select(key).distinct().withColumn("_mk", F.lit(1))
-        row = (
-            src.join(mk, key, "left")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.count("_mk").alias("_u"),
-                *[
-                    F.sum(v.cast("bigint")).alias(f"_viol_{n}")
-                    for n, v in viol.items()
-                ],
-            )
-            .collect()[0]
+        # every source row marked updated (_mk = 1) or inserted (NULL) by
+        # one left join against the distinct matched keys (NULL keys
+        # never match — they stay inserts); the counts, the CHECK
+        # validation and the change feed all read it
+        mk = matched_old.select(key).distinct().withColumn("_mk", F.lit(1))
+        marked = src.join(mk, key, "left").select(*data_cols, "_mk")
+        # merge output rows are exactly the source rows (source wins on
+        # match) plus untouched old rows — validating the source batch
+        # covers every row the commit can introduce
+        obs_c, val_c = self._fused_constraints(
+            src.select(*data_cols), self.constraints(v)
         )
-        if any(int(row[f"_viol_{n}"] or 0) for n in viol):
+        obs_c.update(_n=F.count(F.lit(1)), _u=F.count("_mk"))
+        try:
+            if dv:
+                # counts and violation sums ride the write of the source
+                # rows (guide §1.2); a violation aborts it before any
+                # file lands in data/
+                new_files, got = self._write_files(
+                    marked, schema, observe=obs_c, validate=val_c
+                )
+            else:
+                # the rewrite copies old rows through, which must not be
+                # re-validated: one aggregate over the marked source
+                got = marked.agg(
+                    *[c.alias(n) for n, c in obs_c.items()]
+                ).collect()[0].asDict()
+                if val_c is not None:
+                    val_c(got)
+        except ConstraintViolation:
             src.unpersist()
             matched_old.unpersist()
-            # exact counts + samples for the message — failure path only
-            self._check_constraints(src, cons)
-            raise ConstraintViolation(
-                "CHECK constraint(s) violated during merge counts, "
-                "commit rejected (re-scan found no violating rows — "
-                "non-deterministic source?)"
-            )
-        updated = int(row["_u"])
-        inserted = int(row["_n"]) - updated
+            raise
+        updated = int(got["_u"])
+        inserted = int(got["_n"]) - updated
         # Rebase guard: an append interleaving one of OUR source keys
         # means this merge's matched/unmatched split is stale — a blind
         # rebase would commit duplicate keys (our "insert" of a key the
@@ -4321,7 +4372,6 @@ class LakeTable:
         # materialized src, so the Observation is complete)
         id_props = fin_id(dict(id_props_base)) if fin_id is not None else None
         if dv:
-            new_files = self._write_files(src.select(*data_cols), schema)
             if touched:
                 adds, new_v = self._commit_dv(
                     v, t_entries, matched_old, schema,
@@ -4344,22 +4394,19 @@ class LakeTable:
             )
         # CDF capture: O(source rows), written after the commit wins its
         # version (a conflict raises above, so no stray change files).
-        affected_keys = affected.select(key).distinct()
+        # Preimage (the OLD row values) — Delta-CDF parity, and what lets
+        # downstream incremental aggregates SUBTRACT the replaced
+        # contribution (operators/materialized).
         self._write_cdf(
             new_v,
-            src.join(affected_keys, key, "left_semi")
-            .withColumn("_change_type", F.lit("update_postimage"))
-            .unionByName(
-                # Preimage (the OLD row values) — Delta-CDF parity, and
-                # what lets downstream incremental aggregates SUBTRACT
-                # the replaced contribution (operators/materialized).
-                affected.join(src_keys, key, "left_semi").withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-            )
-            .unionByName(
-                src.join(affected_keys, key, "left_anti").withColumn(
-                    "_change_type", F.lit("insert")
+            marked.select(
+                *data_cols,
+                F.when(F.col("_mk").isNotNull(), F.lit("update_postimage"))
+                .otherwise(F.lit("insert"))
+                .alias("_change_type"),
+            ).unionByName(
+                matched_old.select(
+                    *data_cols, F.lit("update_preimage").alias("_change_type")
                 )
             ),
             schema,

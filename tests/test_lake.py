@@ -1912,7 +1912,7 @@ def test_ops_on_emptied_table(spark, tmp_path):
 
 
 def test_rebase_raises_when_concurrent_rewrite_steals_touched_file(spark, tmp_path):
-    """Review finding (r6): _touched_files resolves against the
+    """Review finding (r6): _touched_counts resolves against the
     OPERATION'S snapshot. A concurrent commit that rewrites a touched
     file between our snapshot and our commit must surface as
     CommitConflict — resolving against the LATEST snapshot would drop
@@ -2238,6 +2238,34 @@ class TestCheckConstraints:
             spark.createDataFrame([(3, 77), (100, 1)], "k long, v long"), "k"
         )
         assert out["updated"] == 1 and out["inserted"] == 1
+
+        def data_files():
+            return sorted(
+                os.path.join(d, f)
+                for d, _, fs in os.walk(t._data_dir)
+                for f in fs
+            )
+
+        # a DV merge validates the source rows on its data-file write: a
+        # violation aborts that write before any file reaches data/, and
+        # no deletion-vector sidecar or commit follows
+        fp, files = _state_fingerprint(t), data_files()
+        with pytest.raises(ConstraintViolation, match="v_nonneg"):
+            t.merge(
+                spark.createDataFrame([(3, -5), (100, 1)], "k long, v long"),
+                "k", dv=True,
+            )
+        assert _state_fingerprint(t) == fp
+        assert data_files() == files
+        assert not os.path.isdir(t._dv_dir) or not os.listdir(t._dv_dir)
+        out = t.merge(
+            spark.createDataFrame([(3, 78), (101, 1)], "k long, v long"),
+            "k", dv=True,
+        )
+        assert (out["updated"], out["inserted"]) == (1, 1)
+        assert sorted(map(tuple, t.read().filter("k IN (3, 100, 101)").collect())) == [
+            (3, 78), (100, 1), (101, 1)
+        ]
 
     def test_sql_null_semantics_and_not_null(self, spark, tmp_path):
         """SQL CHECK: only rows where the predicate is explicitly FALSE

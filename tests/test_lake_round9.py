@@ -943,6 +943,137 @@ class TestBucketBy:
         assert len(got.inputFiles()) == 1  # k=1000 outside old ranges
 
 
+def _bucketed(spark, path, rows=400, buckets=8):
+    df = spark.range(0, rows, 1, 8).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+    )
+    return LakeTable.create(
+        spark, str(path), df, bucket_by=("k", buckets), optimized_write=True,
+    )
+
+
+# Spark jobs per lake op: what the commit log already holds (the file
+# list, a generated partition column's value for a literal) costs no
+# job, and a DV merge stays within its job budget.
+#
+# The DV merge budget: one grouped job finds the touched files, the
+# data and sidecar writes carry every count, and the change feed is one
+# more write (AQE splits each into its stage jobs). It launched 18
+# before the counts moved onto the writes.
+DV_MERGE_JOBS = 12
+
+
+class TestJobCounts:
+    def test_read_of_many_files_launches_no_job(self, spark, tmp_path, spark_jobs):
+        df = spark.range(0, 400).select(F.col("id").alias("k"))
+        t = LakeTable.create(spark, str(tmp_path / "t"), df.repartition(40))
+        assert t.details()["num_files"] >= 40
+        with spark_jobs() as jobs:
+            got = t.read()
+        assert jobs == []  # no listing job over the log's file list
+        assert got.count() == 400
+
+    def test_tune_session_pins_local_listing(self, spark):
+        from multi_source_data_lake_with_etl_pipeline_spark.session import (
+            LOCAL_LISTING_THRESHOLD,
+            tune_session,
+        )
+
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        spark.conf.set(key, "32")  # Spark's default, as a foreign session has it
+        try:
+            tune_session(spark)
+            assert spark.conf.get(key) == str(LOCAL_LISTING_THRESHOLD)
+        finally:
+            spark.conf.set(key, str(LOCAL_LISTING_THRESHOLD))
+
+    def test_bucket_point_lookup_launches_no_job(self, spark, tmp_path, spark_jobs):
+        t = _bucketed(spark, tmp_path / "t")
+        with spark_jobs() as jobs:
+            got = t.read_where_eq("k", 17)
+        assert jobs == []  # bucket value evaluated on the driver
+        assert [r["v"] for r in got.collect()] == [51]
+        assert len(got.inputFiles()) == 1
+
+    def test_dv_merge_job_budget(self, spark, tmp_path, spark_jobs):
+        t = _bucketed(spark, tmp_path / "t")
+        src = spark.createDataFrame(
+            [(k, -1) for k in range(0, 40, 4)] + [(k, -2) for k in range(1000, 1010)],
+            "k long, v long",
+        )
+        with spark_jobs() as jobs:
+            out = t.merge(src, "k", dv=True)
+        assert (out["updated"], out["inserted"]) == (10, 10)
+        assert len(jobs) <= DV_MERGE_JOBS, jobs
+        assert t.read().filter("v < 0").count() == 20
+        assert t.read().count() == 410
+
+
+class TestNarrowedFallbacks:
+    """Driver-side partition evaluation gives up only on what it exists
+    to absorb (analysis/parse errors, a literal outside its type); any
+    other error propagates instead of silently disabling pruning."""
+
+    @staticmethod
+    def _raising(exc):
+        def f(*_a, **_k):
+            raise exc
+
+        return f
+
+    def test_derived_partition_value(self, spark, tmp_path, monkeypatch):
+        from pyspark.errors import AnalysisException
+
+        from multi_source_data_lake_with_etl_pipeline_spark import lake
+
+        t = _bucketed(spark, tmp_path / "t")
+        monkeypatch.setattr(
+            lake, "_literal_rows", self._raising(AnalysisException("no"))
+        )
+        got = t.read_where_eq("k", 17)  # no derived bucket: reads all 8
+        assert [r["v"] for r in got.collect()] == [51]
+        assert len(got.inputFiles()) == 8
+        monkeypatch.setattr(lake, "_literal_rows", self._raising(RuntimeError("boom")))
+        with pytest.raises(RuntimeError, match="boom"):
+            t.read_where_eq("k", 17)
+
+    def test_partition_candidates(self, spark, tmp_path, monkeypatch):
+        from pyspark.errors import AnalysisException
+
+        t = _bucketed(spark, tmp_path / "t")
+        bucket = t.read_where_eq("k", 17).first()["k_bucket"]
+        n = t.read().filter(f"k_bucket = {bucket}").count()
+        monkeypatch.setattr(
+            LakeTable, "_matching_entries", self._raising(AnalysisException("no"))
+        )
+        assert t.delete(f"k_bucket = {bucket}")["deleted"] == n
+        assert t.read().count() == 400 - n
+        monkeypatch.setattr(
+            LakeTable, "_matching_entries", self._raising(RuntimeError("boom"))
+        )
+        with pytest.raises(RuntimeError, match="boom"):
+            t.delete(f"k_bucket = {(bucket + 1) % 8}")
+
+    def test_data_column_predicate_skips_partition_analysis(
+        self, spark, tmp_path, monkeypatch
+    ):
+        t = _bucketed(spark, tmp_path / "t")
+        calls = []
+        orig = LakeTable._matching_entries
+
+        def spy(self, *a, **k):
+            calls.append(a[1])
+            return orig(self, *a, **k)
+
+        monkeypatch.setattr(LakeTable, "_matching_entries", spy)
+        assert t.update("k >= 10 AND k < 20", {"v": "v + 1"})["updated"] == 10
+        want = t.read().filter("v > 1000").count()
+        assert t.delete("v > 1000")["deleted"] == want > 0
+        assert calls == []  # analysis over partition values never tried
+        assert t.delete("k_bucket = 0")["deleted"] > 0
+        assert calls == ["k_bucket = 0"]
+
+
 # ===================================================================
 # Liquid clustering (round 9 — Delta CLUSTER BY parity): clustering
 # columns as a table property; writes land unclustered; OPTIMIZE picks
