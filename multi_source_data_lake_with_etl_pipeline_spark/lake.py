@@ -13,6 +13,8 @@ Layout::
     <path>/_log/<020d-version>.json     one commit per version
     <path>/_log/_checkpoint.<version>.json  full state every N commits
 
+(the log's files are read and written only by ``lake_log.TableLog``)
+
 Each commit records ``add`` entries (relative path, row count, bytes,
 per-column min/max footer stats) and ``remove``d paths, plus the table
 schema. The active snapshot at version V = replay of commits ≤ V from
@@ -45,10 +47,8 @@ import json
 import os
 import re
 import shutil
-import threading
 import time
 import uuid
-from collections import OrderedDict
 
 from pyspark.errors import (
     AnalysisException,
@@ -62,8 +62,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .lake_log import CommitConflict, Snapshot, TableLog
+
 _LOG = "_log"
 _DATA = "data"
+# commit races a blind append (append, streaming append, WAP publish)
+# re-checks and retries before giving up
+COMMIT_ATTEMPTS = 21
 _CDF = "_cdf"
 _DV = "dv"  # deletion-vector sidecars: (base, pos) parquet per delete
 # Internal column names the DV read path injects at scan time. A user
@@ -81,7 +86,8 @@ def _check_reserved(schema: StructType) -> None:
             f"column name(s) {bad} are reserved for the lake's deletion-"
             "vector metadata — rename them before writing"
         )
-_CHECKPOINT_EVERY = 10
+
+
 # Footer stats only for types whose min/max compare unambiguously
 # across engines. Strings are handled separately with SAFE prefix
 # bounds (see _str_upper_bound): parquet may truncate binary stats,
@@ -158,67 +164,10 @@ class UnsupportedTableFeature(RuntimeError):
     unknown writer features while reads keep working)."""
 
 
-class CommitConflict(RuntimeError):
-    """Another writer committed this version first."""
-
-
 class ConstraintViolation(ValueError):
     """A batch (or the existing table, for ADD CONSTRAINT) violates a
     CHECK constraint — the commit is rejected whole, the table state is
     untouched."""
-
-
-def _ver_name(v: int) -> str:
-    return f"{v:020d}.json"
-
-
-# ------------------------------------------------------------------ log cache
-# Parsed commit-log caches (guide §1.2: stop re-doing identical driver
-# work between Spark actions). The r10 dissect attributed ~50% of the
-# lake audits' wall to inter-job driver gaps, part of which is
-# re-reading and re-parsing the same immutable commit JSONs on every
-# _snapshot()/props()/history() call; at 100 TB scale a commit's add
-# list is thousands of entries and the replay is the dominant
-# metadata cost per operation.
-#
-# Safety model — exact, not heuristic:
-# - Commit files are IMMUTABLE by construction (O_EXCL create, never
-#   rewritten), so (log_dir, version) identifies content — except when
-#   a table is deleted and recreated at the same path (tests and temp
-#   dirs do this constantly). Every cached value therefore carries the
-#   stat signature (inode, size, mtime_ns) of its version's commit
-#   file and is revalidated with ONE os.stat per lookup; a recreated
-#   table yields a new signature and the stale entry is dropped.
-# - Concurrent writers (other threads/processes) only ever ADD new
-#   version files; discovery of the tail (`latest_version`) stays an
-#   uncached listdir, so a cached replay can never hide a newer commit.
-# - Cached add-entry dicts are shared references; every consumer in
-#   this codebase treats snapshot entries as read-only (copy-on-modify
-#   via {**a, ...}) and _commit only serializes them.
-_LOG_CACHE_LOCK = threading.Lock()
-_COMMIT_CACHE: OrderedDict[tuple, tuple] = OrderedDict()  # (dir,v)->(sig,rec)
-_COMMIT_CACHE_CAP = 8192
-_REPLAY_CACHE: OrderedDict[tuple, tuple] = OrderedDict()  # (dir,v)->(sig,state)
-_REPLAY_CACHE_CAP = 2048
-_PROPS_CACHE: OrderedDict[tuple, tuple] = OrderedDict()  # (dir,v)->(sig,props)
-_PROPS_CACHE_CAP = 4096
-
-
-def _cache_get(cache: OrderedDict, key: tuple, sig) -> object | None:
-    with _LOG_CACHE_LOCK:
-        hit = cache.get(key)
-        if hit is None or hit[0] != sig:
-            return None
-        cache.move_to_end(key)
-        return hit[1]
-
-
-def _cache_put(cache: OrderedDict, cap: int, key: tuple, sig, val) -> None:
-    with _LOG_CACHE_LOCK:
-        cache[key] = (sig, val)
-        cache.move_to_end(key)
-        while len(cache) > cap:
-            cache.popitem(last=False)
 
 
 def _file_stats(abs_path: str) -> tuple[int, dict[str, list], dict[str, int]]:
@@ -584,6 +533,39 @@ def _literal_rows(
     return spark.createDataFrame(table, schema)
 
 
+def _prune_range(entries, schema: StructType, col: str, lo, hi) -> list:
+    """The entries whose footer [min, max] for logical ``col`` may
+    intersect [lo, hi]; entries without stats for it are kept, and so
+    is every entry when the probe's type doesn't compare with them."""
+    col = next((_phys(f) for f in schema.fields if f.name == col), col)
+    out = []
+    for a in entries:
+        st = a.get("stats", {}).get(col)
+        try:
+            skip = st is not None and (st[1] < lo or st[0] > hi)
+        except TypeError:
+            skip = False  # mixed-type compare: conservative keep
+        if not skip:
+            out.append(a)
+    return out
+
+
+def _prune_nulls(entries, schema: StructType, col: str, want_null: bool) -> list:
+    """The entries that may hold a row where logical ``col`` IS NULL
+    (``want_null``) / IS NOT NULL; an unknown null count keeps it."""
+    col = next((_phys(f) for f in schema.fields if f.name == col), col)
+    out = []
+    for a in entries:
+        n = a.get("nulls", {}).get(col)
+        if (
+            n is None
+            or (want_null and n > 0)
+            or (not want_null and n < int(a.get("rows", 0)))
+        ):
+            out.append(a)
+    return out
+
+
 class LakeTable:
     """Handle to a versioned lake table at ``path``."""
 
@@ -591,6 +573,7 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self._log_dir = os.path.join(path, _LOG)
+        self._log = TableLog.at(self._log_dir)
         self._data_dir = os.path.join(path, _DATA)
         self._dv_dir = os.path.join(path, _DV)
 
@@ -998,50 +981,14 @@ class LakeTable:
         return t
 
     # ---------------------------------------------------------- log I/O
-    def _versions(self) -> list[int]:
-        return sorted(
-            int(f[:-5])
-            for f in os.listdir(self._log_dir)
-            if f.endswith(".json") and not f.startswith("_")
-        )
-
     def latest_version(self) -> int:
-        vs = self._versions()
-        if not vs:
-            raise FileNotFoundError(f"empty log: {self._log_dir}")
-        return vs[-1]
-
-    def _commit_sig(self, v: int) -> tuple | None:
-        """Stat signature of version ``v``'s commit file — the cache
-        validity token (None = no such commit file)."""
-        try:
-            st = os.stat(os.path.join(self._log_dir, _ver_name(v)))
-        except OSError:
-            return None
-        return (st.st_ino, st.st_size, st.st_mtime_ns)
-
-    def _read_commit(self, v: int) -> dict:
-        """Parsed commit record (cached per file identity; commits are
-        immutable, so the signature only changes when a table is
-        recreated at the same path). The returned dict is SHARED with
-        the cache — callers must not mutate it."""
-        key = (self._log_dir, v)
-        sig = self._commit_sig(v)
-        if sig is not None:
-            rec = _cache_get(_COMMIT_CACHE, key, sig)
-            if rec is not None:
-                return rec
-        with open(os.path.join(self._log_dir, _ver_name(v))) as f:
-            rec = json.load(f)
-        if sig is not None:
-            _cache_put(_COMMIT_CACHE, _COMMIT_CACHE_CAP, key, sig, rec)
-        return rec
+        return self._log.latest_version()
 
     def history(self) -> list[dict]:
         """Commit metadata, newest first (op, version, ts, file deltas)."""
         out = []
-        for v in reversed(self._versions()):
-            c = self._read_commit(v)
+        for v in reversed(self._log.versions()):
+            c = self._log.read_commit(v)
             out.append(
                 {
                     "version": v,
@@ -1051,7 +998,7 @@ class LakeTable:
                     "removed_files": len(c["remove"]),
                     # DESCRIBE HISTORY operationMetrics parity: row/file
                     # counts the operation recorded at commit time
-                    "metrics": c.get("metrics", {}),
+                    "metrics": dict(c.get("metrics", {})),
                 }
             )
         return out
@@ -1071,7 +1018,7 @@ class LakeTable:
                 int(a.get("rows", 0)),
                 int(a.get("bytes", 0)),
                 int(a.get("rows", 0)) - int(a.get("dv", {}).get("ndel", 0)),
-                json.dumps(a.get("partition"), sort_keys=True)
+                json.dumps(a.get("partition"), sort_keys=True, default=dict)
                 if a.get("partition") is not None
                 else None,
                 a["dv"]["path"] if a.get("dv") else None,
@@ -1125,9 +1072,9 @@ class LakeTable:
         and column names. O(files) driver work, zero data scanned —
         the operational health check a maintenance loop reads before
         deciding whether to OPTIMIZE or VACUUM."""
-        v, active, schema = self._snapshot(version)
+        snap = self._readable_snapshot(version)
+        v, active, schema = snap.version, snap.entries, snap.schema
         ndel = sum(int(a.get("dv", {}).get("ndel", 0)) for a in active)
-        _, _, _, rfeats, wfeats = self._replay(v)
         return {
             "version": v,
             "num_files": len(active),
@@ -1153,8 +1100,8 @@ class LakeTable:
             },
             "partition_columns": self.partition_columns(v),
             "clustering_columns": self.clustering_columns(v),
-            "reader_features": sorted(rfeats),
-            "writer_features": sorted(wfeats),
+            "reader_features": sorted(snap.reader_features),
+            "writer_features": sorted(snap.writer_features),
             "bloom_indexes": sorted(
                 k[len("bloom."):]
                 for k in self.props(v)
@@ -1162,7 +1109,7 @@ class LakeTable:
             ),
             "num_partitions": len(
                 {
-                    json.dumps(a.get("partition"), sort_keys=True)
+                    json.dumps(a.get("partition"), sort_keys=True, default=dict)
                     for a in active
                     if a.get("partition") is not None
                 }
@@ -1176,43 +1123,11 @@ class LakeTable:
         ``delta.constraints.*`` configuration parity). Carried by the
         commit log: the newest commit at-or-before ``version`` with a
         ``props`` key holds the complete current dict; commits that
-        don't change properties don't repeat them. Versioned like the
+        don't change properties don't repeat them, and checkpoints
+        record the dict current at their version. Versioned like the
         schema — time travel to before ADD CONSTRAINT sees no
-        constraint.
-
-        The backward walk is FLOORED by the nearest checkpoint (which
-        records the props current at its version): without the floor a
-        props-less stretch of history makes every props() call O(all
-        versions) of driver file I/O, and props() runs several times
-        per write. Checkpoints written before props-recording existed
-        fall back to the full walk; create() seeds props at version 0,
-        so tables written by this code never walk past creation."""
-        v = self.latest_version() if version is None else version
-        # cached per (log_dir, v) and validated against v's commit-file
-        # identity like _replay — callers mutate the returned dict, so
-        # a COPY is cached and a COPY is returned
-        key = (self._log_dir, v)
-        sig = self._commit_sig(v)
-        if sig is not None:
-            hit = _cache_get(_PROPS_CACHE, key, sig)
-            if hit is not None:
-                return dict(hit)
-        floor, ck_props = -1, None
-        ckpt = self._checkpoint_at_or_before(v)
-        if ckpt is not None and ckpt[2] is not None:
-            floor, ck_props = ckpt[0], ckpt[2]
-        out = dict(ck_props) if ck_props is not None else {}
-        for cv in range(v, floor, -1):
-            try:
-                c = self._read_commit(cv)
-            except FileNotFoundError:
-                continue
-            if "props" in c:
-                out = dict(c["props"])
-                break
-        if sig is not None:
-            _cache_put(_PROPS_CACHE, _PROPS_CACHE_CAP, key, sig, dict(out))
-        return out
+        constraint. Returns a fresh dict the caller may change."""
+        return dict(self._log.snapshot(version).props)
 
     # engine-owned property namespaces: they carry invariants their
     # dedicated APIs maintain (constraint predicates are validated,
@@ -1810,77 +1725,38 @@ class LakeTable:
                 )
         return metrics, validate
 
-    def _checkpoint_at_or_before(
-        self, v: int
-    ) -> tuple[int, list[dict], dict | None, list[str], list[str]] | None:
-        # O(1) fast path (Delta's _last_checkpoint parity): the pointer
-        # names the newest checkpoint, so the common latest-snapshot
-        # read never lists the log directory — at 1M commits a listdir
-        # per read IS the metadata cliff (measured flat to 1k versions
-        # in scripts/scale_probe_lake_log.py, O(versions) beyond).
-        ptr = os.path.join(self._log_dir, "_last_checkpoint")
-        try:
-            with open(ptr) as f:
-                last = json.load(f)["version"]
-            if last <= v:
-                with open(
-                    os.path.join(self._log_dir, f"_checkpoint.{last}.json")
-                ) as f:
-                    d = json.load(f)
-                    return (
-                        last, d["active"], d.get("props"),
-                        d.get("features", []), d.get("writer_features", []),
-                    )
-        except (FileNotFoundError, KeyError, ValueError):
-            pass
-        # fallback scan: time travel to before the last checkpoint, or
-        # a missing/corrupt pointer
-        best = None
-        for f in os.listdir(self._log_dir):
-            if f.startswith("_checkpoint.") and f.endswith(".json"):
-                cv = int(f.split(".")[1])
-                if cv <= v and (best is None or cv > best):
-                    best = cv
-        if best is None:
-            return None
-        with open(os.path.join(self._log_dir, f"_checkpoint.{best}.json")) as f:
-            d = json.load(f)
-            return (
-                best, d["active"], d.get("props"),
-                d.get("features", []), d.get("writer_features", []),
-            )
-
-    def _snapshot(self, version: int | None = None) -> tuple[int, list[dict], StructType]:
-        """(version, active add-entries, schema) at ``version`` (default
-        latest). Replays from the nearest checkpoint — O(files), not
-        O(history). Accumulates the commits' reader-feature stamps over
-        the replay (checkpoints carry the cumulative union) and REFUSES
-        unknown features loudly — an old reader must never silently
-        misread a table written with a protocol it doesn't know."""
-        v, active, schema, feats, _ = self._replay(version)
-        unknown = feats - _READER_FEATURES
+    def _readable_snapshot(self, version: int | None = None) -> Snapshot:
+        """The log's snapshot at ``version`` (default latest), replayed
+        from the nearest checkpoint — O(files), not O(history). Refuses
+        unknown reader-feature stamps loudly: an old reader must never
+        silently misread a table written with a protocol it doesn't
+        know."""
+        snap = self._log.snapshot(version)
+        unknown = snap.reader_features - _READER_FEATURES
         if unknown:
             raise UnsupportedTableFeature(
                 f"table at {self.path} requires reader feature(s) "
                 f"{sorted(unknown)}; this build supports "
                 f"{sorted(_READER_FEATURES)} — upgrade the reader"
             )
-        return v, active, schema
+        return snap
 
-    def _check_writer_features(self, version: int | None = None) -> None:
+    def _snapshot(
+        self, version: int | None = None
+    ) -> tuple[int, tuple, StructType]:
+        """(version, read-only active add entries, schema) of
+        :meth:`_readable_snapshot`."""
+        snap = self._readable_snapshot(version)
+        return snap.version, snap.entries, snap.schema
+
+    def _check_writer_features(self, version: int) -> None:
         """Refuse to WRITE through a protocol this build doesn't know
-        (Delta minWriterVersion parity): replay the table's cumulative
-        ``writer_features`` stamps and raise on unknown names. Reads
-        are untouched — a table is still readable when only its writer
-        features are ahead of this build. Served from the replay cache
-        when the mutating op's own _snapshot just walked the same
-        version (the common path), so the gate adds no metadata I/O."""
-        cached = getattr(self, "_wf_cache", None)
-        if cached is not None and cached[0] == version:
-            wfeats = cached[1]
-        else:
-            _, _, _, _, wfeats = self._replay(version)
-        unknown = wfeats - _WRITER_FEATURES
+        (Delta minWriterVersion parity): raise on unknown cumulative
+        ``writer_features`` stamps. Reads are untouched — a table is
+        still readable when only its writer features are ahead of this
+        build. Served from the cached snapshot the mutating op just
+        read, so the gate adds no metadata I/O."""
+        unknown = self._log.snapshot(version).writer_features - _WRITER_FEATURES
         if unknown:
             raise UnsupportedTableFeature(
                 f"table at {self.path} requires writer feature(s) "
@@ -1889,91 +1765,6 @@ class LakeTable:
                 "(reads keep working while reader features are known)"
             )
 
-    def _replay(
-        self, version: int | None = None
-    ) -> tuple[int, list[dict], StructType, set[str], set[str]]:
-        v = self.latest_version() if version is None else version
-        key = (self._log_dir, v)
-        sig = self._commit_sig(v)
-        # exact hit: the replayed state AT v, validated against v's
-        # commit-file identity (a recreated table changes the signature)
-        if sig is not None:
-            state = _cache_get(_REPLAY_CACHE, key, sig)
-            if state is not None:
-                active_d, schema, feats, wfeats = state
-                self._wf_cache = (v, frozenset(wfeats))
-                return v, list(active_d.values()), schema, set(feats), set(wfeats)
-        start = 0
-        active: dict[str, dict] = {}
-        feats: set[str] = set()
-        wfeats: set[str] = set()
-        schema = None
-        # incremental extension: the nearest cached state at v' < v
-        # (validated the same way) replays only commits v'+1..v on a
-        # COPY — the common mutating-op pattern (_snapshot at v-1, then
-        # at v) walks one commit instead of the whole log
-        base = None
-        if sig is not None:
-            with _LOG_CACHE_LOCK:
-                cands = [
-                    k[1]
-                    for k in _REPLAY_CACHE
-                    if k[0] == self._log_dir and k[1] < v
-                ]
-            for v2 in sorted(cands, reverse=True):
-                s2 = self._commit_sig(v2)
-                if s2 is None:
-                    continue
-                st2 = _cache_get(_REPLAY_CACHE, (self._log_dir, v2), s2)
-                if st2 is not None:
-                    base = (v2, st2)
-                    break
-        if base is not None:
-            v2, (active_d2, schema2, feats2, wfeats2) = base
-            start = v2 + 1
-            active = dict(active_d2)
-            feats = set(feats2)
-            wfeats = set(wfeats2)
-            schema = schema2
-        else:
-            ckpt = self._checkpoint_at_or_before(v)
-            if ckpt is not None:
-                start = ckpt[0] + 1
-                active = {a["path"]: a for a in ckpt[1]}
-                feats = set(ckpt[3])
-                # pre-writer-protocol checkpoints lack the key; such tables
-                # carry no writer stamps anywhere, so empty is exact
-                wfeats = set(ckpt[4] or [])
-        schema_json = None
-        for cv in range(start, v + 1):
-            try:
-                c = self._read_commit(cv)
-            except FileNotFoundError:
-                continue
-            for r in c["remove"]:
-                active.pop(r, None)
-            for a in c["add"]:
-                active[a["path"]] = a
-            feats.update(c.get("reader_features", []))
-            wfeats.update(c.get("writer_features", []))
-            schema_json = c["schema"]
-        if schema_json is not None:
-            schema = StructType.fromJson(json.loads(schema_json))
-        elif schema is None:  # checkpoint covered everything
-            schema = StructType.fromJson(
-                json.loads(self._read_commit(v)["schema"])
-            )
-        if sig is not None:
-            _cache_put(
-                _REPLAY_CACHE,
-                _REPLAY_CACHE_CAP,
-                key,
-                sig,
-                (dict(active), schema, frozenset(feats), frozenset(wfeats)),
-            )
-        self._wf_cache = (v, frozenset(wfeats))
-        return v, list(active.values()), schema, feats, wfeats
-
     def _commit(
         self,
         version: int,
@@ -1981,7 +1772,6 @@ class LakeTable:
         adds: list[dict],
         removes: list[str],
         schema: StructType,
-        retries: int = 0,
         txn: dict | None = None,
         props: dict | None = None,
         metrics: dict | None = None,
@@ -2030,95 +1820,7 @@ class LakeTable:
             wfeats.add("identity-columns")
         if wfeats:
             rec["writer_features"] = sorted(wfeats)
-        target = os.path.join(self._log_dir, _ver_name(version))
-        while True:
-            try:
-                with open(target, "x") as f:
-                    json.dump(rec, f)
-                break
-            except FileExistsError:
-                if retries <= 0:
-                    raise CommitConflict(
-                        f"version {version} already committed by another writer"
-                    ) from None
-                retries -= 1
-                version += 1
-                rec["version"] = version
-                target = os.path.join(self._log_dir, _ver_name(version))
-        if version % _CHECKPOINT_EVERY == 0 and version > 0:
-            # _replay, not _snapshot: the WRITER just stamped these
-            # features, no reader check needed; the checkpoint carries
-            # the cumulative union so later readers starting from it
-            # still see every feature stamped before it
-            _, active, _, ck_feats, ck_wfeats = self._replay(version)
-            # props ride the checkpoint so props() walks are floored by
-            # the checkpoint cadence, never O(history). Computed BEFORE
-            # the file exists, and published by ATOMIC rename — a
-            # reader's fallback directory scan must never see a torn or
-            # empty checkpoint (props() itself scans checkpoints, so a
-            # non-atomic write here would deadlock on its own debris).
-            ck_path = os.path.join(
-                self._log_dir, f"_checkpoint.{version}.json"
-            )
-            ck_rec = {
-                "version": version,
-                "active": active,
-                "props": self.props(version),
-                "features": sorted(ck_feats),
-                "writer_features": sorted(ck_wfeats),
-            }
-            ck_tmp = ck_path + f".tmp.{uuid.uuid4().hex}"
-            with open(ck_tmp, "w") as f:
-                json.dump(ck_rec, f)
-            os.replace(ck_tmp, ck_path)
-            # Advance the O(1) discovery pointer under a short-lived
-            # O_EXCL lock so the read-compare-write can't interleave
-            # between two checkpointing writers (A reads cur, B writes
-            # 20, A writes 10 would regress the pointer). On lock
-            # contention we simply skip: the pointer is a discovery
-            # hint, and the OTHER writer holding the lock is advancing
-            # it right now — worst case is extra replay, never a wrong
-            # snapshot (readers still scan forward from the pointer).
-            ptr = os.path.join(self._log_dir, "_last_checkpoint")
-            lock = ptr + ".lock"
-            fd = None
-            for _attempt in range(2):
-                try:
-                    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    break
-                except FileExistsError:
-                    # A crashed writer must not pin the pointer forever:
-                    # break locks older than 60 s (the critical section
-                    # is two tiny-file I/Os), then retry once. The break
-                    # is a RENAME, not an unlink — rename succeeds for
-                    # exactly ONE breaker (the loser's rename raises
-                    # FileNotFoundError), and it can never delete a
-                    # fresh lock another breaker just re-created the
-                    # way unlink-after-stat could (the TOCTOU where two
-                    # breakers both enter the critical section).
-                    try:
-                        if time.time() - os.path.getmtime(lock) > 60:
-                            os.rename(lock, lock + f".stale.{uuid.uuid4().hex}")
-                            continue
-                    except OSError:
-                        pass
-                    break  # live contention — skip, the holder advances it
-            if fd is not None:
-                try:
-                    cur = -1
-                    try:
-                        with open(ptr) as f:
-                            cur = json.load(f)["version"]
-                    except (FileNotFoundError, KeyError, ValueError):
-                        pass
-                    if version > cur:
-                        tmp = ptr + f".tmp.{uuid.uuid4().hex}"
-                        with open(tmp, "w") as f:
-                            json.dump({"version": version}, f)
-                        os.replace(tmp, ptr)  # atomic: no torn reads
-                finally:
-                    os.close(fd)
-                    os.unlink(lock)
+        self._log.write_commit(version, rec)
         return version
 
     def _commit_checked(
@@ -2159,8 +1861,8 @@ class LakeTable:
         disjoint by construction (compaction: its read set is exactly
         its target files, and fresh appends can never land in them) —
         NOT a safe default for predicate/key-scoped ops. Appends
-        themselves don't come through here (commutative — they
-        blind-retry in _commit)."""
+        themselves don't come through here (commutative — they retry
+        at the new head after re-checking its schema and constraints)."""
         v = base_v + 1
         base_paths: set[str] | None = None
         for _ in range(max_rebase + 1):
@@ -2215,8 +1917,7 @@ class LakeTable:
     # ---------------------------------------------------------- data I/O
     def _partition_phys(self, version: int | None = None) -> list[str]:
         """The table's partition columns (stable PHYSICAL names), or []
-        for an unpartitioned table. Reads props — checkpoint-floored,
-        never O(history)."""
+        for an unpartitioned table, from the version's props."""
         try:
             return list(json.loads(self.props(version).get(_PART_PROP, "[]")))
         except FileNotFoundError:
@@ -2656,8 +2357,8 @@ class LakeTable:
         target time precedes)."""
         out: list[tuple[int, float]] = []
         eff: float | None = None
-        for v in self._versions():
-            raw = float(self._read_commit(v).get("ts", 0))
+        for v in self._log.versions():
+            raw = float(self._log.read_commit(v).get("ts", 0))
             eff = raw if eff is None else max(eff, raw)
             out.append((v, eff))
         return out
@@ -2718,7 +2419,7 @@ class LakeTable:
             raise ValueError(f"invalid tag name {name!r}")
         version = self._resolve_version(version, timestamp)
         v = self.latest_version() if version is None else version
-        if v not in self._versions():
+        if v not in self._log.versions():
             raise ValueError(f"tag {name!r}: version {v} does not exist")
         path = os.path.join(self._log_dir, f"_tag.{name}.json")
         rec = {"name": name, "version": v, "ts": time.time()}
@@ -2786,17 +2487,7 @@ class LakeTable:
         numerics do. A type-mismatched probe (int range against a
         string column) keeps everything rather than raising."""
         _, active, schema = self._snapshot()
-        col = next((_phys(f) for f in schema.fields if f.name == col), col)
-        out = []
-        for a in active:
-            st = a.get("stats", {}).get(col)
-            try:
-                skip = st is not None and (st[1] < lo or st[0] > hi)
-            except TypeError:
-                skip = False  # mixed-type compare: conservative keep
-            if not skip:
-                out.append(a["path"])
-        return out
+        return [a["path"] for a in _prune_range(active, schema, col, lo, hi)]
 
     def read_pruned(self, col: str, lo, hi) -> DataFrame:
         """Range read using file skipping + the residual filter. Same
@@ -2892,14 +2583,10 @@ class LakeTable:
         the derived bounds skip, the residual stays the caller's."""
         if not conds:
             return self.read()
-        _, active, schema = self._snapshot()
-        derived = self._derived_partition_conds(conds, schema)
-        paths = set(self.files_overlapping(*conds[0]))
-        for c in conds[1:] + derived:
-            paths &= set(self.files_overlapping(*c))
-        out = self._read_entries(
-            [a for a in active if a["path"] in paths], schema
-        )
+        _, entries, schema = self._snapshot()
+        for c in conds + self._derived_partition_conds(conds, schema):
+            entries = _prune_range(entries, schema, *c)
+        out = self._read_entries(entries, schema)
         for col, lo, hi in conds:
             out = out.filter(F.col(col).between(lo, hi))
         return out
@@ -2914,25 +2601,14 @@ class LakeTable:
         can never serve; at 100 TB a sparse column's null probe drops
         from a table scan to the handful of files that carry nulls."""
         _, active, schema = self._snapshot()
-        col = next((_phys(f) for f in schema.fields if f.name == col), col)
-        out = []
-        for a in active:
-            n = a.get("nulls", {}).get(col)
-            if n is None:
-                out.append(a["path"])  # unknown — keep
-            elif want_null and n > 0:
-                out.append(a["path"])
-            elif not want_null and n < int(a.get("rows", 0)):
-                out.append(a["path"])
-        return out
+        return [a["path"] for a in _prune_nulls(active, schema, col, want_null)]
 
     def read_where_null(self, col: str, want_null: bool = True) -> DataFrame:
         """IS NULL / IS NOT NULL read through null-count file skipping
         + the residual filter (same contract as ``read_pruned``)."""
         _, active, schema = self._snapshot()
-        paths = set(self.files_null_candidates(col, want_null))
         out = self._read_entries(
-            [a for a in active if a["path"] in paths], schema
+            _prune_nulls(active, schema, col, want_null), schema
         )
         cond = F.col(col).isNull() if want_null else F.col(col).isNotNull()
         return out.filter(cond)
@@ -3048,7 +2724,7 @@ class LakeTable:
         the MATCHING file basenames. Residual filter keeps results
         exact; files without a bloom row (added since the last
         maintenance build) are conservatively kept."""
-        v, active, schema = self._snapshot()
+        v, entries, schema = self._snapshot()
         field = next((f for f in schema.fields if f.name == col), None)
         phys = _phys(field) if field is not None else col
         # the probe literal hashes as the COLUMN's type — a python int
@@ -3059,12 +2735,9 @@ class LakeTable:
         # layer 1: range/partition/null stats, plus partition bounds
         # DERIVED from generated columns (a ts point-lookup on a
         # date-partitioned table prunes to one date directory)
-        paths = set(self.files_overlapping(col, value, value))
-        for dcol, dlo, dhi in self._derived_partition_conds(
-            [(col, value, value)], schema
-        ):
-            paths &= set(self.files_overlapping(dcol, dlo, dhi))
-        entries = [a for a in active if a["path"] in paths]
+        conds = [(col, value, value)]
+        for c in conds + self._derived_partition_conds(conds, schema):
+            entries = _prune_range(entries, schema, *c)
         rel = self.props(v).get(f"bloom.{phys}")
         if rel and os.path.isdir(self._abs(rel)) and entries:
             h = (
@@ -3317,7 +2990,7 @@ class LakeTable:
             adds = self._write_files(df, schema)
         n_appended = sum(int(a.get("rows", 0)) for a in adds)
         commit_props = fin_id(dict(props_base)) if fin_id is not None else None
-        for _ in range(21):
+        for _ in range(COMMIT_ATTEMPTS):
             try:
                 return self._commit(
                     v, "append", adds, [], schema,
@@ -3356,15 +3029,17 @@ class LakeTable:
                     self._check_constraints(df, latest_cons)
                     cons = latest_cons
                 v = self.latest_version() + 1
-        raise CommitConflict("append lost 21 consecutive commit races")
+        raise CommitConflict(
+            f"append lost {COMMIT_ATTEMPTS} consecutive commit races"
+        )
 
     def last_committed_batch(self, app_id: str) -> int | None:
         """Highest streaming batch id committed by ``app_id`` (scans
         the commit log's txn markers; the log is O(commits) small and
         checkpoint-compatible since markers ride the commits)."""
         best = None
-        for v in self._versions():
-            txn = self._read_commit(v).get("txn")
+        for v in self._log.versions():
+            txn = self._log.read_commit(v).get("txn")
             if txn and txn.get("app") == app_id:
                 if best is None or txn["batch"] > best:
                     best = txn["batch"]
@@ -3439,7 +3114,7 @@ class LakeTable:
         stream_props = (
             fin_id(dict(id_props_base)) if fin_id is not None else None
         )
-        for _ in range(21):
+        for _ in range(COMMIT_ATTEMPTS):
             try:
                 return self._commit(
                     v + 1, "append", adds, [], schema, txn=txn,
@@ -3485,7 +3160,7 @@ class LakeTable:
                         "the stream batch will re-apply on restart"
                     ) from None
         raise CommitConflict(
-            "append_stream_batch lost 21 consecutive commit races"
+            f"append_stream_batch lost {COMMIT_ATTEMPTS} consecutive commit races"
         )
 
     def overwrite(self, df: DataFrame) -> int:
@@ -3796,7 +3471,10 @@ class LakeTable:
             metrics={
                 "rows_written": n_rows,
                 "partitions_replaced": len(
-                    {json.dumps(a.get("partition"), sort_keys=True) for a in targets}
+                    {
+                        json.dumps(a.get("partition"), sort_keys=True, default=dict)
+                        for a in targets
+                    }
                 ),
                 "predicate": predicate,
             },
@@ -5189,7 +4867,7 @@ class LakeTable:
         era: StructType,
         v: int,
         current: StructType,
-        all_overwrites: list[int] | None = None,
+        overwrites: list[int],
     ) -> dict[str, str]:
         """{current logical name: era PHYSICAL column} for every
         current column whose LINEAGE reaches back to the era at
@@ -5199,20 +4877,13 @@ class LakeTable:
         the column held immediately before the boundary (the
         overwrite's frame binds columns by name). A column with no
         surviving lineage simply doesn't appear — its feed values
-        render NULL, never someone else's bytes."""
-        if all_overwrites is None:  # caller may hoist the history scan
-            all_overwrites = [
-                w
-                for w in self._versions()
-                if self._read_commit(w)["op"] == "overwrite"
-            ]
-        boundaries = [w for w in all_overwrites if w > v]
-        cache: dict[int, StructType] = {}
+        render NULL, never someone else's bytes. ``overwrites``: the
+        overwrite versions up to ``current``'s version
+        (``TableLog.overwrite_versions``)."""
+        boundaries = [w for w in overwrites if w > v]
 
         def schema_at(x: int) -> StructType:
-            if x not in cache:
-                cache[x] = self._snapshot(x)[2]
-            return cache[x]
+            return self._log.snapshot(x).schema
 
         def resolve(p: str) -> str | None:
             """Follow physical ``p`` from the era forward to a current
@@ -5315,13 +4986,9 @@ class LakeTable:
             if to_version is not None:
                 raise ValueError("pass to_version OR to_timestamp")
             to_version = self.version_at(to_timestamp)
-        _, _, schema = self._snapshot()
-        hi = self.latest_version() if to_version is None else to_version
-        overwrites = [
-            w
-            for w in self._versions()
-            if self._read_commit(w)["op"] == "overwrite"
-        ]
+        now, _, schema = self._snapshot()
+        hi = now if to_version is None else to_version
+        overwrites = self._log.overwrite_versions(now)
         schema_json = schema.jsonValue()
 
         def _era_read(entries: list[dict], era: StructType, era_v: int) -> DataFrame:
@@ -5359,7 +5026,7 @@ class LakeTable:
 
         parts: list[DataFrame] = []
         for v in range(from_version + 1, hi + 1):
-            c = self._read_commit(v)
+            c = self._log.read_commit(v)
             op = c["op"]
             era = StructType.fromJson(json.loads(c["schema"]))
             # (entries, change_type, era schema, era version)
@@ -5815,12 +5482,10 @@ class LakeTable:
                 if a.get("dv"):
                     keep_dv.add(a["dv"]["path"])
 
-        for cv in self._versions():
-            _collect(self._read_commit(cv)["add"])
-        for f in os.listdir(self._log_dir):
-            if f.startswith("_checkpoint.") and f.endswith(".json"):
-                with open(os.path.join(self._log_dir, f)) as fh:
-                    _collect(json.load(fh)["active"])
+        for cv in self._log.versions():
+            _collect(self._log.read_commit(cv)["add"])
+        for ck in self._log.checkpoints():
+            _collect(ck["active"])
         # registered bloom indexes must exist on disk (a missing index
         # silently degrades every point lookup to a stats-only prune)
         for pk, pval in self.props(v).items():
@@ -5935,8 +5600,8 @@ class LakeTable:
             cutoff = time.time() - retain_hours * 3600
             in_window = [
                 v
-                for v in self._versions()
-                if self._read_commit(v).get("ts", 0) >= cutoff
+                for v in self._log.versions()
+                if self._log.read_commit(v).get("ts", 0) >= cutoff
             ]
             if in_window:
                 horizon = min(horizon, min(in_window))
@@ -6021,24 +5686,5 @@ class LakeTable:
         for d in os.listdir(self.path):
             if d.startswith("_tmp_"):
                 shutil.rmtree(os.path.join(self.path, d))
-        # broken-lock debris: stale _last_checkpoint locks are renamed
-        # aside (rename is the single-winner break), never referenced;
-        # a writer that died between checkpoint tmp-write and rename
-        # leaves a .tmp. file nothing references. Tmp files are only
-        # removed past a staleness threshold (mtime) — a LIVE writer
-        # sits between its tmp-write and os.replace for milliseconds,
-        # and deleting its tmp in that window would make the writer's
-        # post-commit checkpoint publish raise for a commit that
-        # already landed (same treatment as stale locks).
-        now = time.time()
-        for f in os.listdir(self._log_dir):
-            p = os.path.join(self._log_dir, f)
-            if ".lock.stale." in f:
-                os.remove(p)
-            elif ".json.tmp." in f:
-                try:
-                    if now - os.path.getmtime(p) > 600:
-                        os.remove(p)
-                except OSError:
-                    pass  # the writer just published it — not debris
+        self._log.sweep_debris()
         return removed

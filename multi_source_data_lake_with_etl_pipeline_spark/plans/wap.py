@@ -21,8 +21,16 @@ from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..lake import LakeTable
+from ..lake import (
+    COMMIT_ATTEMPTS,
+    CommitConflict,
+    LakeTable,
+    _default_expr,
+    _gen_expr,
+    _identity_spec,
+)
 from ..operators.validation import Expectation, expectation_suite
 
 
@@ -42,7 +50,11 @@ def write_audit_publish(
     staging_path: str,
 ) -> WapResult:
     """Stage ``batch``, audit it, publish to ``prod`` only on a clean
-    audit. Returns what happened; ``prod`` is untouched on failure."""
+    audit. Returns what happened; ``prod`` is untouched on failure.
+    The staged columns must exist in production with the same types;
+    production may have more, as long as they are plain columns (they
+    read NULL for the published rows). A staged row violating a
+    production CHECK constraint raises ``ConstraintViolation``."""
     staged = LakeTable.create(spark, staging_path, batch)
     staged_df = staged.read()
     audit = expectation_suite(staged_df, expectations).collect()
@@ -60,16 +72,39 @@ def write_audit_publish(
     # prod.compact() localizes every foreign-path file when staging
     # needs to be reclaimed (pinned in tests/test_lake.py).
     _, active, staged_schema = staged._snapshot()
-    _, _, prod_schema = prod._snapshot()
-    if [
-        (f.name, f.dataType) for f in staged_schema.fields
-    ] != [(f.name, f.dataType) for f in prod_schema.fields]:
-        raise ValueError(
-            "WAP publish: staged schema differs from production "
-            f"({staged_schema.simpleString()} vs {prod_schema.simpleString()})"
-        )
     adds = [{**a, "path": staged._abs(a["path"])} for a in active]
-    v = prod._commit(
-        prod.latest_version() + 1, "append", adds, [], prod_schema, retries=20
+    staged_names = {f.name for f in staged_schema.fields}
+    # Like append: pin the head, check the batch against the schema and
+    # CHECK constraints AT that version, commit the next one; a lost
+    # race re-checks against the new head (a racing merge_schema append
+    # must not be reverted, nor a racing ADD CONSTRAINT slipped under).
+    checked = None
+    for _ in range(COMMIT_ATTEMPTS):
+        v, _, prod_schema = prod._snapshot()
+        prod_types = {f.name: f.dataType for f in prod_schema.fields}
+        # the staged files are published as written, so nothing computes
+        # a column they lack: only plain columns may be omitted
+        omitted = [f for f in prod_schema.fields if f.name not in staged_names]
+        if any(
+            prod_types.get(f.name) != f.dataType for f in staged_schema.fields
+        ) or any(_gen_expr(f) or _identity_spec(f) or _default_expr(f) for f in omitted):
+            raise ValueError(
+                "WAP publish: staged columns must exist in production with "
+                "the same types, and may omit only columns no write "
+                "computes (generated, identity, default): "
+                f"{staged_schema.simpleString()} vs {prod_schema.simpleString()}"
+            )
+        cons = prod.constraints(v)
+        if (cons, prod_schema) != checked:
+            # the rows as production will read them: omitted columns NULL
+            null_cols = [F.lit(None).cast(f.dataType).alias(f.name) for f in omitted]
+            prod._check_constraints(staged_df.select("*", *null_cols), cons)
+            checked = (cons, prod_schema)
+        try:
+            v = prod._commit(v + 1, "append", adds, [], prod_schema)
+        except CommitConflict:
+            continue
+        return WapResult(True, n, [], v)
+    raise CommitConflict(
+        f"WAP publish lost {COMMIT_ATTEMPTS} consecutive commit races"
     )
-    return WapResult(True, n, [], v)

@@ -11731,20 +11731,13 @@ def lake_string_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame
 def lake_timetravel_timestamp_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import json as _json
-    import os as _os
     import shutil
     import tempfile
 
     from .lake import LakeTable
 
     def _pin(t, v, ts):
-        p = _os.path.join(t._log_dir, f"{v:020d}.json")
-        with open(p) as f:
-            rec = _json.load(f)
-        rec["ts"] = float(ts)
-        with open(p, "w") as f:
-            _json.dump(rec, f)
+        t._log.restamp(v, ts)
 
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"), F.col("o_custkey").alias("c")

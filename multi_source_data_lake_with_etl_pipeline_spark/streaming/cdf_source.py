@@ -66,7 +66,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..lake import LakeTable, _CDF, _part_converter, _phys
+from ..lake import LakeTable, _CDF, _LOG, _part_converter, _phys
+from ..lake_log import TableLog
 
 
 def _col_spec(era: StructType, lineage: dict[str, str], out_fields) -> list:
@@ -136,13 +137,8 @@ class LakeCdfStreamReader(DataSourceStreamReader):
         return {"v": int(self.from_version)}
 
     def latestOffset(self) -> dict:
-        log_dir = os.path.join(self.path, "_log")
-        vs = [
-            int(f[:-5])
-            for f in os.listdir(log_dir)
-            if f.endswith(".json") and not f.startswith("_")
-        ]
-        latest = max(vs) if vs else int(self.from_version)
+        vs = TableLog.at(os.path.join(self.path, _LOG)).versions()
+        latest = vs[-1] if vs else int(self.from_version)
         if self.max_versions is not None:
             # maxFilesPerTrigger-style admission control at COMMIT
             # granularity: a backfilled table drains as a sequence of
@@ -172,9 +168,7 @@ class LakeCdfStreamReader(DataSourceStreamReader):
         # restart) must never drag the cursor backwards
         self._advance(max(lo, hi))
         _, _, current = t._snapshot(hi)
-        overwrites = [
-            w for w in t._versions() if t._read_commit(w)["op"] == "overwrite"
-        ]
+        overwrites = t._log.overwrite_versions(hi)
         out_fields = [f for f in self.out_schema.fields][:-2]  # minus meta
         parts: list[InputPartition] = []
 
@@ -207,7 +201,7 @@ class LakeCdfStreamReader(DataSourceStreamReader):
 
         for v in range(lo + 1, hi + 1):
             try:
-                c = t._read_commit(v)
+                c = t._log.read_commit(v)
             except FileNotFoundError:
                 continue
             op = c["op"]
@@ -275,29 +269,17 @@ class LakeCdfStreamReader(DataSourceStreamReader):
         projection, DV anti-filter for overwrite-removed files, hive
         partition constants.
 
-        Fast path (guide §4: Arrow batches across the Python boundary,
-        never per-row tuples): the whole projection is column-level
-        pyarrow work — reuse the file's buffers, fill constants, cast
-        to the output schema's exact Arrow types — and ONE RecordBatch
-        crosses to the JVM. The tuple path remains as a fallback for
-        any file/type combination the Arrow cast refuses, so a weird
-        era file degrades to the old behavior instead of failing."""
-        spec = partition.spec
-        try:
-            batches = self._read_arrow(spec)
-        except Exception:
-            batches = None
-        if batches is not None:
-            yield from batches
-            return
-        yield from self._read_rows(spec)
-
-    def _scan_spec(self, spec: dict):
-        """(parquet table of wanted columns | None, file column-name
-        set, row count, keep-row indices | None) shared by both read
-        paths."""
+        Arrow batches across the Python boundary, never per-row tuples
+        (guide §4): the whole projection is column-level pyarrow work —
+        reuse the file's buffers, fill constants, cast to the output
+        schema's exact Arrow types — and ONE RecordBatch crosses to the
+        JVM. A file the cast refuses raises; it is never skipped."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        spec = partition.spec
         pf = pq.ParquetFile(spec["path"])
         names = set(pf.schema_arrow.names)
         n = pf.metadata.num_rows
@@ -309,35 +291,15 @@ class LakeCdfStreamReader(DataSourceStreamReader):
             if want
             else None
         )
-        keep = None
-        if spec.get("dv_path"):
-            dv = pq.read_table(
-                spec["dv_path"], columns=["_dv_base", "_dv_pos"]
-            )
-            dead = {
-                int(p)
-                for b, p in zip(
-                    dv.column("_dv_base").to_pylist(),
-                    dv.column("_dv_pos").to_pylist(),
-                )
-                if b == spec["dv_base"]
-            }
-            keep = [i for i in range(n) if i not in dead]
-        return table, names, n, keep
-
-    def _read_arrow(self, spec: dict):
-        import pyarrow as pa
-
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        table, names, n, keep = self._scan_spec(spec)
-        out_fields = self.out_schema.fields
         arrays, fields = [], []
-        for f, c in zip(out_fields[:-2], spec["cols"]):
+        for f, c in zip(self.out_schema.fields[:-2], spec["cols"]):
             t = to_arrow_type(f.dataType)
             if c is not None and c in names:
                 arr = table.column(c).combine_chunks()
                 if arr.type != t:
+                    # a naive (tz-less) parquet timestamp cast to the
+                    # output TimestampType (tz=UTC) is read as UTC wall
+                    # time, not in the session time zone
                     arr = arr.cast(t)
             else:
                 # column born after this era / hive partition constant
@@ -354,33 +316,18 @@ class LakeCdfStreamReader(DataSourceStreamReader):
         arrays.append(pa.array([spec["version"]] * n, type=pa.int64()))
         fields.append(pa.field("_commit_version", pa.int64()))
         out = pa.table(arrays, schema=pa.schema(fields))
-        if keep is not None:
-            out = out.take(keep)
-        return out.to_batches()
-
-    def _read_rows(self, spec: dict):
-        """Row-at-a-time fallback — the original tuple path."""
-        table, names, n, keep = self._scan_spec(spec)
-        cols_out = []
-        for c in spec["cols"]:
-            if c is not None and c in names:
-                vals = table.column(c).to_pylist()
-            elif c is not None and c in spec["part_values"]:
-                vals = [spec["part_values"][c]] * n
-            elif c is None:
-                vals = [None] * n
-            else:
-                # partition column absent from the file bytes
-                vals = [spec["part_values"].get(c)] * n
-            cols_out.append(vals)
-        if spec["kind"] == "cdf":
-            change = table.column("_change_type").to_pylist()
-        else:
-            change = [spec["change"]] * n
-        version = spec["version"]
-        rows = range(n) if keep is None else keep
-        for i in rows:
-            yield tuple(col[i] for col in cols_out) + (change[i], version)
+        if spec.get("dv_path"):
+            dv = pq.read_table(spec["dv_path"], columns=["_dv_base", "_dv_pos"])
+            dead = {
+                int(p)
+                for b, p in zip(
+                    dv.column("_dv_base").to_pylist(),
+                    dv.column("_dv_pos").to_pylist(),
+                )
+                if b == spec["dv_base"]
+            }
+            out = out.take([i for i in range(n) if i not in dead])
+        yield from out.to_batches()
 
     def commit(self, end: dict) -> None:
         # the checkpoint owns the durable cursor (the log is

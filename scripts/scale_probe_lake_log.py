@@ -1,6 +1,6 @@
 """Lake transaction-log DEPTH probe (VERDICT r4 item 7): metadata-op
 latency at 100-1,000 versions, measuring snapshot reconstruction
-against the checkpoint cadence (lake._CHECKPOINT_EVERY).
+against the checkpoint cadence (lake_log.CHECKPOINT_EVERY).
 
 Commits are synthetic add/remove entries written through the real
 ``_commit`` path (so checkpoint writes, conflict detection, and log
@@ -103,16 +103,17 @@ def main() -> int:
             commit_cost_window = []
             results.append(row)
             print(json.dumps(row), flush=True)
-    ck = [f for f in os.listdir(t._log_dir) if f.startswith("_checkpoint.")]
+    log_dir = t._log.dir
+    ck = [f for f in os.listdir(log_dir) if f.startswith("_checkpoint.")]
     biggest = max(
-        (os.path.getsize(os.path.join(t._log_dir, f)) for f in ck), default=0
+        (os.path.getsize(os.path.join(log_dir, f)) for f in ck), default=0
     )
     print(
         json.dumps(
             {
                 "n_checkpoints": len(ck),
                 "largest_checkpoint_bytes": biggest,
-                "log_files": len(os.listdir(t._log_dir)),
+                "log_files": len(os.listdir(log_dir)),
             }
         )
     )

@@ -77,7 +77,7 @@ class TestLakeBasics:
 
     def test_time_travel_by_timestamp(self, spark, tmp_path):
         t = _mk(spark, tmp_path)
-        ts_after_create = t._read_commit(0)["ts"]
+        ts_after_create = t._log.read_commit(0)["ts"]
         t.append(spark.createDataFrame([(1000, 1)], "k long, v long"))
         assert t.version_at(ts_after_create) == 0
         assert t.read(t.version_at(ts_after_create)).count() == 100
@@ -166,7 +166,7 @@ class TestLakeScale:
             "ts": 0,
             "add": [],
             "remove": [],
-            "schema": t._read_commit(0)["schema"],
+            "schema": t._log.read_commit(0)["schema"],
         }
         with open(os.path.join(t._log_dir, f"{1:020d}.json"), "x") as f:
             _json.dump(racer, f)
@@ -1113,6 +1113,114 @@ def test_wap_publish_is_metadata_only(spark, tmp_path):
     assert prod.read().count() == 3
 
 
+def test_wap_publish_keeps_racing_schema_change(spark, tmp_path):
+    """A merge_schema append that lands between WAP's schema read and
+    its commit must not be reverted: the publish rebases onto the new
+    head, so the racing column survives and the staged rows read it as
+    NULL."""
+    from multi_source_data_lake_with_etl_pipeline_spark.operators.validation import (
+        Expectation,
+    )
+    from multi_source_data_lake_with_etl_pipeline_spark.plans.wap import (
+        write_audit_publish,
+    )
+
+    prod = LakeTable.create(
+        spark, str(tmp_path / "p"), spark.createDataFrame([(1, 10)], "k long, v long")
+    )
+    real_commit = prod._commit
+
+    def racing_commit(*args, **kwargs):
+        if not racing_commit.fired:
+            racing_commit.fired = True
+            LakeTable(spark, prod.path).append(
+                spark.createDataFrame([(2, 20, "x")], "k long, v long, w string"),
+                merge_schema=True,
+            )
+        return real_commit(*args, **kwargs)
+
+    racing_commit.fired = False
+    prod._commit = racing_commit
+    res = write_audit_publish(
+        spark, prod,
+        spark.createDataFrame([(3, 30)], "k long, v long"),
+        [Expectation("nn", "k", "not_null")],
+        str(tmp_path / "s"),
+    )
+    assert res.published
+    got = LakeTable(spark, prod.path).read()
+    assert "w" in got.columns
+    assert sorted((r["k"], r["w"]) for r in got.collect()) == [
+        (1, None), (2, "x"), (3, None),
+    ]
+
+
+def test_wap_publish_enforces_check_constraints(spark, tmp_path):
+    """A staged row violating a production CHECK constraint is refused
+    at publish; production stays at its version."""
+    from multi_source_data_lake_with_etl_pipeline_spark.operators.validation import (
+        Expectation,
+    )
+    from multi_source_data_lake_with_etl_pipeline_spark.plans.wap import (
+        write_audit_publish,
+    )
+
+    prod = LakeTable.create(
+        spark, str(tmp_path / "p"), spark.createDataFrame([(1, 10)], "k long, v long")
+    )
+    prod.add_constraint("v_nonneg", "v >= 0")
+    v0 = prod.latest_version()
+    with pytest.raises(ConstraintViolation, match="v_nonneg"):
+        write_audit_publish(
+            spark, prod,
+            spark.createDataFrame([(2, -5)], "k long, v long"),
+            [Expectation("nn", "k", "not_null")],
+            str(tmp_path / "s"),
+        )
+    assert prod.latest_version() == v0
+    assert [r["v"] for r in prod.read().collect()] == [10]
+
+
+def test_wap_publish_refuses_omitted_computed_columns(spark, tmp_path):
+    """Published staged files are never rewritten, so a production
+    column that writes compute (generated, identity, default) can't be
+    left out of the staged batch; an omitted plain column reads NULL
+    and is checked as NULL against the CHECK constraints."""
+    from multi_source_data_lake_with_etl_pipeline_spark.operators.validation import (
+        Expectation,
+    )
+    from multi_source_data_lake_with_etl_pipeline_spark.plans.wap import (
+        write_audit_publish,
+    )
+
+    exps = [Expectation("nn", "k", "not_null")]
+    prod = LakeTable.create(
+        spark, str(tmp_path / "p"), spark.createDataFrame([(1, 10)], "k long, v long")
+    )
+    prod.add_generated_column("v2", "v * 2")
+    v0 = prod.latest_version()
+    with pytest.raises(ValueError, match="v2"):
+        write_audit_publish(
+            spark, prod, spark.createDataFrame([(2, 20)], "k long, v long"),
+            exps, str(tmp_path / "s1"),
+        )
+    assert prod.latest_version() == v0
+
+    plain = LakeTable.create(
+        spark, str(tmp_path / "q"),
+        spark.createDataFrame([(1, 10, 5)], "k long, v long, w long"),
+    )
+    plain.add_constraint("w_nonneg", "w >= 0")
+    res = write_audit_publish(
+        spark, plain, spark.createDataFrame([(2, 20)], "k long, v long"),
+        exps, str(tmp_path / "s2"),
+    )
+    assert res.published
+    assert sorted((r["k"], r["w"]) for r in plain.read().collect()) == [
+        (1, 5), (2, None),
+    ]
+
+
 def test_compact_localizes_foreign_files(spark, tmp_path):
     """A shallow clone (or WAP publish) references files OUTSIDE the
     table's own data dir; compact() rewrites the snapshot into local
@@ -1319,20 +1427,20 @@ def test_null_count_file_skipping(spark, tmp_path):
     # parity with the unpruned filter
     assert t.read_where_null("v").count() == t.read().filter("v IS NULL").count()
     # legacy entries without null stats are conservatively kept
-    for a in active:
-        a.pop("nulls", None)
     import json as _json
     import os as _os
 
-    c = t._read_commit(t.latest_version())
-    # simulate an old log: strip nulls from the latest commit's adds
-    for a in c["add"]:
-        a.pop("nulls", None)
-    with open(
-        _os.path.join(t._log_dir, f"{t.latest_version():020d}.json"), "w"
-    ) as fh:
-        _json.dump(c, fh)
-    assert len(t.files_null_candidates("v", want_null=True)) >= 2
+    # simulate an old log: strip nulls from every commit's adds
+    for ver in range(t.latest_version() + 1):
+        vpath = _os.path.join(t._log_dir, f"{ver:020d}.json")
+        with open(vpath) as fh:
+            c = _json.load(fh)
+        for a in c["add"]:
+            a.pop("nulls", None)
+        with open(vpath, "w") as fh:
+            _json.dump(c, fh)
+    assert len(t.files_null_candidates("v", want_null=True)) == 3
+    assert len(t.files_null_candidates("v", want_null=False)) == 3
     assert {r["k"] for r in t.read_where_null("v").collect()} == {3, 5, 6}
 
 
@@ -1382,7 +1490,7 @@ def test_delete_keys_loses_commit_race_loudly(spark, tmp_path):
     racer = {
         "version": 1, "op": "delete", "ts": 0, "add": [],
         "remove": [victim],  # the racer rewrites-away the touched file
-        "schema": t._read_commit(0)["schema"],
+        "schema": t._log.read_commit(0)["schema"],
     }
     orig = t._write_files
 
@@ -1566,7 +1674,7 @@ def test_dv_full_file_delete_drops_entry(spark, tmp_path):
     assert r["deleted"] == 100 and r["rewritten_files"] == 0
     assert t.read().count() == 0 and t.rows() == 0
     _, active, _ = t._snapshot()
-    assert active == []
+    assert active == ()
 
 
 def test_dv_parity_with_rewrite_mode(spark, tmp_path):
@@ -1930,11 +2038,11 @@ def test_rebase_raises_when_concurrent_rewrite_steals_touched_file(spark, tmp_pa
             "version": 1, "op": "compact", "ts": 0,
             "add": [{**victim, "path": victim["path"] + ".moved.parquet"}],
             "remove": [victim["path"]],
-            "schema": t._read_commit(0)["schema"],
+            "schema": t._log.read_commit(0)["schema"],
         }
         try:
             with open(os.path.join(t._log_dir, f"{1:020d}.json"), "x") as f:
-                _json.dump(racer, f)
+                _json.dump(racer, f, default=dict)
         except FileExistsError:
             pass
         return adds
@@ -2032,7 +2140,7 @@ def _racer_append_hook(t, racer_adds):
         racer = {
             "version": v, "op": "append", "ts": 0,
             "add": racer_adds, "remove": [],
-            "schema": t._read_commit(0)["schema"],
+            "schema": t._log.read_commit(0)["schema"],
         }
         try:
             with open(os.path.join(t._log_dir, f"{v:020d}.json"), "x") as f:
@@ -2110,7 +2218,7 @@ def test_rebase_conflicts_on_concurrent_append_of_matching_rows(
         racer = {
             "version": v, "op": "append", "ts": 0,
             "add": racer4, "remove": [],
-            "schema": t4._read_commit(0)["schema"],
+            "schema": t4._log.read_commit(0)["schema"],
         }
         try:
             with open(os.path.join(t4._log_dir, f"{v:020d}.json"), "x") as f:
@@ -2333,7 +2441,7 @@ class TestCheckConstraints:
             racer = {
                 "version": v, "op": "append", "ts": 0,
                 "add": racer_adds, "remove": [],
-                "schema": t._read_commit(0)["schema"],
+                "schema": t._log.read_commit(0)["schema"],
             }
             with open(os.path.join(t._log_dir, f"{v:020d}.json"), "x") as f:
                 _json.dump(racer, f)
@@ -2865,7 +2973,7 @@ class TestRound7ReviewFixes:
             racer = {
                 "version": v, "op": "append", "ts": 0,
                 "add": racer_adds, "remove": [],
-                "schema": t._read_commit(0)["schema"],
+                "schema": t._log.read_commit(0)["schema"],
                 "txn": {"app": "app", "batch": 7},
             }
             with open(os.path.join(t._log_dir, f"{v:020d}.json"), "x") as f:
@@ -2891,8 +2999,8 @@ class TestRound7ReviewFixes:
             t.append(spark.createDataFrame([(999, -1)], "k long, v long"))
         assert t.constraints(0) == {}  # pre-ADD time travel
         # the checkpoint actually carries them (floor, not luck)
-        ck = t._checkpoint_at_or_before(t.latest_version())
-        assert ck is not None and ck[2] == {"constraint.v_nonneg": "v >= 0"}
+        ck = t._log.checkpoint_at_or_before(t.latest_version())
+        assert ck is not None and ck["props"] == {"constraint.v_nonneg": "v >= 0"}
 
     def test_backtick_quoted_references_interlock(self, spark, tmp_path):
         t = _mk(spark, tmp_path, rows=5, files=1)
@@ -3720,8 +3828,8 @@ class TestReaderFeatures:
         assert "column-mapping" in d and "deletion-vectors" in d
         # the stamps are IN the commit records (future readers see them)
         stamped = set()
-        for v in t._versions():
-            stamped.update(t._read_commit(v).get("reader_features", []))
+        for v in t._log.versions():
+            stamped.update(t._log.read_commit(v).get("reader_features", []))
         assert {"column-mapping", "deletion-vectors"} <= stamped
 
     def test_unknown_feature_refused_loudly(self, spark, tmp_path):
@@ -3735,11 +3843,10 @@ class TestReaderFeatures:
         )
 
         t = _mk(spark, tmp_path, rows=10, files=1)
-        c = t._read_commit(t.latest_version())
-        c["reader_features"] = ["vector-clustered-index"]
+        c = {**t._log.read_commit(t.latest_version()), "reader_features": ["vector-clustered-index"]}
         vpath = os.path.join(t._log_dir, f"{t.latest_version():020d}.json")
         with open(vpath, "w") as f:
-            _json.dump(c, f)
+            _json.dump(c, f, default=dict)
         with pytest.raises(UnsupportedTableFeature, match="vector-clustered-index"):
             t.read()
         with pytest.raises(UnsupportedTableFeature):
@@ -3754,6 +3861,6 @@ class TestReaderFeatures:
             t.append(
                 spark.createDataFrame([(1000 + i, 1)], "k long, val long")
             )
-        ck = t._checkpoint_at_or_before(t.latest_version())
-        assert ck is not None and "column-mapping" in ck[3]
+        ck = t._log.checkpoint_at_or_before(t.latest_version())
+        assert ck is not None and "column-mapping" in ck["features"]
         assert "column-mapping" in t.details()["reader_features"]

@@ -223,8 +223,8 @@ class TestWriterFeatures:
         d = t.details()["writer_features"]
         assert "check-constraints" in d and "column-mapping" in d
         stamped = set()
-        for v in t._versions():
-            stamped.update(t._read_commit(v).get("writer_features", []))
+        for v in t._log.versions():
+            stamped.update(t._log.read_commit(v).get("writer_features", []))
         assert {"check-constraints", "column-mapping"} <= stamped
 
     def test_unknown_writer_feature_blocks_writes_not_reads(
@@ -241,11 +241,10 @@ class TestWriterFeatures:
         )
 
         t = self._mk(spark, tmp_path / "t")
-        c = t._read_commit(t.latest_version())
-        c["writer_features"] = ["vector-clustered-write"]
+        c = {**t._log.read_commit(t.latest_version()), "writer_features": ["vector-clustered-write"]}
         vpath = os.path.join(t._log_dir, f"{t.latest_version():020d}.json")
         with open(vpath, "w") as f:
-            _json.dump(c, f)
+            _json.dump(c, f, default=dict)
         t2 = LakeTable.load(spark, t.path)  # fresh instance, no caches
         assert sorted(r["k"] for r in t2.read().collect()) == [1, 2]
         assert t2.changes(-1).count() == 2
@@ -267,8 +266,8 @@ class TestWriterFeatures:
         t.add_constraint("v_pos", "v > 0")
         for i in range(12):  # cross a checkpoint boundary
             t.append(spark.createDataFrame([(100 + i, 1)], "k long, v long"))
-        ck = t._checkpoint_at_or_before(t.latest_version())
-        assert ck is not None and "check-constraints" in ck[4]
+        ck = t._log.checkpoint_at_or_before(t.latest_version())
+        assert ck is not None and "check-constraints" in ck["writer_features"]
         assert "check-constraints" in t.details()["writer_features"]
 
 
@@ -399,7 +398,7 @@ class TestVacuumRetainHours:
         import json as _json
 
         t = self._mk_versions(spark, tmp_path / "t")
-        for v in t._versions():  # age all commits by 10 hours
+        for v in t._log.versions():  # age all commits by 10 hours
             p = os.path.join(t._log_dir, f"{v:020d}.json")
             c = _json.load(open(p))
             c["ts"] = c["ts"] - 36000

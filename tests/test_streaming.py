@@ -1025,7 +1025,7 @@ class TestLakeSinkPartitioned:
         ]
         # entries carry partition metadata -> replace_where prunes them
         parts = {
-            json.dumps(a.get("partition"))
+            json.dumps(a.get("partition"), default=dict)
             for a in t._snapshot()[1]
             if a.get("partition")
         }
