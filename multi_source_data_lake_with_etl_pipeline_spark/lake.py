@@ -1941,6 +1941,7 @@ class LakeTable:
         optimized: bool | None = None,
         observe: dict | None = None,
         validate=None,
+        copied: DataFrame | None = None,
     ) -> list[dict]:
         """Materialize ``df`` as immutable data files; returns their add
         entries (with footer stats). Files land under data/ with UUID
@@ -1973,7 +1974,11 @@ class LakeTable:
         ``validate``: callable invoked with the observed metrics AFTER
         the staging write but BEFORE any file is renamed into data/ —
         raising aborts the write with nothing landed, preserving the
-        validate-before-any-file-lands contract at zero extra actions."""
+        validate-before-any-file-lands contract at zero extra actions.
+        ``copied``: rows written in the same job but outside
+        ``observe`` — a copy-on-write rewrite's kept rows, which must
+        not be re-validated (restore may legally have re-admitted rows
+        violating a later constraint)."""
         obs_user = None
         if observe:
             from pyspark.sql import Observation
@@ -1985,6 +1990,8 @@ class LakeTable:
             if schema is not None:
                 names = {f.name for f in schema.fields}
                 df = df.select(*[c for c in df.columns if c in names])
+        if copied is not None:
+            df = df.unionByName(copied)
 
         def _validated(tmp_dir: str) -> dict | None:
             if obs_user is None:
@@ -2339,13 +2346,26 @@ class LakeTable:
         return df
 
     def _active_dv_positions(self, entries: list[dict]) -> DataFrame | None:
-        """(base, pos) union of the entries' current deletion vectors,
-        or None when the entries carry none."""
+        """(base, pos) of the entries' current deletion vectors, or None
+        when the entries carry none. Each entry's positions come from
+        its OWN sidecar only: an older shared sidecar still holds a
+        stale subset for a file whose vector has since moved on."""
         dv_rels = sorted({a["dv"]["path"] for a in entries if a.get("dv")})
         if not dv_rels:
             return None
-        return self.spark.read.schema("_dv_base string, _dv_pos long").parquet(
-            *[self._abs(p) for p in dv_rels]
+        own = sorted(
+            f"{os.path.basename(a['dv']['path'])}/{os.path.basename(a['path'])}"
+            for a in entries
+            if a.get("dv")
+        )
+        return (
+            self.spark.read.schema("_dv_base string, _dv_pos long")
+            .parquet(*[self._abs(p) for p in dv_rels])
+            .filter(
+                F.concat_ws("/", F.col("_metadata.file_name"), F.col("_dv_base"))
+                .isin(own)
+            )
+            .select("_dv_base", "_dv_pos")
         )
 
     def _effective_commit_times(self) -> list[tuple[int, float]]:
@@ -3708,153 +3728,16 @@ class LakeTable:
         apply the vector as an anti-join; compaction folds it in.
         Results are bit-identical to rewrite mode (oracled by
         ``dv_delete_parity_audit``)."""
-        v, active, schema = self._snapshot()
+        snap = self._snapshot()
         ks = keys.select(key).distinct().persist()
-        cur = self._read_entries(active, schema, keep_meta=True)
-        matched = cur.join(ks, key, "left_semi").persist()
-        touched, deleted = self._touched_counts(
-            matched, col="_dv_base", active=active
+        return self._delete(
+            snap,
+            snap[1],
+            lambda d: d.join(ks, key, "left_semi"),
+            lambda d: d.join(ks, key, "left_anti"),
+            dv,
+            ks,
         )
-        if not touched:
-            for f in (ks, matched):
-                f.unpersist()
-            return {"deleted": 0, "rewritten_files": 0, "version": v}
-        by_path = {a["path"]: a for a in active}
-        t_entries = [by_path[p] for p in touched]
-        data_cols = [f.name for f in schema.fields]
-        # Rebase guard: a file appended AFTER our snapshot may contain a
-        # key we're purging — rebasing past it would leave those rows
-        # alive (a silently incomplete GDPR erasure).
-        probe = (
-            lambda ents: self._read_entries(ents, schema)
-            .join(ks, key, "left_semi")
-            .limit(1)
-            .count()
-            > 0
-        )
-        if dv:
-            adds, new_v = self._commit_dv(
-                v, t_entries, matched, schema, read_probe=probe,
-                metrics={"rows_deleted": deleted, "files_rewritten": 0},
-            )
-            rewritten = 0
-        else:
-            affected = self._read_entries(t_entries, schema)
-            keep = affected.join(ks, key, "left_anti")
-            # no emptiness pre-probe: a zero-row write lands no files
-            # (rows==0 splits are dropped), so writing directly costs
-            # the same one action the probe did — and saves it when
-            # rows survive (the common case)
-            adds = self._write_files(keep, schema)
-            new_v = self._commit_checked(
-                v, "delete", adds, touched, schema, t_entries, read_probe=probe,
-                metrics={"rows_deleted": deleted, "files_rewritten": len(touched)},
-            )
-            rewritten = len(touched)
-        self._write_cdf(
-            new_v,
-            matched.select(*data_cols).withColumn(
-                "_change_type", F.lit("delete")
-            ),
-            schema,
-        )
-        for f in (ks, matched):
-            f.unpersist()
-        return {"deleted": deleted, "rewritten_files": rewritten, "version": new_v}
-
-    def _commit_dv(
-        self,
-        v: int,
-        t_entries: list[dict],
-        matched: DataFrame,
-        schema: StructType,
-        op: str = "delete",
-        extra_adds: list[dict] | None = None,
-        read_probe=None,
-        metrics: dict | None = None,
-        props: dict | None = None,
-    ) -> tuple[list[dict], int]:
-        """Shared DV-mode commit: union the touched entries' EXISTING
-        vectors with the newly matched (base, pos) rows into ONE new
-        sidecar, and re-add each touched entry pointing at it (remove +
-        add of the same path — the data file itself never moves). The
-        union keeps an entry on exactly one sidecar, so a chain of
-        small deletes never accumulates a per-file sidecar list.
-        ``extra_adds``: fresh data files committed alongside (the merge
-        path appends its update/insert output files in the SAME
-        commit, so readers never observe vectored-out rows without
-        their replacements)."""
-        new_pos = matched.select("_dv_base", "_dv_pos")
-        prior = self._active_dv_positions(t_entries)
-        bases = [os.path.basename(a["path"]) for a in t_entries]
-        if prior is not None:
-            new_pos = new_pos.unionByName(
-                prior.filter(F.col("_dv_base").isin(bases))
-            ).distinct()
-        os.makedirs(self._dv_dir, exist_ok=True)
-        dv_name = f"{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(self.path, f"_tmp_{uuid.uuid4().hex}")
-        # per-file deleted-row counts ride the sidecar write itself
-        # (guide §1.2) instead of re-reading the file just written —
-        # one conditional-sum per touched base, observed over EXACTLY
-        # the rows landing in the sidecar. Falls back to the re-read
-        # for very wide touch sets where a per-base expression list
-        # would bloat the plan.
-        obs = None
-        if len(bases) <= 64:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            new_pos = new_pos.observe(
-                obs,
-                *[
-                    F.sum(
-                        (F.col("_dv_base") == F.lit(b)).cast("bigint")
-                    ).alias(f"_b{i}")
-                    for i, b in enumerate(bases)
-                ],
-            )
-        new_pos.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-        os.rename(
-            os.path.join(tmp, part[0]), os.path.join(self._dv_dir, dv_name)
-        )
-        shutil.rmtree(tmp)
-        if obs is not None:
-            got = obs.get
-            counts = {
-                b: int(got[f"_b{i}"] or 0) for i, b in enumerate(bases)
-            }
-        else:
-            counts = {
-                r["_dv_base"]: r["n"]
-                for r in self.spark.read.parquet(
-                    os.path.join(self._dv_dir, dv_name)
-                )
-                .groupBy("_dv_base")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        adds = [
-            {
-                **a,
-                "dv": {
-                    "path": f"{_DV}/{dv_name}",
-                    "ndel": int(counts.get(os.path.basename(a["path"]), 0)),
-                },
-            }
-            for a in t_entries
-        ]
-        # a file whose every row is now vectored carries no readable
-        # data — drop the entry outright instead of re-adding a
-        # 100%-dead file (Delta does the same)
-        adds = [a for a in adds if a["dv"]["ndel"] < int(a.get("rows", 0))]
-        adds = adds + (extra_adds or [])
-        new_v = self._commit_checked(
-            v, op, adds, [a["path"] for a in t_entries], schema, t_entries,
-            read_probe=read_probe, metrics=metrics, props=props,
-        )
-        return adds, new_v
 
     def restore(self, version: int | None = None, timestamp=None) -> int:
         """RESTORE to an earlier version (Delta parity): metadata-only
@@ -3899,56 +3782,15 @@ class LakeTable:
             metrics={"restored_to_version": version},
         )
 
-    def _touched_counts(
-        self,
-        marker: DataFrame,
-        col: str = "_dv_base",
-        active: list[dict] | None = None,
-    ) -> tuple[list[str], int]:
-        """STORED path strings of active files containing ≥1 marker
-        row, and the total marker-row count — ONE per-file grouped
-        aggregate instead of a distinct+collect job followed by a count
-        job (each a full pass over the marker frame).
-
-        ``marker`` carries the ``_dv_base`` column of a read through
-        ``_read_entries(keep_meta=True)``: file identity captured at
-        scan time, which survives joins (``input_file_name()`` is
-        thread-local to the scan and evaluates to '' after any
-        exchange, so it cannot be added after a join/shuffle).
-
-        ``active``: the CALLER'S snapshot entries. Resolving against
-        the caller's snapshot (not the latest) matters for the rebase
-        path: if a concurrent commit rewrites a touched file between
-        our snapshot and here, latest-resolution would silently DROP
-        that file from the read set and _commit_checked's validation
-        would pass — a lost delete/update. Against our own snapshot
-        the file stays in the read set and the validation raises
-        CommitConflict, as it must.
-
-        Identity goes through the file's basename (uuid4 — globally
-        unique) mapped back to the snapshot's stored path, NOT by
-        substring-parsing the URI: a shallow clone's snapshot stores
-        some files as ABSOLUTE paths into the source table, and those
-        must resolve to their stored absolute string so commit remove
-        lists match the active set."""
-        if active is None:
-            _, active, _ = self._snapshot()
-        by_base = {os.path.basename(a["path"]): a["path"] for a in active}
-        rows = marker.groupBy(col).agg(F.count(F.lit(1)).alias("_n")).collect()
-        total = sum(int(r["_n"]) for r in rows)
-        out = {
-            by_base[base]
-            for r in rows
-            if (base := os.path.basename(r[col])) in by_base
-        }
-        return sorted(out), total
-
     def merge(self, source: DataFrame, key: str, dv: bool = False) -> dict:
         """MERGE (upsert) by ``key``: rewrite ONLY files containing a
         matched key; unmatched source rows become inserts in new files.
         Returns {inserted, updated, rewritten_files}. Reference
-        semantics: base_loaders.py:149-181; NULL-key source rows are
-        inserts (see sinks/merge.merge_upsert_df).
+        semantics: base_loaders.py:149-181. The source wins: every
+        target row whose key appears in the source is replaced by the
+        source rows for that key, so duplicate target keys collapse to
+        the source's rows. NULL-key source rows are inserts (they
+        cannot equality-match).
 
         ``dv=True``: deletion-vector merge (Delta low-shuffle-merge
         parity) — the matched OLD rows are vectored out of their files
@@ -3956,8 +3798,6 @@ class LakeTable:
         1-row update to a 1 GB file then writes 1 row + a ~KB sidecar
         instead of rewriting the gigabyte; the unmatched rows of
         touched files are never read or rewritten."""
-        from .sinks.merge import merge_upsert_df
-
         v, active, schema = self._snapshot()
         source = self._apply_generated(source, schema)
         source = self._apply_defaults(source, schema)
@@ -3968,7 +3808,7 @@ class LakeTable:
         # one row anyway) and unmatched rows get fresh engine-assigned
         # values above the watermark
         id_fields = [f for f in schema.fields if _identity_spec(f)]
-        fin_id, id_props_base = None, None
+        id_props = None
         if id_fields:
             names = [f.name for f in id_fields]
             bad = [n for n in names if n in source.columns]
@@ -3985,14 +3825,14 @@ class LakeTable:
             source, fin_id = self._assign_identity(
                 source, schema, id_props_base, fill_only=True
             )
+            # the watermark rides the merge commit (read after the
+            # writes, which have materialized src)
+            id_props = lambda: fin_id(dict(id_props_base))  # noqa: E731
         src = source.persist()
         # semi joins ignore duplicate keys: no distinct (and no shuffle
         # stage) needed on the source side
         src_keys = src.select(key)
         matched_old = cur.join(src_keys, key, "left_semi").persist()
-        touched, _ = self._touched_counts(matched_old, active=active)
-        by_path = {a["path"]: a for a in active}
-        t_entries = [by_path[p] for p in touched]
         data_cols = [f.name for f in schema.fields]
         # every source row marked updated (_mk = 1) or inserted (NULL) by
         # one left join against the distinct matched keys (NULL keys
@@ -4007,95 +3847,40 @@ class LakeTable:
             src.select(*data_cols), self.constraints(v)
         )
         obs_c.update(_n=F.count(F.lit(1)), _u=F.count("_mk"))
-        try:
-            if dv:
-                # counts and violation sums ride the write of the source
-                # rows (guide §1.2); a violation aborts it before any
-                # file lands in data/
-                new_files, got = self._write_files(
-                    marked, schema, observe=obs_c, validate=val_c
-                )
-            else:
-                # the rewrite copies old rows through, which must not be
-                # re-validated: one aggregate over the marked source
-                got = marked.agg(
-                    *[c.alias(n) for n, c in obs_c.items()]
-                ).collect()[0].asDict()
-                if val_c is not None:
-                    val_c(got)
-        except ConstraintViolation:
-            src.unpersist()
-            matched_old.unpersist()
-            raise
-        updated = int(got["_u"])
-        inserted = int(got["_n"]) - updated
-        # Rebase guard: an append interleaving one of OUR source keys
-        # means this merge's matched/unmatched split is stale — a blind
-        # rebase would commit duplicate keys (our "insert" of a key the
-        # append just added, or an update that misses the appended row).
-        # Probe against ALL source keys, not just matched ones.
-        probe = (
-            lambda ents: self._read_entries(ents, schema)
-            .join(src_keys, key, "left_semi")
-            .limit(1)
-            .count()
-            > 0
-        )
-        m_metrics = {
-            "rows_inserted": inserted,
-            "rows_updated": updated,
-            "files_rewritten": 0 if dv else len(touched),
-        }
-        # identity watermark rides the merge commit (the counts above
-        # materialized src, so the Observation is complete)
-        id_props = fin_id(dict(id_props_base)) if fin_id is not None else None
-        if dv:
-            if touched:
-                adds, new_v = self._commit_dv(
-                    v, t_entries, matched_old, schema,
-                    op="merge", extra_adds=new_files, read_probe=probe,
-                    metrics=m_metrics, props=id_props,
-                )
-            else:  # pure insert — empty read set; still probe appends
-                new_v = self._commit_checked(
-                    v, "merge", new_files, [], schema, [], read_probe=probe,
-                    metrics=m_metrics, props=id_props,
-                )
-            touched = []  # nothing rewritten — report 0 like delete dv
-        else:
-            full_affected = self._read_entries(t_entries, schema)
-            merged = merge_upsert_df(full_affected, src, key)
-            adds = self._write_files(merged, schema)
-            new_v = self._commit_checked(
-                v, "merge", adds, touched, schema, t_entries, read_probe=probe,
-                metrics=m_metrics, props=id_props,
+        # CDF: preimage (the OLD row values) — Delta-CDF parity, and what
+        # lets downstream incremental aggregates SUBTRACT the replaced
+        # contribution (operators/materialized)
+        feed = marked.select(
+            *data_cols,
+            F.when(F.col("_mk").isNotNull(), F.lit("update_postimage"))
+            .otherwise(F.lit("insert"))
+            .alias("_change_type"),
+        ).unionByName(
+            matched_old.select(
+                *data_cols, F.lit("update_preimage").alias("_change_type")
             )
-        # CDF capture: O(source rows), written after the commit wins its
-        # version (a conflict raises above, so no stray change files).
-        # Preimage (the OLD row values) — Delta-CDF parity, and what lets
-        # downstream incremental aggregates SUBTRACT the replaced
-        # contribution (operators/materialized).
-        self._write_cdf(
-            new_v,
-            marked.select(
-                *data_cols,
-                F.when(F.col("_mk").isNotNull(), F.lit("update_postimage"))
-                .otherwise(F.lit("insert"))
-                .alias("_change_type"),
-            ).unionByName(
-                matched_old.select(
-                    *data_cols, F.lit("update_preimage").alias("_change_type")
-                )
-            ),
-            schema,
         )
-        src.unpersist()
-        matched_old.unpersist()
+        # the rebase probe matches ALL source keys, not just matched
+        # ones: an interleaved append of any of them makes this merge's
+        # matched/unmatched split stale
+        m = self._rewrite(
+            "merge", (v, active, schema), dv, matched_old,
+            match=lambda d: d.join(src_keys, key, "left_semi"),
+            keep=lambda d: d.join(src_keys, key, "left_anti"),
+            feed=feed,
+            metrics=lambda c: {
+                "rows_inserted": c["_n"] - c["_u"], "rows_updated": c["_u"]
+            },
+            rows=marked,
+            checks=(obs_c, val_c),
+            props=id_props,
+            persisted=(src, matched_old),
+        )
         return {
-            "inserted": inserted,
-            "updated": updated,
-            "rewritten_files": len(touched),
-            "version": new_v,
+            "inserted": m["rows_inserted"],
+            "updated": m["rows_updated"],
+            "rewritten_files": m["files_rewritten"],
+            "version": m["version"],
         }
 
     def merge_into(
@@ -4371,7 +4156,7 @@ class LakeTable:
             k for k, c in all_clauses.items() if c["action"] == "delete"
         ]
 
-        def _updated_rows(frame: DataFrame) -> DataFrame:
+        def _updated_rows() -> DataFrame | None:
             """New values for update-action rows: per clause, the SET
             exprs (simultaneous, pre-update bindings); generated
             columns recompute after."""
@@ -4387,6 +4172,8 @@ class LakeTable:
                     c_ = all_clauses[k]
                     st = c_.get("set") or "all"
                     if st == "all":
+                        if col in gen_cols:
+                            continue  # recomputed below, as on insert
                         expr = F.col(f"src.{col}")
                     elif col in st:
                         expr = F.expr(st[col])
@@ -4394,10 +4181,7 @@ class LakeTable:
                         continue  # this clause keeps col
                     e = F.when(F.col("_act") == k, expr.cast(by_name[col].dataType)).otherwise(e)
                 outcols.append(e.alias(col))
-            out = frame.filter(F.col("_act").isin(upd_codes)).select(
-                *outcols, F.col("tgt._dv_base").alias("_dv_base"),
-                F.col("tgt._dv_pos").alias("_dv_pos"),
-            )
+            out = tgt_acting.filter(F.col("_act").isin(upd_codes)).select(*outcols)
             for f in schema.fields:
                 ge = _gen_expr(f)
                 if ge:
@@ -4436,157 +4220,33 @@ class LakeTable:
             out = ins.select(*outcols)
             return self._apply_generated(out, schema)
 
-        upd_df = _updated_rows(tgt_acting)
+        upd_df = _updated_rows()
         ins_df = _insert_rows()
-        fin_id, id_props_base = None, None
+        id_props = None
         if ins_df is not None and ident_cols:
             id_props_base = self.props(v)
             ins_df, fin_id = self._assign_identity(ins_df, schema, id_props_base)
+            # watermark observed during the write of the inserts
+            id_props = lambda: fin_id(dict(id_props_base))  # noqa: E731
 
-        # ONE grouped aggregation for the touched-file set AND both
-        # target-side action counts (was a distinct+collect plus a
-        # global agg — two full passes over tgt_acting)
-        by_base = {os.path.basename(a["path"]): a["path"] for a in active}
-        grp_rows = (
-            tgt_acting.groupBy(F.col("tgt._dv_base").alias("_dv_base"))
-            .agg(
-                F.sum(
-                    F.col("_act").isin(upd_codes or [-99]).cast("bigint")
-                ).alias("u"),
-                F.sum(
-                    F.col("_act").isin(del_codes or [-99]).cast("bigint")
-                ).alias("d"),
+        # the updated and inserted rows are written by ONE job: CHECK
+        # constraints and both counts ride it, and a violation aborts it
+        # before any file lands in data/
+        rows = None
+        for is_ins, leg in ((False, upd_df), (True, ins_df)):
+            if leg is not None:
+                leg = leg.withColumn("_ins", F.lit(is_ins))
+                rows = leg if rows is None else rows.unionByName(leg)
+        checks = ({}, None)
+        if rows is not None:
+            obs_c, val_c = self._fused_constraints(
+                rows.select(*data_cols), self.constraints(v)
             )
-            .collect()
-        )
-        touched = sorted(
-            {
-                by_base[base]
-                for r in grp_rows
-                if (base := os.path.basename(r["_dv_base"])) in by_base
-            }
-        )
-        n_updated = sum(int(r["u"] or 0) for r in grp_rows)
-        n_deleted = sum(int(r["d"] or 0) for r in grp_rows)
-        by_path = {a["path"]: a for a in active}
-        t_entries = [by_path[p] for p in touched]
-        # Writes with FUSED validation + counting (guide §1.2): each
-        # frame's CHECK-constraint counts ride its own write job (both
-        # frames contain exactly the rows the commit introduces), and
-        # the insert count that used to be its own action is observed
-        # during the insert write. A violating frame aborts its own
-        # write before any of ITS files is renamed into data/; files
-        # an earlier leg already landed are removed in the handler
-        # below — nothing was committed, so the un-referenced files
-        # were invisible to readers and the table state is unchanged
-        # (the old both-legs-validated-first contract, restored at the
-        # cost of the cleanup unlink instead of an extra action). An
-        # empty insert frame writes no files (zero-row splits are
-        # dropped), so the empty-insert fast path is preserved at the
-        # same cost (the standalone count was one action too).
-        cons = self.constraints(v)
-        new_files = []
-        n_inserted = 0
-        try:
-            if upd_df is not None and n_updated:
-                fr = upd_df.drop("_dv_base", "_dv_pos")
-                obs_c, val_c = self._fused_constraints(fr, cons)
-                if obs_c:
-                    a, _ = self._write_files(
-                        fr, schema, observe=obs_c, validate=val_c
-                    )
-                else:
-                    a = self._write_files(fr, schema)
-                new_files += a
-            if ins_df is not None:
-                obs_c, val_c = self._fused_constraints(
-                    ins_df.select(*data_cols), cons
-                )
-                obs_c["_cnt"] = F.count(F.lit(1))
-                a, observed = self._write_files(
-                    ins_df, schema, observe=obs_c, validate=val_c
-                )
-                n_inserted = int(observed["_cnt"] or 0)
-                if n_inserted == 0:
-                    ins_df = None  # empty insert = no-op (no CDF rows)
-                else:
-                    new_files += a
-        except ConstraintViolation:
-            # the insert leg rejected AFTER the update leg landed its
-            # (uncommitted, reader-invisible) files — remove them so a
-            # rejected merge leaves no orphans for vacuum to find
-            for a_ in new_files:
-                try:
-                    os.remove(self._abs(a_["path"]))
-                except OSError:
-                    pass
-            for f_ in (src, joined, tgt_acting):
-                f_.unpersist()
-            raise
-        # watermark observed during the insert write above
-        id_props = fin_id(dict(id_props_base)) if fin_id is not None else None
-
-        # Rebase guard: a concurrent append row is in this merge's read
-        # set if it can match the ON condition against our source — or
-        # unconditionally when a not-matched-by-source clause exists
-        # (every target row's fate depends on the full source).
-        if nbs_clauses:
-            probe = (
-                lambda ents: self._read_entries(ents, schema)
-                .limit(1).count() > 0
+            obs_c.update(
+                _u=F.count(F.when(~F.col("_ins"), 1)),
+                _i=F.count(F.when(F.col("_ins"), 1)),
             )
-        else:
-            probe = (
-                lambda ents: self._read_entries(ents, schema)
-                .alias("tgt")
-                .join(src.alias("src"), cond, "left_semi")
-                .limit(1)
-                .count()
-                > 0
-            )
-        metrics = {
-            "rows_inserted": n_inserted,
-            "rows_updated": n_updated,
-            "rows_deleted": n_deleted,
-            "files_rewritten": 0 if dv else len(touched),
-            "files_partition_pruned": pruned_files,
-        }
-        if dv:
-            acted_pos = tgt_acting.select(
-                F.col("tgt._dv_base").alias("_dv_base"),
-                F.col("tgt._dv_pos").alias("_dv_pos"),
-            )
-            if touched:
-                _, new_v = self._commit_dv(
-                    v, t_entries, acted_pos, schema, op="merge",
-                    extra_adds=new_files, read_probe=probe, metrics=metrics,
-                    props=id_props,
-                )
-            else:
-                new_v = self._commit_checked(
-                    v, "merge", new_files, [], schema, [], read_probe=probe,
-                    metrics=metrics, props=id_props,
-                )
-            rewritten = 0
-        else:
-            adds = list(new_files)
-            if touched:
-                affected = self._read_entries(t_entries, schema, keep_meta=True)
-                keep = affected.join(
-                    tgt_acting.select(
-                        F.col("tgt._dv_base").alias("_dv_base"),
-                        F.col("tgt._dv_pos").alias("_dv_pos"),
-                    ),
-                    ["_dv_base", "_dv_pos"],
-                    "left_anti",
-                ).select(*data_cols)
-                # zero-row writes land no files — no emptiness pre-probe
-                adds += self._write_files(keep, schema)
-            new_v = self._commit_checked(
-                v, "merge", adds, touched, schema, t_entries,
-                read_probe=probe, metrics=metrics, props=id_props,
-            )
-            rewritten = len(touched)
+            checks = (obs_c, val_c)
 
         # CDF: pre/post images for updates, delete + insert rows
         cdf_parts = []
@@ -4594,9 +4254,7 @@ class LakeTable:
             pre = tgt_acting.filter(F.col("_act").isin(upd_codes)).select(
                 *[F.col(f"tgt.{c}").alias(c) for c in data_cols]
             ).withColumn("_change_type", F.lit("update_preimage"))
-            post = upd_df.drop("_dv_base", "_dv_pos").withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
+            post = upd_df.withColumn("_change_type", F.lit("update_postimage"))
             cdf_parts += [pre, post]
         if del_codes:
             cdf_parts.append(
@@ -4608,29 +4266,54 @@ class LakeTable:
             cdf_parts.append(
                 ins_df.withColumn("_change_type", F.lit("insert"))
             )
-        if cdf_parts:
-            feed = cdf_parts[0]
-            for p_ in cdf_parts[1:]:
-                feed = feed.unionByName(p_)
-            self._write_cdf(new_v, feed, schema)
-        for f_ in (src, joined, tgt_acting):
-            f_.unpersist()
+        feed = None
+        for p_ in cdf_parts:
+            feed = p_ if feed is None else feed.unionByName(p_)
+
+        acted = tgt_acting.select(
+            F.col("tgt._dv_base").alias("_dv_base"),
+            F.col("tgt._dv_pos").alias("_dv_pos"),
+        )
+        # Rebase probe: a concurrent append row is in this merge's read
+        # set if it can match the ON condition against our source — or
+        # unconditionally when a not-matched-by-source clause exists
+        # (every target row's fate depends on the full source).
+        if nbs_clauses:
+            match = lambda d: d  # noqa: E731
+        else:
+            match = lambda d: d.alias("tgt").join(  # noqa: E731
+                src.alias("src"), cond, "left_semi"
+            )
+        m = self._rewrite(
+            "merge", (v, active, schema), dv, acted, match,
+            keep=lambda d: d.join(acted, ["_dv_base", "_dv_pos"], "left_anti"),
+            feed=feed,
+            metrics=lambda c: {
+                "rows_inserted": c.get("_i", 0),
+                "rows_updated": c.get("_u", 0),
+                "rows_deleted": c["acted"] - c.get("_u", 0),
+                "files_partition_pruned": pruned_files,
+            },
+            rows=rows,
+            checks=checks,
+            props=id_props,
+            persisted=(src, joined, tgt_acting),
+        )
         return {
-            "inserted": n_inserted,
-            "updated": n_updated,
-            "deleted": n_deleted,
-            "rewritten_files": rewritten,
-            "version": new_v,
+            "inserted": m["rows_inserted"],
+            "updated": m["rows_updated"],
+            "deleted": m["rows_deleted"],
+            "rewritten_files": m["files_rewritten"],
+            "version": m["version"],
         }
 
     def update(
         self, predicate: str, assignments: dict[str, str], dv: bool = False
     ) -> dict:
         """UPDATE ... SET col = expr WHERE predicate (Delta UPDATE
-        parity): rewrite ONLY files containing a pred=TRUE row, with
-        the assignments applied in a single CASE-WHEN pass (unmatched
-        rows of touched files are copied through byte-equal; untouched
-        files never read). NULL-predicate rows are NOT updated (SQL
+        parity): rewrite ONLY files containing a pred=TRUE row (their
+        other rows are copied through byte-equal; untouched files are
+        never read). NULL-predicate rows are NOT updated (SQL
         semantics). Assignment expressions see the PRE-update row (all
         assignments evaluate simultaneously, standard SQL UPDATE).
         Generated columns cannot be assigned directly and are
@@ -4663,203 +4346,258 @@ class LakeTable:
         cur = self._read_entries(cand, schema, keep_meta=True)
         matched = cur.filter(cond).persist()
         data_cols = [f.name for f in schema.fields]
-
-        def _assigned(df: DataFrame, keep: tuple = ()) -> DataFrame:
-            # simultaneous assignment: all exprs bind to the pre-update
-            # row because they evaluate in ONE select over it
-            out = df.select(
-                *[
-                    F.expr(assignments[c]).cast(by_name[c].dataType).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in data_cols
-                ],
-                *[F.col(k) for k in keep],
-            )
-            # recompute generated columns against the new values
-            for f in schema.fields:
-                e = _gen_expr(f)
-                if e:
-                    out = out.withColumn(f.name, F.expr(e).cast(f.dataType))
-            return out
-
-        post = _assigned(matched.select(*data_cols))
-        cons = self.constraints(v)
-        if cons:
-            # The POST-update constraint check rides the SAME grouped
-            # aggregate that finds touched files + the update count
-            # (guide §1.2: one pass, not two). It must see exactly the
-            # updated rows — never the copied-through rows of the
-            # rewrite frame, which restore may legally have re-admitted
-            # in violation of a later constraint.
-            viol = {
-                n: F.expr(f"coalesce(not ({p}), false)")
-                for n, p in cons.items()
-            }
-            grp = (
-                _assigned(matched, keep=("_dv_base",))
-                .groupBy("_dv_base")
-                .agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    *[
-                        F.sum(x.cast("bigint")).alias(f"_viol_{n}")
-                        for n, x in viol.items()
-                    ],
-                )
-                .collect()
-            )
-            if any(int(r[f"_viol_{n}"] or 0) for r in grp for n in viol):
-                matched.unpersist()
-                # exact counts + samples for the message — failure path
-                self._check_constraints(post, cons)
-                raise ConstraintViolation(
-                    "CHECK constraint(s) violated during update counts, "
-                    "commit rejected (re-scan found no violating rows — "
-                    "non-deterministic assignments?)"
-                )
-            by_base = {
-                os.path.basename(a["path"]): a["path"] for a in active
-            }
-            touched = sorted(
-                {
-                    by_base[base]
-                    for r in grp
-                    if (base := os.path.basename(r["_dv_base"])) in by_base
-                }
-            )
-            n_updated = sum(int(r["_n"]) for r in grp)
-        else:
-            touched, n_updated = self._touched_counts(
-                matched, col="_dv_base", active=active
-            )
-        if not touched:
-            matched.unpersist()
-            return {"updated": 0, "rewritten_files": 0, "version": v}
-        by_path = {a["path"]: a for a in active}
-        t_entries = [by_path[p] for p in touched]
-        probe = (
-            lambda ents: self._read_entries(ents, schema)
-            .filter(cond)
-            .limit(1)
-            .count()
-            > 0
+        # simultaneous assignment: all exprs bind to the pre-update row
+        # because they evaluate in ONE select over it
+        post = matched.select(
+            *[
+                F.expr(assignments[c]).cast(by_name[c].dataType).alias(c)
+                if c in assignments
+                else F.col(c)
+                for c in data_cols
+            ]
         )
-        metrics = {
-            "rows_updated": n_updated,
-            "files_rewritten": 0 if dv else len(touched),
-        }
-        if dv:
-            new_files = self._write_files(post, schema)
-            _, new_v = self._commit_dv(
-                v, t_entries, matched, schema, op="update",
-                extra_adds=new_files, read_probe=probe, metrics=metrics,
-            )
-            rewritten = 0
-        else:
-            affected = self._read_entries(t_entries, schema)
-            # one pass: matching rows take the assignments, the rest
-            # copy through — no union, no second scan. The match marker
-            # is computed IN the same select so the predicate binds to
-            # the PRE-update row even when it references an assigned
-            # column (post-assignment rebinding would mis-gate the
-            # generated-column recompute below).
-            marker = f"_upd_{uuid.uuid4().hex[:8]}"
-            rewritten_df = affected.select(
-                cond.alias(marker),
-                *[
-                    F.when(
-                        cond,
-                        F.expr(assignments[c]).cast(by_name[c].dataType),
-                    ).otherwise(F.col(c)).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in data_cols
-                ],
-            )
-            for f in schema.fields:
-                e = _gen_expr(f)
-                if e:
-                    rewritten_df = rewritten_df.withColumn(
-                        f.name,
-                        F.when(
-                            F.col(marker), F.expr(e).cast(f.dataType)
-                        ).otherwise(F.col(f.name)),
-                    )
-            adds = self._write_files(rewritten_df.drop(marker), schema)
-            new_v = self._commit_checked(
-                v, "update", adds, touched, schema, t_entries,
-                read_probe=probe, metrics=metrics,
-            )
-            rewritten = len(touched)
-        self._write_cdf(
-            new_v,
-            matched.select(*data_cols)
+        # recompute generated columns against the new values
+        for f in schema.fields:
+            e = _gen_expr(f)
+            if e:
+                post = post.withColumn(f.name, F.expr(e).cast(f.dataType))
+        # the CHECK validation rides the write of the updated rows and
+        # sees only them — never copied-through rows, which restore may
+        # legally have re-admitted in violation of a later constraint
+        m = self._rewrite(
+            "update", (v, active, schema), dv, matched,
+            match=lambda d: d.filter(cond),
+            keep=lambda d: d.filter(~cond),
+            feed=matched.select(*data_cols)
             .withColumn("_change_type", F.lit("update_preimage"))
             .unionByName(
                 post.withColumn("_change_type", F.lit("update_postimage"))
             ),
-            schema,
+            metrics=lambda c: {"rows_updated": c["acted"]},
+            rows=post,
+            checks=self._fused_constraints(post, self.constraints(v)),
+            persisted=(matched,),
         )
-        matched.unpersist()
         return {
-            "updated": n_updated,
-            "rewritten_files": rewritten,
-            "version": new_v,
+            "updated": m["rows_updated"],
+            "rewritten_files": m["files_rewritten"],
+            "version": m["version"],
         }
 
     def delete(self, predicate: str, dv: bool = False) -> dict:
         """DELETE WHERE predicate: rewrite only files containing a
         pred=TRUE row. NULL-predicate rows are KEPT (SQL semantics).
         ``dv=True``: deletion-vector mode — see ``delete_keys``."""
-        v, active, schema = self._snapshot()
+        snap = self._snapshot()
+        _, active, schema = snap
         cond = F.expr(f"coalesce(({predicate}), false)")
         # partition-only predicates prune the read set from metadata
-        cand = self._partition_candidates(active, predicate, schema)
-        cur = self._read_entries(cand, schema, keep_meta=True)
-        matched = cur.filter(cond).persist()
-        touched, deleted = self._touched_counts(
-            matched, col="_dv_base", active=active
+        return self._delete(
+            snap,
+            self._partition_candidates(active, predicate, schema),
+            lambda d: d.filter(cond),
+            lambda d: d.filter(~cond),
+            dv,
         )
-        if not touched:
-            matched.unpersist()
-            return {"deleted": 0, "rewritten_files": 0, "version": v}
-        by_path = {a["path"]: a for a in active}
-        t_entries = [by_path[p] for p in touched]
-        data_cols = [f.name for f in schema.fields]
-        # Rebase guard: concurrently-appended rows matching the
-        # predicate must conflict, not silently survive the delete.
-        probe = (
-            lambda ents: self._read_entries(ents, schema)
-            .filter(cond)
-            .limit(1)
-            .count()
-            > 0
-        )
-        if dv:
-            _, new_v = self._commit_dv(
-                v, t_entries, matched, schema, read_probe=probe,
-                metrics={"rows_deleted": deleted, "files_rewritten": 0},
-            )
-            rewritten = 0
-        else:
-            affected = self._read_entries(t_entries, schema)
-            keep = affected.filter(~cond)
-            # zero-row writes land no files — no emptiness pre-probe
-            adds = self._write_files(keep, schema)
-            new_v = self._commit_checked(
-                v, "delete", adds, touched, schema, t_entries, read_probe=probe,
-                metrics={"rows_deleted": deleted, "files_rewritten": len(touched)},
-            )
-            rewritten = len(touched)
-        self._write_cdf(
-            new_v,
-            matched.select(*data_cols).withColumn(
+
+    def _delete(self, snap, cand, match, keep, dv: bool, *persisted) -> dict:
+        """DELETE the rows of the candidate entries ``cand`` that
+        ``match`` selects (``keep`` selects the rest)."""
+        schema = snap[2]
+        matched = match(self._read_entries(cand, schema, keep_meta=True)).persist()
+        m = self._rewrite(
+            "delete", snap, dv, matched, match, keep,
+            feed=matched.select(*schema.fieldNames()).withColumn(
                 "_change_type", F.lit("delete")
             ),
-            schema,
+            metrics=lambda c: {"rows_deleted": c["acted"]},
+            persisted=(matched, *persisted),
         )
-        matched.unpersist()
-        return {"deleted": deleted, "rewritten_files": rewritten, "version": new_v}
+        return {
+            "deleted": m["rows_deleted"],
+            "rewritten_files": m["files_rewritten"],
+            "version": m["version"],
+        }
+
+    def _rewrite(
+        self,
+        op: str,
+        snap: tuple,
+        dv: bool,
+        acted: DataFrame,
+        match,
+        keep,
+        feed: DataFrame | None,
+        metrics,
+        rows: DataFrame | None = None,
+        checks: tuple = ({}, None),
+        props=None,
+        persisted: tuple = (),
+    ) -> dict:
+        """The one commit tail of row-level DML. As in Delta, DELETE,
+        UPDATE and MERGE are one mechanism: find the files holding the
+        acted rows, write the replacements, swap them in with one
+        commit. Each op builds its own front half and ends here.
+
+        ``acted``: the target rows the op takes out of their files,
+        read through ``_read_entries(keep_meta=True)`` of the snapshot
+        ``snap`` (vectors already applied). One grouped aggregate over
+        it finds the touched files and each one's acted-row count.
+        ``match``: the op's own match function (the filter or join that
+        found ``acted``). Re-applied to the files a concurrent commit
+        added, it is the rebase probe: a rebase past an append of
+        matching rows would leave them undeleted, unupdated or
+        duplicated, so it raises CommitConflict instead.
+        ``rows``: the replacement rows (updated and inserted) both modes
+        write; ``checks`` = ``(observe, validate)`` rides that write
+        (:meth:`_fused_constraints`) and sees only these rows.
+        ``dv=True`` vectors the acted rows out (:meth:`_commit_dv`).
+        Copy-on-write writes the touched files' kept rows — ``keep``
+        over a ``keep_meta`` read of them: the negated filter or the
+        anti-join on the same keys or positions — next to ``rows``.
+        ``metrics(counts)`` and ``props()`` run just before the commit,
+        once the writes have filled their observations; ``counts``
+        holds ``acted`` and the observed ``checks`` values.
+        ``feed``: the change-feed rows, written once the commit has won
+        its version. A delete or update that acted on no row commits
+        nothing; a merge still commits its inserts. ``persisted``
+        frames are unpersisted on every exit.
+
+        Returns the committed metrics plus ``version``."""
+        v, active, schema = snap
+        try:
+            per_file = self._touched_counts(acted, active)
+            counts = {"acted": sum(per_file.values())}
+            if not per_file and op != "merge":
+                return {**metrics(counts), "files_rewritten": 0, "version": v}
+            by_path = {a["path"]: a for a in active}
+            t_entries = [by_path[p] for p in sorted(per_file)]
+            kept = None
+            if t_entries and not dv:
+                kept = keep(
+                    self._read_entries(t_entries, schema, keep_meta=True)
+                ).select(*schema.fieldNames())
+            if rows is None:  # a delete writes only the kept rows
+                rows, kept = kept, None
+            adds = []
+            if rows is not None:
+                obs, val = checks
+                out = self._write_files(
+                    rows, schema, observe=obs, validate=val, copied=kept
+                )
+                adds, got = out if obs else (out, {})
+                counts.update({n: int(x or 0) for n, x in got.items()})
+            m = {
+                **metrics(counts),
+                "files_rewritten": 0 if dv else len(t_entries),
+            }
+            p = props() if props is not None else None
+            probe = (
+                lambda ents: match(self._read_entries(ents, schema))
+                .limit(1)
+                .count()
+                > 0
+            )
+            if dv and t_entries:
+                new_v = self._commit_dv(
+                    v, op, t_entries, per_file, acted, schema, adds, probe, m, p
+                )
+            else:
+                new_v = self._commit_checked(
+                    v, op, adds, sorted(per_file), schema, t_entries,
+                    read_probe=probe, metrics=m, props=p,
+                )
+            if feed is not None:
+                self._write_cdf(new_v, feed, schema)
+            return {**m, "version": new_v}
+        finally:
+            for f in persisted:
+                f.unpersist()
+
+    def _touched_counts(
+        self, acted: DataFrame, active: tuple
+    ) -> dict[str, int]:
+        """{STORED path: acted-row count} for the active files holding
+        ≥1 ``acted`` row — ONE per-file grouped aggregate.
+
+        ``acted`` carries the ``_dv_base`` column of a read through
+        ``_read_entries(keep_meta=True)``: file identity captured at
+        scan time, which survives joins (``input_file_name()`` is
+        thread-local to the scan and evaluates to '' after any
+        exchange, so it cannot be added after a join/shuffle).
+
+        ``active``: the CALLER'S snapshot entries. Resolving against
+        the caller's snapshot (not the latest) matters for the rebase
+        path: if a concurrent commit rewrites a touched file between
+        our snapshot and here, latest-resolution would silently DROP
+        that file from the read set and _commit_checked's validation
+        would pass — a lost delete/update. Against our own snapshot
+        the file stays in the read set and the validation raises
+        CommitConflict, as it must.
+
+        Identity goes through the file's basename (uuid4 — globally
+        unique) mapped back to the snapshot's stored path, NOT by
+        substring-parsing the URI: a shallow clone's snapshot stores
+        some files as ABSOLUTE paths into the source table, and those
+        must resolve to their stored absolute string so commit remove
+        lists match the active set."""
+        by_base = {os.path.basename(a["path"]): a["path"] for a in active}
+        rows = acted.groupBy("_dv_base").agg(F.count(F.lit(1)).alias("_n"))
+        return {
+            by_base[base]: int(r["_n"])
+            for r in rows.collect()
+            if (base := os.path.basename(r["_dv_base"])) in by_base
+        }
+
+    def _commit_dv(
+        self,
+        v: int,
+        op: str,
+        t_entries: list[dict],
+        per_file: dict[str, int],
+        acted: DataFrame,
+        schema: StructType,
+        extra_adds: list[dict],
+        read_probe,
+        metrics: dict,
+        props: dict | None,
+    ) -> int:
+        """Deletion-vector commit: ONE new sidecar holds the touched
+        entries' existing vectors plus the newly acted (base, pos)
+        rows, and each touched entry is re-added pointing at it (remove
+        + add of the same path — the data file itself never moves), so
+        a chain of small deletes never accumulates a per-file sidecar
+        list. ``acted`` was read with the existing vectors applied, so
+        its positions never repeat one of them: each entry's ``ndel``
+        is its prior ``ndel`` plus its ``per_file`` count.
+        ``extra_adds``: fresh data files committed alongside (update
+        and merge output), so readers never observe vectored-out rows
+        without their replacements."""
+        new_pos = acted.select("_dv_base", "_dv_pos")
+        prior = self._active_dv_positions(t_entries)
+        if prior is not None:
+            new_pos = new_pos.unionByName(prior)
+        os.makedirs(self._dv_dir, exist_ok=True)
+        dv_name = f"{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f"_tmp_{uuid.uuid4().hex}")
+        new_pos.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+        os.rename(
+            os.path.join(tmp, part[0]), os.path.join(self._dv_dir, dv_name)
+        )
+        shutil.rmtree(tmp)
+        adds = []
+        for a in t_entries:
+            ndel = int(a.get("dv", {}).get("ndel", 0)) + per_file[a["path"]]
+            # a file whose every row is now vectored carries no readable
+            # data — drop the entry outright instead of re-adding a
+            # 100%-dead file (Delta does the same)
+            if ndel < int(a.get("rows", 0)):
+                adds.append({**a, "dv": {"path": f"{_DV}/{dv_name}", "ndel": ndel}})
+        return self._commit_checked(
+            v, op, adds + extra_adds, [a["path"] for a in t_entries], schema,
+            t_entries, read_probe=read_probe, metrics=metrics, props=props,
+        )
 
     # ---------------------------------------------------------- CDF
     def _cdf_lineage(

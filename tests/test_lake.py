@@ -1697,6 +1697,44 @@ def test_dv_parity_with_rewrite_mode(spark, tmp_path):
     assert ta.rows() == tb.rows() == ta.read().count()
 
 
+@pytest.mark.parametrize("dv", [False, True])
+def test_merge_collapses_duplicate_target_keys(spark, tmp_path, dv):
+    """Upsert rule: the source wins, and duplicate target keys collapse
+    to the source's row — in both modes, table and change feed alike."""
+    t = _mk_from(
+        spark, tmp_path / "t",
+        spark.createDataFrame([(1, 10), (1, 11), (2, 20)], "k long, v long"),
+    )
+    m = t.merge(
+        spark.createDataFrame([(1, 99), (3, 30)], "k long, v long"), "k", dv=dv
+    )
+    assert (m["inserted"], m["updated"]) == (1, 1)
+    assert sorted(map(tuple, t.read().collect())) == [(1, 99), (2, 20), (3, 30)]
+    assert t.rows() == 3
+    feed = t.changes(m["version"] - 1, m["version"])
+    assert sorted((r["k"], r["v"], r["_change_type"]) for r in feed.collect()) == [
+        (1, 10, "update_preimage"),
+        (1, 11, "update_preimage"),
+        (1, 99, "update_postimage"),
+        (3, 30, "insert"),
+    ]
+
+
+def test_dv_commit_reads_each_entry_from_its_own_sidecar(spark, tmp_path):
+    """A file's vector moves to a newer sidecar when only it is touched;
+    the older shared sidecar keeps a stale copy of its positions. A
+    later op touching both files must take each file's positions from
+    the sidecar its entry names, or the new sidecar holds duplicates
+    that disagree with the entry's ndel."""
+    t = _mk(spark, tmp_path, rows=100, files=2)
+    for ks in ([1, 51], [52], [2, 53]):
+        keys = spark.createDataFrame([(k,) for k in ks], "k long")
+        t.delete_keys(keys, "k", dv=True)
+    assert t.verify_integrity()["ok"]
+    assert sorted(a["dv"]["ndel"] for a in t._snapshot()[1]) == [2, 3]
+    assert t.read().count() == t.rows() == 95
+
+
 def test_dv_merge_parity_and_coherence(spark, tmp_path):
     """merge(dv=True) (Delta low-shuffle-merge parity): matched old
     rows are vectored out, ALL source rows land in fresh files, one
@@ -2212,8 +2250,8 @@ def test_rebase_conflicts_on_concurrent_append_of_matching_rows(
     )
     orig_tf = type(t4)._touched_counts
 
-    def hooked_tf(marker, col="_f", active=None):
-        out = orig_tf(t4, marker, col=col, active=active)
+    def hooked_tf(acted, active):
+        out = orig_tf(t4, acted, active)
         v = t4.latest_version() + 1
         racer = {
             "version": v, "op": "append", "ts": 0,

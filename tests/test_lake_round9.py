@@ -961,6 +961,45 @@ def _bucketed(spark, path, rows=400, buckets=8):
 # before the counts moved onto the writes.
 DV_MERGE_JOBS = 12
 
+# Jobs for the SECOND call of each row-level DML op, per mode (in DV
+# mode the first call has already left a vector). Every op ends in one
+# grouped aggregate that finds the touched files, one write of its new
+# rows (copy-on-write: plus the kept rows, in the same job), the DV
+# sidecar write and the change feed. Before the ops shared that tail
+# they launched, copy-on-write / DV: merge 15 / 14-15, update 6 / 9,
+# delete 6 / 7, delete_keys 11 / 11, merge_into 18 / 18. A DV merge
+# measures 13 or 14 from run to run (AQE stage jobs).
+REPEAT_DML_JOBS = {
+    ("merge", False): 12, ("merge", True): 14,
+    ("update", False): 6, ("update", True): 8,
+    ("delete", False): 6, ("delete", True): 6,
+    ("delete_keys", False): 11, ("delete_keys", True): 10,
+    ("merge_into", False): 14, ("merge_into", True): 15,
+}
+
+
+def _dml(spark, t, op: str, i: int, dv: bool) -> None:
+    """Call ``i`` of ``op``: acts on the keys k < 40 with k % 4 == i."""
+    hit = f"k < 40 AND k % 4 = {i}"
+    src = spark.createDataFrame(
+        [(k, -1 - i) for k in range(i, 40, 4)]
+        + [(1000 + 10 * i + j, -9) for j in range(10)],
+        "k long, v long",
+    )
+    if op == "merge":
+        t.merge(src, "k", dv=dv)
+    elif op == "update":
+        t.update(hit, {"v": "-v"}, dv=dv)
+    elif op == "delete":
+        t.delete(hit, dv=dv)
+    elif op == "delete_keys":
+        t.delete_keys(src.select("k"), "k", dv=dv)
+    else:
+        t.merge_into(src, ["k"], [
+            {"when": "matched", "action": "update", "set": {"v": "src.v"}},
+            {"when": "not_matched", "action": "insert", "values": "all"},
+        ], dv=dv)
+
 
 class TestJobCounts:
     def test_read_of_many_files_launches_no_job(self, spark, tmp_path, spark_jobs):
@@ -1006,6 +1045,33 @@ class TestJobCounts:
         assert len(jobs) <= DV_MERGE_JOBS, jobs
         assert t.read().filter("v < 0").count() == 20
         assert t.read().count() == 410
+
+    @pytest.mark.parametrize("dv", [False, True], ids=["cow", "dv"])
+    @pytest.mark.parametrize(
+        "op", ["merge", "update", "delete", "delete_keys", "merge_into"]
+    )
+    def test_repeat_dml_job_budget(self, spark, tmp_path, spark_jobs, op, dv):
+        t = _bucketed(spark, tmp_path / "t")
+        _dml(spark, t, op, 0, dv)
+        assert any(a.get("dv") for a in t._snapshot()[1]) == dv
+        with spark_jobs() as jobs:
+            _dml(spark, t, op, 1, dv)
+        assert len(jobs) <= REPEAT_DML_JOBS[op, dv], jobs
+
+    @pytest.mark.parametrize(
+        "op", ["merge", "update", "delete", "delete_keys", "merge_into"]
+    )
+    def test_repeat_dv_ops_match_copy_on_write(self, spark, tmp_path, op):
+        """Four repeat DV calls stack vectors on the same files: the
+        log's ndel counts stay exact and the rows match copy-on-write."""
+        tables = {dv: _bucketed(spark, tmp_path / str(dv)) for dv in (False, True)}
+        for dv, t in tables.items():
+            for i in range(4):
+                _dml(spark, t, op, i, dv)
+            assert t.verify_integrity()["ok"]
+        cow, dv = (sorted(map(tuple, t.read().collect())) for t in tables.values())
+        assert cow == dv
+        assert tables[True].rows() == len(dv)
 
 
 class TestNarrowedFallbacks:

@@ -139,6 +139,29 @@ class TestStatements:
                 "WHEN MATCHED THEN DELETE"
             )
 
+    def test_merge_update_set_star_on_bucketed_table(self, spark, tmp_path):
+        """UPDATE SET * takes the source's columns but recomputes the
+        generated bucket column, which the source does not carry."""
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.range(0, 40).selectExpr("id AS k", "id * 3 AS v"),
+            bucket_by=("k", 4), optimized_write=True,
+        )
+        spark.createDataFrame(
+            [(5, -1), (17, -2), (900, -3)], "k long, v long"
+        ).createOrReplaceTempView("upd")
+        LakeSqlRunner(spark, {"t": t}).sql(
+            "MERGE INTO t AS tgt USING upd AS src ON tgt.k = src.k "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+        got = t.read()
+        assert got.count() == 41
+        assert {r["k"]: r["v"] for r in got.filter("v < 0").collect()} == {
+            5: -1, 17: -2, 900: -3,
+        }
+        assert got.filter("k_bucket <> pmod(xxhash64(k), 4)").count() == 0
+
     def test_alter_constraint_lifecycle(self, runner, spark):
         r, t = runner
         r.sql("ALTER TABLE t ADD CONSTRAINT v_pos CHECK (v > 0)")
