@@ -33,8 +33,9 @@ the nearest checkpoint. This gives, at 100 TB scale:
   files before Spark ever lists them (the driver-side analogue of
   row-group pruning, one level up).
 - **Optimistic concurrency**: commits are O_EXCL-created version
-  files; a lost race surfaces as ``CommitConflict`` and append-only
-  commits auto-retry (blind appends commute).
+  files; data writers commit through one ``lake_log.Txn`` (appends
+  commute, other ops rebase past disjoint commits), metadata ops
+  surface a lost race as ``CommitConflict``.
 
 The log is JSON on the driver — fine up to ~1e6 files per table; past
 that, checkpoints keep replay O(files), matching Delta's design.
@@ -49,6 +50,7 @@ import re
 import shutil
 import time
 import uuid
+from collections.abc import Mapping
 
 from pyspark.errors import (
     AnalysisException,
@@ -62,13 +64,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from .lake_log import CommitConflict, Snapshot, TableLog
+from .lake_log import CommitConflict, Snapshot, TableLog, Txn
 
 _LOG = "_log"
 _DATA = "data"
-# commit races a blind append (append, streaming append, WAP publish)
-# re-checks and retries before giving up
-COMMIT_ATTEMPTS = 21
 _CDF = "_cdf"
 _DV = "dv"  # deletion-vector sidecars: (base, pos) parquet per delete
 # Internal column names the DV read path injects at scan time. A user
@@ -315,6 +314,37 @@ def _phys(f) -> str:
 
 def _is_mapped(schema: StructType) -> bool:
     return any(_phys(f) != f.name for f in schema.fields)
+
+
+def _bindings(schema: StructType, names) -> dict[str, tuple]:
+    """{column: (physical name, generation expression)} for the columns
+    of ``schema`` in ``names`` — what a batch's files are written
+    under."""
+    return {
+        f.name: (_phys(f), _gen_expr(f)) for f in schema.fields if f.name in names
+    }
+
+
+def _constraints(props: Mapping) -> dict[str, str]:
+    """{name: CHECK predicate} recorded in table props."""
+    pfx = "constraint."
+    return {k[len(pfx):]: p for k, p in props.items() if k.startswith(pfx)}
+
+
+def _cluster_layout(df: DataFrame, cols: list[str], n: int) -> DataFrame:
+    """Lay ``df`` out as ``n`` files: Z-order over several columns, a
+    range partition sorted within files over one, a plain coalesce over
+    none — per-file footer ranges then stay tight on every listed
+    column."""
+    if len(cols) > 1:
+        from .sinks.maintenance import zorder_by
+
+        return zorder_by(df, cols, n)
+    if cols:
+        return df.repartitionByRange(n, F.col(cols[0])).sortWithinPartitions(
+            cols[0]
+        )
+    return df.coalesce(n)
 
 
 def _physical_schema(schema: StructType) -> StructType:
@@ -1201,12 +1231,7 @@ class LakeTable:
 
     def constraints(self, version: int | None = None) -> dict[str, str]:
         """Named CHECK constraints at ``version``: {name: sql_pred}."""
-        pfx = "constraint."
-        return {
-            k[len(pfx):]: p
-            for k, p in self.props(version).items()
-            if k.startswith(pfx)
-        }
+        return _constraints(self.props(version))
 
     def add_constraint(self, name: str, predicate: str) -> int:
         """ALTER TABLE ADD CONSTRAINT name CHECK (predicate) — Delta
@@ -1247,9 +1272,8 @@ class LakeTable:
             .count()
             > 0
         )
-        return self._commit_checked(
-            v, "setprops", [], [], schema, [], read_probe=probe, props=props
-        )
+        txn = Txn(self._log.snapshot(v), self._log, probe=probe)
+        return self._commit_txn(txn, "setprops", [], [], schema, props=props)
 
     def add_not_null(self, col: str) -> int:
         """NOT NULL enforcement as a named CHECK constraint (the
@@ -1823,96 +1847,64 @@ class LakeTable:
         self._log.write_commit(version, rec)
         return version
 
-    def _commit_checked(
+    def _commit_txn(
         self,
-        base_v: int,
+        txn: Txn,
         op: str,
         adds: list[dict],
         removes: list[str],
         schema: StructType,
-        touched_entries: list[dict],
-        max_rebase: int = 5,
-        read_probe=None,
         props: dict | None = None,
         metrics: dict | None = None,
-    ) -> int:
-        """Commit with Delta-style CONFLICT DETECTION instead of blind
-        failure: when another writer claims our version first, re-read
-        the head and REBASE if the interleaved commits are disjoint
-        from our read set — every entry we read (``touched_entries``)
-        must still be active and byte-identical (same path, same dv
-        state), AND no concurrently-ADDED file may contain rows that
-        match the operation's read predicate/keys. The second check is
-        ``read_probe``: a callable given the interleaved ADD entries
-        (files active at the new head that were not active at
-        ``base_v``) that returns True when any of their rows fall in
-        this operation's read set — exact, because it re-scans just
-        the new files, which is O(interleaved bytes) on the rare
-        rebase path. Without it a merge rebasing over an append that
-        inserted the same key would commit duplicate keys, and a
-        rebased delete would silently leave concurrently-appended
-        matching rows alive — Delta raises ConcurrentAppendException
-        for exactly this case. A concurrent append of NON-matching
-        rows, or a delete/merge on other files, retries cleanly at the
-        new head; a hit raises CommitConflict, because our outputs
-        were derived from a read set that is no longer current.
-
-        ``read_probe=None`` means interleaved appends are known
-        disjoint by construction (compaction: its read set is exactly
-        its target files, and fresh appends can never land in them) —
-        NOT a safe default for predicate/key-scoped ops. Appends
-        themselves don't come through here (commutative — they retry
-        at the new head after re-checking its schema and constraints)."""
-        v = base_v + 1
-        base_paths: set[str] | None = None
-        for _ in range(max_rebase + 1):
-            try:
-                return self._commit(
-                    v, op, adds, removes, schema, props=props, metrics=metrics
-                )
-            except CommitConflict:
-                latest = self.latest_version()
-                _, active, cur_schema = self._snapshot(latest)
-                if cur_schema.jsonValue() != schema.jsonValue():
-                    raise CommitConflict(
-                        f"version {v} taken and the schema evolved "
-                        "concurrently — re-run against the new head"
-                    ) from None
-                # table properties (constraints) changed concurrently:
-                # our batch was validated against the OLD set — conflict
-                # rather than slip under the new rules
-                if self.props(latest) != self.props(base_v):
-                    raise CommitConflict(
-                        f"version {v} taken and table properties changed "
-                        "concurrently — re-run against the new head"
-                    ) from None
-                by_path = {a["path"]: a for a in active}
-                for e in touched_entries:
-                    if by_path.get(e["path"]) != e:
-                        raise CommitConflict(
-                            f"version {v} taken and a concurrent commit "
-                            f"modified {e['path']} — re-run against the "
-                            "new head"
-                        ) from None
-                if read_probe is not None:
-                    if base_paths is None:
-                        _, base_active, _ = self._snapshot(base_v)
-                        base_paths = {a["path"] for a in base_active}
-                    interleaved = [
-                        a for a in active if a["path"] not in base_paths
-                    ]
-                    if interleaved and read_probe(interleaved):
-                        raise CommitConflict(
-                            f"version {v} taken and a concurrent append "
-                            "added rows matching this operation's read "
-                            "set — re-run against the new head "
-                            "(ConcurrentAppendException parity)"
-                        ) from None
-                v = latest + 1
-        raise CommitConflict(
-            f"gave up after {max_rebase} rebases (heavy concurrent write "
-            "traffic) — re-run against the new head"
+    ) -> int | None:
+        """:meth:`_commit` through ``txn``'s retry loop. The txn marker
+        rides the commit record itself, so a crash can never separate
+        "data visible" from "batch recorded"."""
+        mark = txn.marker and {"app": txn.marker[0], "batch": txn.marker[1]}
+        return txn.commit(
+            lambda v, s: self._commit(
+                v, op, adds, removes, s, txn=mark, props=props, metrics=metrics
+            ),
+            schema,
         )
+
+    def _append_recheck(
+        self, wrote: dict, cons: dict, rows, props_base=None, schema_at=None
+    ):
+        """The lost-race re-check of every append-shaped writer, as a
+        :class:`Txn` ``recheck``. At the new head: the identity
+        watermark must not have moved (``props_base``: the props the
+        batch's ids were reserved against; any prop moving refuses, as
+        the ids or the committed props would be stale); each batch
+        column must keep the physical name and generation expression
+        its files were written under (``wrote``: a drop + re-add that
+        recycles the name, or a column turned GENERATED, conflicts);
+        CHECK constraints that moved are re-validated over
+        ``rows(schema)``, so a racing ADD CONSTRAINT can't let a
+        validated violating batch slip under it. ``schema_at(head)`` is
+        the schema to commit (default the head's) and raises when the
+        batch no longer fits it."""
+
+        def recheck(head: Snapshot) -> StructType:
+            nonlocal cons
+            if props_base is not None and head.props != props_base:
+                raise CommitConflict(
+                    "identity watermark or table properties moved "
+                    "concurrently — re-run against the new head"
+                )
+            schema = head.schema if schema_at is None else schema_at(head)
+            if _bindings(schema, wrote) != wrote:
+                raise CommitConflict(
+                    "column mapping or generated columns changed "
+                    "concurrently — re-run against the new head"
+                )
+            now = _constraints(head.props)
+            if now != cons:
+                self._check_constraints(rows(schema), now)
+                cons = now
+            return schema
+
+        return recheck
 
     # ---------------------------------------------------------- data I/O
     def _partition_phys(self, version: int | None = None) -> list[str]:
@@ -2020,26 +2012,12 @@ class LakeTable:
             df = _size_coalesce(df)
             df.write.mode("overwrite").parquet(tmp)
             observed = _validated(tmp)
-            adds = []
-            for fname in sorted(os.listdir(tmp)):
-                if not fname.endswith(".parquet"):
-                    continue
-                new = f"{uuid.uuid4().hex}.parquet"
-                abs_new = os.path.join(self._data_dir, new)
-                os.rename(os.path.join(tmp, fname), abs_new)
-                rows, stats, nulls = _file_stats(abs_new)
-                if rows == 0:  # empty split — schema lives in the log, skip
-                    os.remove(abs_new)
-                    continue
-                adds.append(
-                    {
-                        "path": f"{_DATA}/{new}",
-                        "rows": rows,
-                        "bytes": os.path.getsize(abs_new),
-                        "stats": stats,
-                        "nulls": nulls,
-                    }
-                )
+            adds = [
+                self._land(os.path.join(tmp, fname))
+                for fname in sorted(os.listdir(tmp))
+                if fname.endswith(".parquet")
+            ]
+            adds = [a for a in adds if a is not None]
             shutil.rmtree(tmp)
             return (adds, observed) if observe else adds
         from urllib.parse import unquote
@@ -2137,45 +2115,54 @@ class LakeTable:
                 else:
                     conv = _part_converter(types[name]) if name in types else str
                     part[name] = _json_safe(conv(unquote(raw)))
-            rel_dir = "/".join(segs)
-            os.makedirs(os.path.join(self._data_dir, rel_dir), exist_ok=True)
             for fname in sorted(files):
-                if not fname.endswith(".parquet"):
-                    continue
-                new = f"{uuid.uuid4().hex}.parquet"
-                abs_new = os.path.join(self._data_dir, rel_dir, new)
-                os.rename(os.path.join(dirpath, fname), abs_new)
-                rows, stats, nulls = _file_stats(abs_new)
-                if rows == 0:
-                    os.remove(abs_new)
-                    continue
-                # exact partition stats: min == max == the value; NULL
-                # partitions carry nulls == rows so IS NULL skipping
-                # prunes them too. Timestamps are excluded (their
-                # string form is format-ambiguous — a mixed-format
-                # compare could FALSE-skip); booleans aren't rangeable.
-                for p in partition_phys:
-                    v = part[p]
-                    if v is None:
-                        nulls[p] = rows
-                    else:
-                        nulls[p] = 0
-                        if not isinstance(v, bool) and not types[
-                            p
-                        ].simpleString().startswith("timestamp"):
-                            stats[p] = [v, v]
-                adds.append(
-                    {
-                        "path": f"{_DATA}/{rel_dir}/{new}",
-                        "rows": rows,
-                        "bytes": os.path.getsize(abs_new),
-                        "stats": stats,
-                        "nulls": nulls,
-                        "partition": dict(part),
-                    }
-                )
+                if fname.endswith(".parquet"):
+                    a = self._land(os.path.join(dirpath, fname), segs, part, types)
+                    if a is not None:
+                        adds.append(a)
         shutil.rmtree(tmp)
         return (adds, observed) if observe else adds
+
+    def _land(
+        self, src: str, segs=(), part: dict | None = None, types=None
+    ) -> dict | None:
+        """Move the written parquet file ``src`` into data/ (under the
+        hive dirs ``segs``) with a fresh uuid name and return its add
+        entry with footer stats, or None for an empty file (removed —
+        the schema lives in the log). ``part``: {physical column: typed
+        value} of a partitioned file, ``types`` their data types."""
+        rel = "/".join([_DATA, *segs, f"{uuid.uuid4().hex}.parquet"])
+        abs_new = self._abs(rel)
+        os.makedirs(os.path.dirname(abs_new), exist_ok=True)
+        os.rename(src, abs_new)
+        rows, stats, nulls = _file_stats(abs_new)
+        if rows == 0:
+            os.remove(abs_new)
+            return None
+        entry = {
+            "path": rel,
+            "rows": rows,
+            "bytes": os.path.getsize(abs_new),
+            "stats": stats,
+            "nulls": nulls,
+        }
+        if part is not None:
+            # exact partition stats: min == max == the value; NULL
+            # partitions carry nulls == rows so IS NULL skipping prunes
+            # them too. Timestamps are excluded (their string form is
+            # format-ambiguous — a mixed-format compare could
+            # FALSE-skip); booleans aren't rangeable.
+            for p, v in part.items():
+                if v is None:
+                    nulls[p] = rows
+                else:
+                    nulls[p] = 0
+                    if not isinstance(v, bool) and not types[
+                        p
+                    ].simpleString().startswith("timestamp"):
+                        stats[p] = [v, v]
+            entry["partition"] = dict(part)
+        return entry
 
     def _abs(self, rel: str) -> str:
         return os.path.join(self.path, rel)
@@ -2837,7 +2824,8 @@ class LakeTable:
         those paths); every other file is untouched, so the rewrite
         cost is O(qualifying bytes), not O(table). Returns what
         happened."""
-        v0, active, schema = self._snapshot()
+        snap = self._readable_snapshot()
+        active, schema = snap.entries, snap.schema
         small = [a for a in active if int(a.get("bytes", 0)) < small_file_bytes]
         # The tombstone-ratio test applies to EVERY vectored file, small
         # or large: a small file with a ~100% vector would otherwise
@@ -2872,21 +2860,15 @@ class LakeTable:
         # DV-aware read: compacting a vectored file folds its deletions
         # into the rewrite (the new files carry no dv entry); liquid
         # clustering columns apply to the rewrite when set
-        df = self._read_entries(targets, schema)
-        cc = self.clustering_columns(v0)
-        if len(cc) > 1:
-            from .sinks.maintenance import zorder_by
-
-            df = zorder_by(df, cc, int(nfiles))
-        elif cc:
-            df = df.repartitionByRange(
-                int(nfiles), F.col(cc[0])
-            ).sortWithinPartitions(cc[0])
-        else:
-            df = df.coalesce(int(nfiles))
+        df = _cluster_layout(
+            self._read_entries(targets, schema),
+            self.clustering_columns(snap.version),
+            int(nfiles),
+        )
         adds = self._write_files(df, schema)
-        v = self._commit_checked(
-            v0, "compact", adds, target_paths, schema, targets
+        v = self._commit_txn(
+            Txn(snap, self._log, touched=targets),
+            "compact", adds, target_paths, schema,
         )
         return {
             "compacted": True,
@@ -2914,6 +2896,63 @@ class LakeTable:
         append's retry silently revert a column a concurrent
         merge_schema append just added (the snapshot schema is always
         the last commit's)."""
+        return self._append(df, merge_schema)
+
+    def last_committed_batch(self, app_id: str) -> int | None:
+        """Highest streaming batch id committed by ``app_id`` — the txn
+        mark the latest snapshot carries (checkpoints record it)."""
+        return self._log.snapshot().txns.get(app_id)
+
+    def append_stream_batch(self, df: DataFrame, app_id: str, batch_id: int) -> int | None:
+        """Idempotent streaming append (the Delta ``txnAppId`` pattern):
+        each commit records (app_id, batch_id); a replayed foreachBatch
+        micro-batch — Structured Streaming is at-least-once after
+        restarts — sees its batch id already in the log and becomes a
+        no-op, upgrading the sink to exactly-once. Returns the commit
+        version, or None if the batch was already applied. The batch
+        may carry a column subset (missing columns read back NULL);
+        the commit records the TABLE's schema, never a narrower one."""
+        return self._append(df, False, (app_id, int(batch_id)))
+
+    def _prepare_batch(self, df: DataFrame, snap: Snapshot) -> tuple:
+        """The front of a batch write against the pinned ``snap``:
+        reserved names refused; generated and DEFAULT columns
+        materialized (or validated) BEFORE constraint validation, which
+        may reference them; identity ids assigned from the watermark in
+        props (the new mark is observed on the write job and committed
+        with it); CHECK validation fused into the write job (one pass,
+        guide §1.2; a violation aborts before any file lands in data/).
+        Returns ``(df, props_base, fin_id, observe, validate)``;
+        ``props_base`` is None without identity columns."""
+        _check_reserved(df.schema)
+        df = self._apply_generated(df, snap.schema)
+        df = self._apply_defaults(df, snap.schema)
+        props_base, fin_id = None, None
+        if any(_identity_spec(f) for f in snap.schema.fields):
+            props_base = dict(snap.props)
+            df, fin_id = self._assign_identity(df, snap.schema, props_base)
+        obs_c, val_c = self._fused_constraints(df, _constraints(snap.props))
+        return df, props_base, fin_id, obs_c, val_c
+
+    def _append(
+        self,
+        df: DataFrame,
+        merge_schema: bool,
+        marker: tuple[str, int] | None = None,
+    ) -> int | None:
+        """The body of :meth:`append`; with ``marker`` ``(app_id,
+        batch)``, of :meth:`append_stream_batch`."""
+        # pinned BEFORE validation: a commit interleaving after this
+        # point makes the Txn re-check the batch at the new head
+        snap = self._readable_snapshot()
+        if marker is not None and snap.txns.get(marker[0], -1) >= marker[1]:
+            # a replayed batch: no write and no validation scan — it was
+            # validated when it first committed
+            return None
+        who = "append" if marker is None else "stream batch"
+        # a replayed stream batch deduped above, so it never re-assigns
+        # identity ids
+        df, props_base, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
 
         # Physical names assigned to NEW columns (column mapping): a new
         # column whose name collides with any physical name in use — or
@@ -2923,11 +2962,10 @@ class LakeTable:
         # retries (files are written once).
         assigned: dict[str, str] = {}
 
-        def _union_schema() -> StructType:
-            v_, _, cur = self._snapshot()
-            cur_by_name = {f.name: f for f in cur.fields}
-            used = {_phys(f) for f in cur.fields} | set(
-                json.loads(self.props(v_).get(_DROPPED_PROP, "[]"))
+        def union(s: Snapshot) -> StructType:
+            cur_by_name = {f.name: f for f in s.schema.fields}
+            used = {_phys(f) for f in s.schema.fields} | set(
+                json.loads(s.props.get(_DROPPED_PROP, "[]"))
             )
             new_fields = []
             for f in df.schema.fields:
@@ -2953,234 +2991,40 @@ class LakeTable:
                     new_fields.append(f)
                 elif have.dataType != f.dataType:
                     raise ValueError(
-                        f"append schema mismatch on '{f.name}': table has "
+                        f"{who} schema mismatch on '{f.name}': table has "
                         f"{have.dataType.simpleString()}, batch has {f.dataType.simpleString()}"
                     )
             if new_fields and not merge_schema:
                 raise ValueError(
-                    f"append adds columns {[f.name for f in new_fields]}; pass "
-                    "merge_schema=True to evolve the table schema"
+                    f"{who} adds unknown column(s) "
+                    f"{[f.name for f in new_fields]}; evolve the table "
+                    "schema with append(merge_schema=True) first"
                 )
             return (
-                StructType(list(cur.fields) + new_fields) if new_fields else cur
+                StructType(list(s.schema.fields) + new_fields)
+                if new_fields
+                else s.schema
             )
 
-        _check_reserved(df.schema)
-        # generated columns materialize (or validate) against the
-        # pre-append schema, BEFORE constraint validation (constraints
-        # may reference them)
-        cur_schema = self._snapshot()[2]
-        df = self._apply_generated(df, cur_schema)
-        df = self._apply_defaults(df, cur_schema)
-        # identity columns: engine-assigned from the high-water mark in
-        # props; the new mark is captured by an Observation on the
-        # write job and committed WITH this append (a concurrent
-        # assigning writer moves the mark first → loud conflict below)
-        id_names = [f.name for f in cur_schema.fields if _identity_spec(f)]
-        fin_id, props_base = None, None
-        if id_names:
-            props_base = self.props()
-            df, fin_id = self._assign_identity(df, cur_schema, props_base)
-        # The base version is PINNED BEFORE validation and the target
-        # is never re-read inside _commit: any commit interleaving
-        # after this point forces the except-branch, which re-validates
-        # against the NEW head's schema AND constraints — a racing
-        # ADD CONSTRAINT can't let an already-validated violating
-        # batch slip under it
-        v = self.latest_version() + 1
-        cons = self.constraints(v - 1)
-        # constraint validation rides the write job itself (one pass,
-        # guide §1.2); violations abort before any file lands in data/
-        obs_c, val_c = self._fused_constraints(df, cons)
-        schema = _union_schema()
+        schema = union(snap)
         # physical names the files are written with — pinned; a retry
-        # whose recomputed schema maps any batch column elsewhere (a
-        # concurrent drop+re-add recycled the logical name) must
+        # whose recomputed schema maps any batch column elsewhere must
         # conflict, not silently commit files the mapping can't see
-        wrote = {
-            f.name: (_phys(f), _gen_expr(f))
-            for f in schema.fields
-            if f.name in df.columns
-        }
+        wrote = _bindings(schema, df.columns)
         if obs_c:
             adds, _ = self._write_files(
                 df, schema, observe=obs_c, validate=val_c
             )
         else:
             adds = self._write_files(df, schema)
-        n_appended = sum(int(a.get("rows", 0)) for a in adds)
-        commit_props = fin_id(dict(props_base)) if fin_id is not None else None
-        for _ in range(COMMIT_ATTEMPTS):
-            try:
-                return self._commit(
-                    v, "append", adds, [], schema,
-                    props=commit_props,
-                    metrics={"rows_appended": n_appended},
-                )
-            except CommitConflict:
-                if id_names:
-                    # our files carry ids reserved against props_base's
-                    # watermark — if ANY prop moved concurrently (another
-                    # assigning writer, a constraint change), the
-                    # reservation is stale: refuse rather than commit
-                    # colliding ids or stale props
-                    if self.props() != props_base:
-                        raise CommitConflict(
-                            "identity watermark or table properties moved "
-                            "concurrently — re-run against the new head"
-                        ) from None
-                schema = _union_schema()  # re-merge vs the racing commit
-                now = {
-                    f.name: (_phys(f), _gen_expr(f))
-                    for f in schema.fields
-                    if f.name in df.columns
-                }
-                if now != wrote:
-                    # mapping moved, or one of OUR columns became
-                    # GENERATED mid-flight (a racing
-                    # add_generated_column): the files were never
-                    # validated against the new expression
-                    raise CommitConflict(
-                        "column mapping or generated columns changed "
-                        "concurrently — re-run against the new head"
-                    ) from None
-                latest_cons = self.constraints()
-                if latest_cons != cons:  # racing ADD CONSTRAINT: re-check
-                    self._check_constraints(df, latest_cons)
-                    cons = latest_cons
-                v = self.latest_version() + 1
-        raise CommitConflict(
-            f"append lost {COMMIT_ATTEMPTS} consecutive commit races"
+        recheck = self._append_recheck(
+            wrote, _constraints(snap.props), lambda _: df, props_base, union
         )
-
-    def last_committed_batch(self, app_id: str) -> int | None:
-        """Highest streaming batch id committed by ``app_id`` (scans
-        the commit log's txn markers; the log is O(commits) small and
-        checkpoint-compatible since markers ride the commits)."""
-        best = None
-        for v in self._log.versions():
-            txn = self._log.read_commit(v).get("txn")
-            if txn and txn.get("app") == app_id:
-                if best is None or txn["batch"] > best:
-                    best = txn["batch"]
-        return best
-
-    def append_stream_batch(self, df: DataFrame, app_id: str, batch_id: int) -> int | None:
-        """Idempotent streaming append (the Delta ``txnAppId`` pattern):
-        each commit records (app_id, batch_id); a replayed foreachBatch
-        micro-batch — Structured Streaming is at-least-once after
-        restarts — sees its batch id already in the log and becomes a
-        no-op, upgrading the sink to exactly-once. Returns the commit
-        version, or None if the batch was already applied."""
-        _check_reserved(df.schema)
-        v = self.latest_version()  # pinned BEFORE validation (see append)
-        # Commit the TABLE's schema, not the batch's: the batch may
-        # carry a column subset (missing columns read back NULL), and
-        # the table schema is what carries column-mapping metadata — a
-        # batch-schema commit would both narrow the table and orphan
-        # renamed columns' physical names.
-        _, _, schema = self._snapshot(v)
-        df = self._apply_generated(df, schema)
-        df = self._apply_defaults(df, schema)
-        # identity: assigned per batch; replayed batches dedupe on the
-        # txn marker BEFORE committing, so a replay never re-assigns
-        id_names = [f.name for f in schema.fields if _identity_spec(f)]
-        fin_id, id_props_base = None, None
-        if id_names:
-            id_props_base = self.props(v)
-            df, fin_id = self._assign_identity(df, schema, id_props_base)
-        cons = self.constraints(v)
-        # fused into the write below (guide §1.2); a replayed batch
-        # (dedup return) skips straight to its no-op without a
-        # validation scan — it was validated when it first committed
-        obs_c, val_c = self._fused_constraints(df, cons)
-        last = self.last_committed_batch(app_id)
-        if last is not None and batch_id <= last:
-            return None
-        by_name = {f.name: f for f in schema.fields}
-        for f in df.schema.fields:
-            have = by_name.get(f.name)
-            if have is None:
-                raise ValueError(
-                    f"stream batch adds unknown column {f.name!r}; evolve "
-                    "the table schema with append(merge_schema=True) first"
-                )
-            if have.dataType != f.dataType:
-                raise ValueError(
-                    f"stream batch schema mismatch on '{f.name}': table has "
-                    f"{have.dataType.simpleString()}, batch has "
-                    f"{f.dataType.simpleString()}"
-                )
-        if obs_c:
-            adds, _ = self._write_files(
-                df, schema, observe=obs_c, validate=val_c
-            )
-        else:
-            adds = self._write_files(df, schema)
-        # The txn marker rides the commit record itself, so a crash can
-        # never separate "data visible" from "batch recorded" — replay
-        # after any crash point is correct (either the commit exists
-        # with its marker, or neither does and the batch re-applies).
-        # Retries live HERE (not in _commit) so a lost race re-checks
-        # constraints a concurrent ADD CONSTRAINT may have added.
-        txn = {"app": app_id, "batch": int(batch_id)}
-        batch_cols = set(df.columns)
-        wrote = {
-            f.name: (_phys(f), _gen_expr(f))
-            for f in schema.fields
-            if f.name in batch_cols
-        }
-        n_appended = sum(int(a.get("rows", 0)) for a in adds)
-        stream_props = (
-            fin_id(dict(id_props_base)) if fin_id is not None else None
-        )
-        for _ in range(COMMIT_ATTEMPTS):
-            try:
-                return self._commit(
-                    v + 1, "append", adds, [], schema, txn=txn,
-                    props=stream_props,
-                    metrics={"rows_appended": n_appended},
-                )
-            except CommitConflict:
-                # a RACING WRITER with the same (app_id, batch_id) — a
-                # zombie driver beside its replacement — may have just
-                # committed this very batch; committing again would
-                # double-apply it, so the dedup check re-runs on every
-                # retry, not only at entry
-                last = self.last_committed_batch(app_id)
-                if last is not None and batch_id <= last:
-                    return None
-                if id_names and self.props() != id_props_base:
-                    # our files carry ids reserved against a stale
-                    # watermark — refuse; the batch re-applies on restart
-                    raise CommitConflict(
-                        "identity watermark or table properties moved "
-                        "concurrently — the stream batch will re-apply "
-                        "on restart"
-                    ) from None
-                latest_cons = self.constraints()
-                if latest_cons != cons:
-                    self._check_constraints(df, latest_cons)
-                    cons = latest_cons
-                v = self.latest_version()
-                # rebase onto the new head's schema (a concurrent
-                # widening append must not be reverted by our retry);
-                # conflict only if OUR batch columns moved, vanished, or
-                # became GENERATED (our files were never validated
-                # against the new expression)
-                _, _, schema = self._snapshot(v)
-                now = {
-                    f.name: (_phys(f), _gen_expr(f))
-                    for f in schema.fields
-                    if f.name in batch_cols
-                }
-                if now != wrote:
-                    raise CommitConflict(
-                        "schema or column mapping changed concurrently — "
-                        "the stream batch will re-apply on restart"
-                    ) from None
-        raise CommitConflict(
-            f"append_stream_batch lost {COMMIT_ATTEMPTS} consecutive commit races"
+        return self._commit_txn(
+            Txn(snap, self._log, blind=True, marker=marker, recheck=recheck),
+            "append", adds, [], schema,
+            props=fin_id(dict(props_base)) if fin_id is not None else None,
+            metrics={"rows_appended": sum(int(a.get("rows", 0)) for a in adds)},
         )
 
     def overwrite(self, df: DataFrame) -> int:
@@ -3278,13 +3122,9 @@ class LakeTable:
             before = dict(props)
             props = fin_id(props)
             changed = changed or props != before
-        if changed:
-            return self._commit(
-                v + 1, "overwrite", adds, [a["path"] for a in active],
-                schema, props=props,
-            )
         return self._commit(
-            v + 1, "overwrite", adds, [a["path"] for a in active], schema
+            v + 1, "overwrite", adds, [a["path"] for a in active], schema,
+            props=props if changed else None,
         )
 
     def partitions(self, version: int | None = None) -> list[dict]:
@@ -3414,16 +3254,11 @@ class LakeTable:
         travel and the change feed (delete+insert derivation) work
         unchanged. Concurrent appends INTO a matched partition
         conflict (metadata read-probe); appends elsewhere commute."""
-        v, active, schema = self._snapshot()
+        snap = self._readable_snapshot()
+        v, active, schema = snap.version, snap.entries, snap.schema
         if not self._partition_phys(v):
             raise ValueError("replace_where requires a partitioned table")
-        _check_reserved(df.schema)
-        df = self._apply_generated(df, schema)
-        df = self._apply_defaults(df, schema)
-        fin_id, id_props_base = None, None
-        if any(_identity_spec(f) for f in schema.fields):
-            id_props_base = self.props(v)
-            df, fin_id = self._assign_identity(df, schema, id_props_base)
+        df, id_props_base, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
         # constraint + stray-row validation both ride the write job
         # below (guide §1.2: two standalone scans of the batch fold
         # into the write's single pass); either violation aborts before
@@ -3436,7 +3271,6 @@ class LakeTable:
         # rejection — both rejections are loud ValueErrors and the
         # table state is identical (nothing lands), so the saved scan
         # on every VALID batch wins.
-        obs_c, val_c = self._fused_constraints(df)
         # NULL predicate rows are OUTSIDE the region (SQL boolean)
         stray_pred = F.expr(f"coalesce(not ({predicate}), true)")
         obs_c["_stray"] = F.sum(stray_pred.cast("bigint"))
@@ -3484,9 +3318,9 @@ class LakeTable:
         probe = lambda ents: bool(  # noqa: E731 — metadata-only probe
             self._matching_entries(ents, predicate, schema)
         )
-        return self._commit_checked(
-            v, "overwrite", adds, [a["path"] for a in targets], schema,
-            targets, read_probe=probe,
+        return self._commit_txn(
+            Txn(snap, self._log, touched=targets, probe=probe),
+            "overwrite", adds, [a["path"] for a in targets], schema,
             props=fin_id(dict(id_props_base)) if fin_id is not None else None,
             metrics={
                 "rows_written": n_rows,
@@ -3509,20 +3343,14 @@ class LakeTable:
         table). One atomic commit; file selection is metadata-only
         (partition values recorded on add entries); concurrent appends
         into an overwritten partition conflict, elsewhere commute."""
-        v, active, schema = self._snapshot()
+        snap = self._readable_snapshot()
+        v, active, schema = snap.version, snap.entries, snap.schema
         pp = self._partition_phys(v)
         if not pp:
             raise ValueError(
                 "overwrite_partitions requires a partitioned table"
             )
-        _check_reserved(df.schema)
-        df = self._apply_generated(df, schema)
-        df = self._apply_defaults(df, schema)
-        fin_id, id_props_base = None, None
-        if any(_identity_spec(f) for f in schema.fields):
-            id_props_base = self.props(v)
-            df, fin_id = self._assign_identity(df, schema, id_props_base)
-        obs_c, val_c = self._fused_constraints(df)  # rides the write
+        df, id_props_base, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
         if obs_c:
             adds, _ = self._write_files(
                 df, schema, observe=obs_c, validate=val_c
@@ -3572,9 +3400,9 @@ class LakeTable:
         probe = lambda ents: any(  # noqa: E731 — metadata-only probe
             key_of(e) in new_keys for e in ents
         )
-        return self._commit_checked(
-            v, "overwrite", adds, [a["path"] for a in targets], schema,
-            targets, read_probe=probe,
+        return self._commit_txn(
+            Txn(snap, self._log, touched=targets, probe=probe),
+            "overwrite", adds, [a["path"] for a in targets], schema,
             props=fin_id(dict(id_props_base)) if fin_id is not None else None,
             metrics={
                 "rows_written": sum(int(a.get("rows", 0)) for a in adds),
@@ -4451,7 +4279,7 @@ class LakeTable:
         ``rows``: the replacement rows (updated and inserted) both modes
         write; ``checks`` = ``(observe, validate)`` rides that write
         (:meth:`_fused_constraints`) and sees only these rows.
-        ``dv=True`` vectors the acted rows out (:meth:`_commit_dv`).
+        ``dv=True`` vectors the acted rows out (:meth:`_dv_entries`).
         Copy-on-write writes the touched files' kept rows — ``keep``
         over a ``keep_meta`` read of them: the negated filter or the
         anti-join on the same keys or positions — next to ``rows``.
@@ -4499,14 +4327,11 @@ class LakeTable:
                 > 0
             )
             if dv and t_entries:
-                new_v = self._commit_dv(
-                    v, op, t_entries, per_file, acted, schema, adds, probe, m, p
-                )
-            else:
-                new_v = self._commit_checked(
-                    v, op, adds, sorted(per_file), schema, t_entries,
-                    read_probe=probe, metrics=m, props=p,
-                )
+                adds = self._dv_entries(t_entries, per_file, acted) + adds
+            txn = Txn(self._log.snapshot(v), self._log, touched=t_entries, probe=probe)
+            new_v = self._commit_txn(
+                txn, op, adds, sorted(per_file), schema, metrics=m, props=p
+            )
             if feed is not None:
                 self._write_cdf(new_v, feed, schema)
             return {**m, "version": new_v}
@@ -4530,7 +4355,7 @@ class LakeTable:
         the caller's snapshot (not the latest) matters for the rebase
         path: if a concurrent commit rewrites a touched file between
         our snapshot and here, latest-resolution would silently DROP
-        that file from the read set and _commit_checked's validation
+        that file from the read set and the Txn's read-set check
         would pass — a lost delete/update. Against our own snapshot
         the file stays in the read set and the validation raises
         CommitConflict, as it must.
@@ -4549,30 +4374,24 @@ class LakeTable:
             if (base := os.path.basename(r["_dv_base"])) in by_base
         }
 
-    def _commit_dv(
+    def _dv_entries(
         self,
-        v: int,
-        op: str,
         t_entries: list[dict],
         per_file: dict[str, int],
         acted: DataFrame,
-        schema: StructType,
-        extra_adds: list[dict],
-        read_probe,
-        metrics: dict,
-        props: dict | None,
-    ) -> int:
-        """Deletion-vector commit: ONE new sidecar holds the touched
-        entries' existing vectors plus the newly acted (base, pos)
-        rows, and each touched entry is re-added pointing at it (remove
-        + add of the same path — the data file itself never moves), so
-        a chain of small deletes never accumulates a per-file sidecar
-        list. ``acted`` was read with the existing vectors applied, so
-        its positions never repeat one of them: each entry's ``ndel``
-        is its prior ``ndel`` plus its ``per_file`` count.
-        ``extra_adds``: fresh data files committed alongside (update
-        and merge output), so readers never observe vectored-out rows
-        without their replacements."""
+    ) -> list[dict]:
+        """Deletion vectors for a commit: ONE new sidecar holds the
+        touched entries' existing vectors plus the newly acted (base,
+        pos) rows, and each touched entry is re-added pointing at it
+        (remove + add of the same path — the data file itself never
+        moves), so a chain of small deletes never accumulates a
+        per-file sidecar list. ``acted`` was read with the existing
+        vectors applied, so its positions never repeat one of them:
+        each entry's ``ndel`` is its prior ``ndel`` plus its
+        ``per_file`` count. Returns the re-added entries; the caller
+        commits them with its fresh data files (update and merge
+        output), so readers never observe vectored-out rows without
+        their replacements."""
         new_pos = acted.select("_dv_base", "_dv_pos")
         prior = self._active_dv_positions(t_entries)
         if prior is not None:
@@ -4594,10 +4413,7 @@ class LakeTable:
             # 100%-dead file (Delta does the same)
             if ndel < int(a.get("rows", 0)):
                 adds.append({**a, "dv": {"path": f"{_DV}/{dv_name}", "ndel": ndel}})
-        return self._commit_checked(
-            v, op, adds + extra_adds, [a["path"] for a in t_entries], schema,
-            t_entries, read_probe=read_probe, metrics=metrics, props=props,
-        )
+        return adds
 
     # ---------------------------------------------------------- CDF
     def _cdf_lineage(
@@ -4605,7 +4421,7 @@ class LakeTable:
         era: StructType,
         v: int,
         current: StructType,
-        overwrites: list[int],
+        overwrites: tuple[int, ...],
     ) -> dict[str, str]:
         """{current logical name: era PHYSICAL column} for every
         current column whose LINEAGE reaches back to the era at
@@ -4617,7 +4433,7 @@ class LakeTable:
         surviving lineage simply doesn't appear — its feed values
         render NULL, never someone else's bytes. ``overwrites``: the
         overwrite versions up to ``current``'s version
-        (``TableLog.overwrite_versions``)."""
+        (``Snapshot.overwrites``)."""
         boundaries = [w for w in overwrites if w > v]
 
         def schema_at(x: int) -> StructType:
@@ -4724,9 +4540,9 @@ class LakeTable:
             if to_version is not None:
                 raise ValueError("pass to_version OR to_timestamp")
             to_version = self.version_at(to_timestamp)
-        now, _, schema = self._snapshot()
+        snap = self._readable_snapshot()
+        now, schema, overwrites = snap.version, snap.schema, snap.overwrites
         hi = now if to_version is None else to_version
-        overwrites = self._log.overwrite_versions(now)
         schema_json = schema.jsonValue()
 
         def _era_read(entries: list[dict], era: StructType, era_v: int) -> DataFrame:
@@ -4967,49 +4783,35 @@ class LakeTable:
         With ``cluster_by=None`` the table's LIQUID clustering columns
         (``clusterBy`` property) apply automatically — OPTIMIZE on a
         clustered table is re-clustering by default."""
-        v, active, schema = self._snapshot()
+        snap = self._readable_snapshot()
+        v, targets, schema = snap.version, snap.entries, snap.schema
         if cluster_by is None:
-            cc = self.clustering_columns(v)
-            if cc:
-                cluster_by = cc if len(cc) > 1 else cc[0]
+            cols = self.clustering_columns(v)
+        elif isinstance(cluster_by, str):
+            cols = [cluster_by]
+        else:
+            cols = list(cluster_by)
+        metrics = None
         if where is not None:
             if not self._partition_phys(v):
                 raise ValueError(
                     "compact(where=...) requires a partitioned table"
                 )
-            targets = self._matching_entries(active, where, schema)
+            targets = self._matching_entries(targets, where, schema)
             if not targets:
                 return v
-            df = self._read_entries(targets, schema)
-            if isinstance(cluster_by, list) and len(cluster_by) > 1:
-                from .sinks.maintenance import zorder_by
-
-                df = zorder_by(df, cluster_by, target_files)
-            elif cluster_by:
-                col = cluster_by[0] if isinstance(cluster_by, list) else cluster_by
-                df = df.repartitionByRange(
-                    target_files, F.col(col)
-                ).sortWithinPartitions(col)
-            else:
-                df = df.coalesce(target_files)
-            adds = self._write_files(df, schema)
-            return self._commit_checked(
-                v, "compact", adds, [a["path"] for a in targets], schema,
-                targets,
-                metrics={"files_compacted": len(targets), "predicate": where},
-            )
-        df = self.read(v)
-        if isinstance(cluster_by, list) and len(cluster_by) > 1:
-            from .sinks.maintenance import zorder_by
-
-            df = zorder_by(df, cluster_by, target_files)
-        elif cluster_by:
-            col = cluster_by[0] if isinstance(cluster_by, list) else cluster_by
-            df = df.repartitionByRange(target_files, F.col(col)).sortWithinPartitions(col)
-        else:
-            df = df.coalesce(target_files)
+            metrics = {"files_compacted": len(targets), "predicate": where}
+        df = _cluster_layout(
+            self._read_entries(targets, schema), cols, target_files
+        )
         adds = self._write_files(df, schema)
-        return self._commit(v + 1, "compact", adds, [a["path"] for a in active], schema)
+        # the targets are the read set: a concurrent append rebases
+        # cleanly, a concurrent rewrite of a target conflicts
+        return self._commit_txn(
+            Txn(snap, self._log, touched=targets),
+            "compact", adds, [a["path"] for a in targets], schema,
+            metrics=metrics,
+        )
 
     def _verify_files_spark(
         self, active: list[dict]

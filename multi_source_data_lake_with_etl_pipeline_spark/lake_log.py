@@ -11,7 +11,8 @@ A :class:`Snapshot` is the log replayed from the nearest checkpoint. A
 :class:`TableLog` (:meth:`TableLog.at`) owns every read and write of
 one log directory's files; replayed snapshots are cached once per
 (directory, version), so every handle on the same table shares that
-work.
+work. A :class:`Txn` is the one way a writer that may lose a commit
+race publishes: it holds the package's only commit-retry loop.
 
 Cache safety:
 
@@ -40,18 +41,23 @@ import time
 import types
 import uuid
 from collections import OrderedDict
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql.types import StructType
 
 CHECKPOINT_EVERY = 10
+# commit races a Txn re-checks and retries before giving up
+COMMIT_ATTEMPTS = 21
 _POINTER = "_last_checkpoint"
 _SNAPSHOTS_CACHED = 2048
 _COMMITS_CACHED = 8192
 # replay seed of a log with no checkpoint yet
 _NO_CHECKPOINT: Mapping = types.MappingProxyType(
-    {"version": -1, "active": (), "props": types.MappingProxyType({})}
+    {
+        "version": -1, "active": (), "props": types.MappingProxyType({}),
+        "txns": types.MappingProxyType({}), "overwrites": (),
+    }
 )
 
 
@@ -79,7 +85,10 @@ def _dump(rec, f) -> None:
 class Snapshot:
     """Table state at ``version``. ``entries`` are the active add
     entries; ``reader_features``/``writer_features`` are the cumulative
-    protocol stamps of every commit up to ``version``."""
+    protocol stamps of every commit up to ``version``. ``txns`` maps
+    each streaming app to its highest committed batch (Delta's
+    ``SetTransaction``); ``overwrites`` are the versions committed with
+    op ``overwrite``, oldest first."""
 
     version: int
     entries: tuple[Mapping, ...]
@@ -87,6 +96,8 @@ class Snapshot:
     props: Mapping[str, str]
     reader_features: frozenset[str]
     writer_features: frozenset[str]
+    txns: Mapping[str, int]
+    overwrites: tuple[int, ...]
 
 
 class _SigCache:
@@ -174,14 +185,6 @@ class TableLog:
                 _COMMITS.put(self.dir, v, sig, rec)
         return rec
 
-    def overwrite_versions(self, upto: int) -> list[int]:
-        """Versions <= ``upto`` committed by ``overwrite``."""
-        return [
-            v
-            for v in self.versions()
-            if v <= upto and self.read_commit(v)["op"] == "overwrite"
-        ]
-
     def write_commit(self, version: int, rec: dict) -> None:
         """Publish commit ``version`` with O_EXCL (a lost race raises
         :class:`CommitConflict`), then checkpoint on the cadence."""
@@ -252,6 +255,8 @@ class TableLog:
             "props": s.props,
             "features": sorted(s.reader_features),
             "writer_features": sorted(s.writer_features),
+            "txns": s.txns,
+            "overwrites": s.overwrites,
         }
         path = os.path.join(self.dir, f"_checkpoint.{v}.json")
         tmp = path + f".tmp.{uuid.uuid4().hex}"
@@ -338,11 +343,23 @@ class TableLog:
             base = _SNAPSHOTS.get(self.dir, bv, self._sig(bv))
             if base is not None:
                 break
+        txns: dict[str, int] = {}
+        overwrites: list[int] = []
+
+        def fold(cv: int, c: Mapping) -> None:
+            t = c.get("txn")
+            if t and t["batch"] > txns.get(t["app"], -1):
+                txns[t["app"]] = t["batch"]
+            if c["op"] == "overwrite":
+                overwrites.append(cv)
+
         if base is not None:
             start, props = base.version + 1, base.props
             active = {a["path"]: a for a in base.entries}
             feats = set(base.reader_features)
             wfeats = set(base.writer_features)
+            txns.update(base.txns)
+            overwrites.extend(base.overwrites)
         else:
             ck = self.checkpoint_at_or_before(v) or _NO_CHECKPOINT
             start, props = ck["version"] + 1, ck["props"]
@@ -351,6 +368,17 @@ class TableLog:
             # pre-writer-protocol checkpoints lack the key; such tables
             # carry no writer stamps anywhere, so empty is exact
             wfeats = set(ck.get("writer_features") or ())
+            if "txns" in ck:
+                txns.update(ck["txns"])
+                overwrites.extend(ck["overwrites"])
+            else:
+                # a checkpoint written before it recorded the marks:
+                # walk the commits it covers once for them
+                for cv in range(ck["version"] + 1):
+                    try:
+                        fold(cv, self.read_commit(cv))
+                    except FileNotFoundError:
+                        continue
         for cv in range(start, v + 1):
             try:
                 c = self.read_commit(cv)
@@ -363,11 +391,100 @@ class TableLog:
             feats.update(c.get("reader_features", ()))
             wfeats.update(c.get("writer_features", ()))
             props = c.get("props", props)
+            fold(cv, c)
         schema = StructType.fromJson(json.loads(self.read_commit(v)["schema"]))
         snap = Snapshot(
             v, tuple(active.values()), schema, props,
             frozenset(feats), frozenset(wfeats),
+            types.MappingProxyType(txns), tuple(overwrites),
         )
         if sig is not None:
             _SNAPSHOTS.put(self.dir, v, sig, snap)
         return snap
+
+
+@dataclass
+class Txn:
+    """One optimistic transaction, after Delta's ``OptimisticTransaction``:
+    pin a snapshot, record what the op read, write its files, then
+    commit with conflict detection.
+
+    ``touched``: the entries the op read; ``probe``: called with the
+    add entries a concurrent commit interleaved, True when any of their
+    rows fall in the op's read set (None: appends can't land in the
+    read set, e.g. compaction of its target files). A ``blind`` writer
+    (an append) has no read set: appends commute. ``marker``:
+    ``(app_id, batch)`` of an idempotent streaming commit. ``recheck``:
+    ``(head) -> schema to commit``, run at each new head; it raises
+    when the batch no longer fits."""
+
+    snap: Snapshot
+    log: TableLog
+    touched: Sequence[Mapping] = ()
+    probe: Callable[[list], bool] | None = None
+    blind: bool = False
+    marker: tuple[str, int] | None = None
+    recheck: Callable[[Snapshot], StructType] | None = None
+
+    def commit(
+        self, write: Callable[[int, StructType], int], schema: StructType
+    ) -> int | None:
+        """``write(version, schema)`` publishes one version or raises
+        :class:`CommitConflict`. On a lost race read the new head once:
+        the marker already there means a racing writer committed this
+        batch (return None); otherwise the read set must still hold and
+        ``recheck`` must pass, then retry at the head's next version."""
+        v = self.snap.version + 1
+        for _ in range(COMMIT_ATTEMPTS):
+            try:
+                return write(v, schema)
+            except CommitConflict:
+                pass
+            head = self.log.snapshot()
+            if self.marker and head.txns.get(self.marker[0], -1) >= self.marker[1]:
+                return None  # a racing writer committed this very batch
+            if not self.blind:
+                self._check_read_set(head, v)
+            if self.recheck is not None:
+                schema = self.recheck(head)
+            v = head.version + 1
+        raise CommitConflict(
+            f"lost {COMMIT_ATTEMPTS} consecutive commit races (heavy "
+            "concurrent write traffic) — re-run against the new head"
+        )
+
+    def _check_read_set(self, head: Snapshot, v: int) -> None:
+        """Rebase only past commits disjoint from what the op read:
+        same schema and props, every touched entry still active and
+        byte-identical (same path, same vector), and no interleaved add
+        matching the probe — a rebase past an append of matching rows
+        would leave them undeleted or duplicate a key (Delta's
+        ConcurrentAppendException)."""
+        if head.schema.jsonValue() != self.snap.schema.jsonValue():
+            raise CommitConflict(
+                f"version {v} taken and the schema evolved "
+                "concurrently — re-run against the new head"
+            )
+        # our outputs were validated against the old constraints
+        if head.props != self.snap.props:
+            raise CommitConflict(
+                f"version {v} taken and table properties changed "
+                "concurrently — re-run against the new head"
+            )
+        by_path = {a["path"]: a for a in head.entries}
+        for e in self.touched:
+            if by_path.get(e["path"]) != e:
+                raise CommitConflict(
+                    f"version {v} taken and a concurrent commit "
+                    f"modified {e['path']} — re-run against the new head"
+                )
+        if self.probe is not None:
+            pinned = {a["path"] for a in self.snap.entries}
+            interleaved = [a for a in head.entries if a["path"] not in pinned]
+            if interleaved and self.probe(interleaved):
+                raise CommitConflict(
+                    f"version {v} taken and a concurrent append added "
+                    "rows matching this operation's read set — re-run "
+                    "against the new head (ConcurrentAppendException "
+                    "parity)"
+                )

@@ -22,15 +22,17 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..lake import (
-    COMMIT_ATTEMPTS,
-    CommitConflict,
     LakeTable,
+    _bindings,
+    _constraints,
     _default_expr,
     _gen_expr,
     _identity_spec,
 )
+from ..lake_log import Snapshot, Txn
 from ..operators.validation import Expectation, expectation_suite
 
 
@@ -74,17 +76,12 @@ def write_audit_publish(
     _, active, staged_schema = staged._snapshot()
     adds = [{**a, "path": staged._abs(a["path"])} for a in active]
     staged_names = {f.name for f in staged_schema.fields}
-    # Like append: pin the head, check the batch against the schema and
-    # CHECK constraints AT that version, commit the next one; a lost
-    # race re-checks against the new head (a racing merge_schema append
-    # must not be reverted, nor a racing ADD CONSTRAINT slipped under).
-    checked = None
-    for _ in range(COMMIT_ATTEMPTS):
-        v, _, prod_schema = prod._snapshot()
-        prod_types = {f.name: f.dataType for f in prod_schema.fields}
+
+    def fits(snap: Snapshot) -> StructType:
         # the staged files are published as written, so nothing computes
         # a column they lack: only plain columns may be omitted
-        omitted = [f for f in prod_schema.fields if f.name not in staged_names]
+        prod_types = {f.name: f.dataType for f in snap.schema.fields}
+        omitted = [f for f in snap.schema.fields if f.name not in staged_names]
         if any(
             prod_types.get(f.name) != f.dataType for f in staged_schema.fields
         ) or any(_gen_expr(f) or _identity_spec(f) or _default_expr(f) for f in omitted):
@@ -92,19 +89,34 @@ def write_audit_publish(
                 "WAP publish: staged columns must exist in production with "
                 "the same types, and may omit only columns no write "
                 "computes (generated, identity, default): "
-                f"{staged_schema.simpleString()} vs {prod_schema.simpleString()}"
+                f"{staged_schema.simpleString()} vs {snap.schema.simpleString()}"
             )
-        cons = prod.constraints(v)
-        if (cons, prod_schema) != checked:
-            # the rows as production will read them: omitted columns NULL
-            null_cols = [F.lit(None).cast(f.dataType).alias(f.name) for f in omitted]
-            prod._check_constraints(staged_df.select("*", *null_cols), cons)
-            checked = (cons, prod_schema)
-        try:
-            v = prod._commit(v + 1, "append", adds, [], prod_schema)
-        except CommitConflict:
-            continue
-        return WapResult(True, n, [], v)
-    raise CommitConflict(
-        f"WAP publish lost {COMMIT_ATTEMPTS} consecutive commit races"
+        return snap.schema
+
+    def rows(schema: StructType) -> DataFrame:
+        # the rows as production will read them: omitted columns NULL
+        return staged_df.select(
+            "*",
+            *[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+                if f.name not in staged_names
+            ],
+        )
+
+    # Like append: pin the head, check the batch against the schema and
+    # CHECK constraints AT that version; a lost race re-checks against
+    # the new head (a racing merge_schema append must not be reverted,
+    # nor a racing ADD CONSTRAINT slipped under).
+    snap = prod._readable_snapshot()
+    schema = fits(snap)
+    cons = _constraints(snap.props)
+    prod._check_constraints(rows(schema), cons)
+    recheck = prod._append_recheck(
+        _bindings(schema, staged_names), cons, rows, schema_at=fits
     )
+    v = prod._commit_txn(
+        Txn(snap, prod._log, blind=True, recheck=recheck),
+        "append", adds, [], schema,
+    )
+    return WapResult(True, n, [], v)

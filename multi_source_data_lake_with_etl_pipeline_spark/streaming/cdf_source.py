@@ -167,8 +167,8 @@ class LakeCdfStreamReader(DataSourceStreamReader):
         # OLD range (engine replaying the last checkpointed batch on
         # restart) must never drag the cursor backwards
         self._advance(max(lo, hi))
-        _, _, current = t._snapshot(hi)
-        overwrites = t._log.overwrite_versions(hi)
+        snap = t._readable_snapshot(hi)
+        current, overwrites = snap.schema, snap.overwrites
         out_fields = [f for f in self.out_schema.fields][:-2]  # minus meta
         parts: list[InputPartition] = []
 

@@ -383,8 +383,8 @@ def stream_merge_lake(
     listing tax; with it the read tax stays FLAT because compaction
     folds vectors and bins small files on the same cadence the stream
     creates them (probed over a 50-batch run in SCALE.md). The
-    maintenance commit competes like any writer: its _commit_checked
-    rebase keeps it safely concurrent with the merges."""
+    maintenance commit competes like any writer: its Txn rebase keeps
+    it safely concurrent with the merges."""
     from ..lake import LakeTable
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:

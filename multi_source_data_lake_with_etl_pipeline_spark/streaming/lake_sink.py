@@ -64,15 +64,16 @@ from pyspark.sql.types import (
 
 from ..lake import (
     LakeTable,
-    _DATA,
     _HIVE_NULL,
-    _file_stats,
+    _bindings,
+    _constraints,
     _gen_expr,
     _identity_spec,
     _is_mapped,
     _json_safe,
     _part_converter,
 )
+from ..lake_log import Txn
 
 
 def _arrow_type(dt):
@@ -283,105 +284,71 @@ class LakeSinkStreamWriter(DataSourceStreamWriter):
 
         spark = SparkSession.getActiveSession()
         t = LakeTable.load(spark, self.path)
-        last = t.last_committed_batch(self.app_id)
-        if last is not None and batchId <= last:
+        snap = t._readable_snapshot()
+        if snap.txns.get(self.app_id, -1) >= batchId:
             self._cleanup(messages)  # replay: the marker already landed
             return
         staged = [e for m in messages if m for e in m.paths]
-        v = t.latest_version()
-        _, _, schema = t._snapshot(v)
-        by_name = {f.name: f for f in schema.fields}
-        # CHECK constraints validate the WHOLE batch before any file
-        # moves — a violation aborts the micro-batch, table untouched.
-        # Partitioned: staged files LACK the partition columns (they
-        # ride the dirname); rebuild them as typed literals per file so
-        # partition-referencing constraints still validate.
-        cons = t.constraints(v)
-        if cons and staged:
-            parts_df = None
-            for p, part in staged:
+        schema = snap.schema
+        types = {f.name: f.dataType for f in schema.fields}
+
+        def frame(files) -> DataFrame:
+            # Partitioned: the files LACK the partition columns (they
+            # ride the dirname); rebuild them as typed literals per file
+            # so partition-referencing constraints still validate.
+            out = None
+            for p, part in files:
                 d = spark.read.parquet(p)
                 for name, vstr in (part or {}).items():
-                    f = by_name[name]
-                    conv = _part_converter(f.dataType)
+                    conv = _part_converter(types[name])
                     d = d.withColumn(
                         name,
                         F.lit(None if vstr is None else conv(vstr)).cast(
-                            f.dataType
+                            types[name]
                         ),
                     )
-                parts_df = d if parts_df is None else parts_df.unionByName(d)
-            t._check_constraints(parts_df, cons)
-        adds = []
+                out = d if out is None else out.unionByName(d)
+            return spark.createDataFrame([], self.sink_schema) if out is None else out
+
+        # CHECK constraints validate the WHOLE batch before any file
+        # moves — a violation aborts the micro-batch, table untouched
+        cons = _constraints(snap.props)
+        if cons and staged:
+            t._check_constraints(frame(staged), cons)
+        adds, moved = [], []
         for p, part in staged:
-            new = f"{uuid.uuid4().hex}.parquet"
+            segs, typed = [], None
             if part:
-                segs = []
-                typed: dict = {}
+                typed = {}
                 for name, vstr in part.items():
-                    f = by_name[name]
                     if vstr is None:
                         segs.append(f"{name}={_HIVE_NULL}")
                         typed[name] = None
                     else:
                         segs.append(f"{name}={quote(vstr, safe='')}")
                         typed[name] = _json_safe(
-                            _part_converter(f.dataType)(vstr)
+                            _part_converter(types[name])(vstr)
                         )
-                rel_dir = "/".join(segs)
-                os.makedirs(
-                    os.path.join(t._data_dir, rel_dir), exist_ok=True
-                )
-                abs_new = os.path.join(t._data_dir, rel_dir, new)
-                rel = f"{_DATA}/{rel_dir}/{new}"
-            else:
-                abs_new = os.path.join(t._data_dir, new)
-                rel = f"{_DATA}/{new}"
-            os.rename(p, abs_new)
-            rows, stats, nulls = _file_stats(abs_new)
-            if rows == 0:
-                os.remove(abs_new)
-                continue
-            entry = {
-                "path": rel,
-                "rows": rows,
-                "bytes": os.path.getsize(abs_new),
-                "stats": stats,
-                "nulls": nulls,
-            }
-            if part:
-                # exact partition stats — same rule as _write_files:
-                # min == max == value; NULL partitions carry
-                # nulls == rows; booleans/timestamps excluded from
-                # ranges (timestamp partitions are gated anyway)
-                for name, pv in typed.items():
-                    if pv is None:
-                        nulls[name] = rows
-                    else:
-                        nulls[name] = 0
-                        if not isinstance(pv, bool):
-                            stats[name] = [pv, pv]
-                entry["partition"] = dict(typed)
-            adds.append(entry)
+            entry = t._land(p, segs, typed, types)
+            if entry is not None:
+                adds.append(entry)
+                moved.append((t._abs(entry["path"]), part))
         self._cleanup(messages)  # empty staging dirs
-        txn = {"app": self.app_id, "batch": int(batchId)}
-        n = sum(a["rows"] for a in adds)
-        for _ in range(21):
-            try:
-                t._commit(
-                    v + 1, "append", adds, [], schema, txn=txn,
-                    metrics={"rows_appended": n},
-                )
-                return
-            except Exception as exc:  # CommitConflict — re-check marker
-                if type(exc).__name__ != "CommitConflict":
-                    raise
-                last = t.last_committed_batch(self.app_id)
-                if last is not None and batchId <= last:
-                    return  # a racing zombie committed this batch
-                v = t.latest_version()
-                _, _, schema = t._snapshot(v)
-        raise RuntimeError("lakesink lost 21 consecutive commit races")
+        # the same lost-race re-check as append_stream_batch: a racing
+        # ADD CONSTRAINT re-validates the moved files, a remapped batch
+        # column conflicts
+        recheck = t._append_recheck(
+            _bindings(schema, self.sink_schema.fieldNames()), cons,
+            lambda _: frame(moved),
+        )
+        t._commit_txn(
+            Txn(
+                snap, t._log, blind=True,
+                marker=(self.app_id, int(batchId)), recheck=recheck,
+            ),
+            "append", adds, [], schema,
+            metrics={"rows_appended": sum(a["rows"] for a in adds)},
+        )
 
     def abort(self, messages, batchId: int) -> None:
         self._cleanup(messages)

@@ -6,9 +6,14 @@ Commits are synthetic add/remove entries written through the real
 ``_commit`` path (so checkpoint writes, conflict detection, and log
 layout are all exercised); data files are not materialized because the
 probe measures LOG machinery, not parquet I/O. Workload: appends of 2
-files each, a 10-file merge (remove+add) every 25 commits — active-set
-growth ~linear in depth, like a streaming ingest table between
-compactions.
+files each, each carrying a stream txn marker, and a 10-file merge
+(remove+add) every 25 commits — active-set growth ~linear in depth, like
+a streaming ingest table between compactions.
+
+Each row also times the two per-batch lookups of a streaming writer and
+a change-feed reader: the stream's last committed batch and the table's
+overwrite versions, with the commit files each call reads (cache hits
+included).
 
 Usage: python scripts/scale_probe_lake_log.py [max_versions]
 """
@@ -26,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 from multi_source_data_lake_with_etl_pipeline_spark.lake import LakeTable
+from multi_source_data_lake_with_etl_pipeline_spark.lake_log import TableLog
 
 
 def _time(fn, reps=5):
@@ -33,6 +39,23 @@ def _time(fn, reps=5):
     for _ in range(reps):
         fn()
     return (time.perf_counter() - t0) / reps
+
+
+def _reads(fn) -> int:
+    """Commit files one call of ``fn`` reads."""
+    real = TableLog.read_commit
+    n = [0]
+
+    def counted(self, v):
+        n[0] += 1
+        return real(self, v)
+
+    TableLog.read_commit = counted
+    try:
+        fn()
+    finally:
+        TableLog.read_commit = real
+    return n[0]
 
 
 def main() -> int:
@@ -79,10 +102,20 @@ def main() -> int:
             rm = [a["path"] for a in active[:10]]
             v = t._commit(v + 1, "merge", fake_adds(2), rm, schema)
         else:
-            v = t._commit(v + 1, "append", fake_adds(2), [], schema)
+            v = t._commit(
+                v + 1, "append", fake_adds(2), [], schema,
+                txn={"app": "probe", "batch": v + 1},
+            )
         commit_cost_window.append(time.perf_counter() - t0)
         if v in checkpoints:
             _, active, _ = t._snapshot()
+
+            def last_batch():
+                return t.last_committed_batch("probe")
+
+            def overwrites():
+                return t._readable_snapshot().overwrites
+
             row = {
                 "versions": v,
                 "active_files": len(active),
@@ -93,6 +126,10 @@ def main() -> int:
                 ),
                 "rows_ms": round(_time(lambda: t.rows()) * 1e3, 2),
                 "history_ms": round(_time(lambda: t.history(), reps=2) * 1e3, 2),
+                "last_batch_ms": round(_time(last_batch) * 1e3, 2),
+                "last_batch_reads": _reads(last_batch),
+                "overwrites_ms": round(_time(overwrites) * 1e3, 2),
+                "overwrites_reads": _reads(overwrites),
                 "avg_commit_ms_last_window": round(
                     sum(commit_cost_window) / len(commit_cost_window) * 1e3, 2
                 ),

@@ -16,6 +16,7 @@ from multi_source_data_lake_with_etl_pipeline_spark.lake import (
     ConstraintViolation,
     LakeTable,
 )
+from multi_source_data_lake_with_etl_pipeline_spark.lake_log import Txn
 
 
 def _mk(spark, tmp_path, rows=100, files=4):
@@ -1845,7 +1846,10 @@ def test_commit_conflict_rebase_on_disjoint(spark, tmp_path):
     # interleave a DISJOINT commit (append) after our snapshot
     t.append(spark.createDataFrame([(999, 9)], "k long, v long"))
     assert t.latest_version() == v + 1
-    new_v = t._commit_checked(v, "delete", [], [touched[0]["path"]], schema, touched)
+    new_v = t._commit_txn(
+        Txn(t._log.snapshot(v), t._log, touched=touched),
+        "delete", [], [touched[0]["path"]], schema,
+    )
     assert new_v == v + 2  # rebased, not failed
     assert t.read().count() == 40 + 1 - 20  # one of two 20-row files dropped
     # now a CONFLICTING interleave: stale read set vs a rewrite
@@ -1855,7 +1859,33 @@ def test_commit_conflict_rebase_on_disjoint(spark, tmp_path):
         spark.createDataFrame([(25,)], "k long"), "k"
     )  # rewrites the file `target` points at
     with pytest.raises(CommitConflict, match="modified"):
-        t._commit_checked(v2, "delete", [], [target["path"]], schema2, [target])
+        t._commit_txn(
+            Txn(t._log.snapshot(v2), t._log, touched=[target]),
+            "delete", [], [target["path"]], schema2,
+        )
+
+
+def test_compact_rebases_over_concurrent_append(spark, tmp_path):
+    """A full compaction's read set is its target files: an append
+    landing mid-compaction commutes, so both commits land."""
+    t = _mk(spark, tmp_path, rows=40, files=4)
+    orig = type(t)._write_files
+
+    def hooked(df, schema=None, **kw):
+        adds = orig(t, df, schema, **kw)
+        if not hasattr(t, "_raced"):
+            t._raced = True
+            LakeTable.load(spark, t.path).append(
+                spark.createDataFrame([(999, 9)], "k long, v long")
+            )
+        return adds
+
+    t._write_files = hooked
+    v = t.compact(target_files=1)
+    del t._write_files
+    assert v == t.latest_version() == 2
+    assert t.read().count() == 40 + 1
+    assert len(t._snapshot()[1]) == 2  # the compacted file + the racer's
 
 
 def test_concurrent_disjoint_dv_deletes(spark, tmp_path):

@@ -1,14 +1,15 @@
 """The commit log (``lake_log.TableLog``): snapshot cache invalidation,
-read-only cached records, props and writer features riding the replay,
-and reads that prune the snapshot they pinned.
+read-only cached records, props, writer features, stream txn marks and
+overwrite versions riding the replay, the ``Txn`` commit policy, and
+reads that prune the snapshot they pinned.
 
 The cache memoizes parsed immutable log state per (table, version),
 validated by the version file's stat signature (inode, size,
 mtime_ns): a recreated table at the same path, a commit from another
 handle and a props-changing commit must all be visible at once.
 
-``TestTableLog`` builds logs by hand from ``StructType`` JSON, so it
-starts no JVM.
+``TestTableLog`` and ``TestTxn`` build logs by hand from ``StructType``
+JSON, so they start no JVM.
 """
 
 from __future__ import annotations
@@ -27,7 +28,10 @@ from multi_source_data_lake_with_etl_pipeline_spark.lake import (
 from multi_source_data_lake_with_etl_pipeline_spark import lake_log
 from multi_source_data_lake_with_etl_pipeline_spark.lake_log import (
     CHECKPOINT_EVERY,
+    COMMIT_ATTEMPTS,
+    CommitConflict,
     TableLog,
+    Txn,
 )
 
 _SCHEMA = json.dumps(StructType([StructField("k", LongType())]).jsonValue())
@@ -135,6 +139,118 @@ class TestTableLog:
         with pytest.raises(UnsupportedTableFeature, match="vector-clustered-write"):
             t._check_writer_features(1)
         t._check_writer_features(0)
+
+
+    @pytest.mark.parametrize("legacy", [False, True])
+    def test_txn_marks_and_overwrites_survive_checkpoints(
+        self, tmp_path, monkeypatch, legacy
+    ):
+        log = _log(tmp_path)
+        for v in range(23):
+            extra = {"props": {}} if v == 0 else {}
+            if v % 2:
+                extra["txn"] = {"app": "s", "batch": v // 2}
+            if v in (3, 12, 21):
+                extra["op"] = "overwrite"
+            log.write_commit(v, _rec(v, adds=[f"f{v}"], **extra))
+        ck = max(lake_log.TableLog(log.dir)._checkpoint_versions())
+        assert ck == 2 * CHECKPOINT_EVERY
+        if legacy:
+            # checkpoints written before they recorded the two fields
+            for cv in (CHECKPOINT_EVERY, ck):
+                path = os.path.join(log.dir, f"_checkpoint.{cv}.json")
+                with open(path) as f:
+                    rec = json.load(f)
+                del rec["txns"], rec["overwrites"]
+                with open(path, "w") as f:
+                    json.dump(rec, f)
+        else:
+            real = TableLog.read_commit
+
+            def past_checkpoint_only(self, v):
+                assert v > ck, f"commit {v} read under the checkpoint"
+                return real(self, v)
+
+            monkeypatch.setattr(TableLog, "read_commit", past_checkpoint_only)
+        _empty_caches(monkeypatch)
+        t = LakeTable(None, str(tmp_path / "t"))
+        assert t.last_committed_batch("s") == 10
+        assert t.last_committed_batch("other") is None
+        assert t._log.snapshot().overwrites == (3, 12, 21)
+
+
+def _write(log: TableLog, path: str, **extra):
+    """A ``Txn`` write callable that commits one add of ``path``."""
+
+    def write(v, schema):
+        log.write_commit(v, _rec(v, adds=[path], **extra))
+        return v
+
+    return write
+
+
+class TestTxn:
+    def test_blind_writer_rebases_over_interleaved_commit(self, tmp_path):
+        log = _log(tmp_path)
+        log.write_commit(0, _rec(0, adds=["f0"], props={}))
+        heads = []
+
+        def recheck(head):
+            heads.append(head.version)
+            return head.schema
+
+        txn = Txn(log.snapshot(0), log, blind=True, recheck=recheck)
+        log.write_commit(1, _rec(1, adds=["racer"]))
+        assert txn.commit(_write(log, "mine"), log.snapshot(0).schema) == 2
+        assert heads == [1]
+        assert {a["path"] for a in log.snapshot(2).entries} == {"f0", "racer", "mine"}
+
+    def test_marker_already_at_head_returns_none(self, tmp_path):
+        log = _log(tmp_path)
+        log.write_commit(0, _rec(0, props={}))
+        txn = Txn(log.snapshot(0), log, blind=True, marker=("s", 3))
+        # a zombie driver commits the same batch first
+        log.write_commit(1, _rec(1, adds=["zombie"], txn={"app": "s", "batch": 3}))
+        mine = _write(log, "mine", txn={"app": "s", "batch": 3})
+        assert txn.commit(mine, log.snapshot(0).schema) is None
+        assert log.latest_version() == 1
+
+    def test_changed_touched_entry_conflicts(self, tmp_path):
+        log = _log(tmp_path)
+        log.write_commit(0, _rec(0, adds=["f0", "f1"], props={}))
+        snap = log.snapshot(0)
+        f0 = next(a for a in snap.entries if a["path"] == "f0")
+        txn = Txn(snap, log, touched=(f0,))
+        # a racer vectors rows out of f0: same path, new entry
+        racer = _rec(1)
+        racer["add"] = [{"path": "f0", "rows": 1, "dv": {"path": "dv/x", "ndel": 1}}]
+        racer["remove"] = ["f0"]
+        log.write_commit(1, racer)
+        with pytest.raises(CommitConflict, match="modified"):
+            txn.commit(_write(log, "mine"), snap.schema)
+        assert log.latest_version() == 1
+
+    def test_gives_up_after_commit_attempts(self, tmp_path):
+        log = _log(tmp_path)
+        log.write_commit(0, _rec(0, props={}))
+        heads = []
+
+        def recheck(head):
+            heads.append(head.version)
+            return head.schema
+
+        def always_beaten(v, schema):
+            log.write_commit(v, _rec(v, adds=[f"racer{v}"]))
+            log.write_commit(v, _rec(v, adds=["mine"]))  # taken: conflict
+            return v
+
+        txn = Txn(log.snapshot(0), log, blind=True, recheck=recheck)
+        with pytest.raises(CommitConflict, match="lost"):
+            txn.commit(always_beaten, log.snapshot(0).schema)
+        assert heads == list(range(1, COMMIT_ATTEMPTS + 1))
+        assert "mine" not in {
+            a["path"] for a in log.snapshot().entries
+        }
 
 
 class TestLogCaches:

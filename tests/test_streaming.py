@@ -754,6 +754,61 @@ class TestLakeSink:
             LakeSinkStreamWriter(t.path, "x", schema)
 
 
+    @pytest.mark.parametrize("race", ["add_constraint", "drop_readd"])
+    def test_commit_rechecks_a_racing_writer(
+        self, spark, tmp_path, monkeypatch, race
+    ):
+        """A writer landing just before the sink's txn-marked commit
+        makes the sink re-check its batch at the new head, as
+        ``append_stream_batch`` does: a racing CHECK constraint the
+        batch violates refuses it, a drop + re-add of a batch column
+        conflicts."""
+        from multi_source_data_lake_with_etl_pipeline_spark.lake import (
+            CommitConflict,
+            ConstraintViolation,
+            LakeTable,
+        )
+        from multi_source_data_lake_with_etl_pipeline_spark.lake_log import TableLog
+        from multi_source_data_lake_with_etl_pipeline_spark.streaming.lake_sink import (
+            LakeSinkStreamWriter,
+        )
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(1, 5)], "k long, v long"),
+        )
+        writer = LakeSinkStreamWriter(t.path, "race", t.read().schema)
+        msg = writer.write(iter([(2, -7)]))
+        real = TableLog.write_commit
+        fired = []
+
+        def racing(self, version, rec):
+            if rec.get("txn") and not fired:
+                fired.append(True)
+                other = LakeTable.load(spark, t.path)
+                if race == "add_constraint":
+                    other.add_constraint("v_pos", "v > 0")
+                else:
+                    other.drop_column("v")
+                    other.append(
+                        spark.createDataFrame([(900, 9)], "k long, v long"),
+                        merge_schema=True,
+                    )
+            return real(self, version, rec)
+
+        monkeypatch.setattr(TableLog, "write_commit", racing)
+        want = ConstraintViolation if race == "add_constraint" else CommitConflict
+        with pytest.raises(want):
+            writer.commit([msg], 0)
+        assert fired
+        assert t.last_committed_batch("race") is None
+        got = {int(r["k"]): r["v"] for r in t.read().collect()}
+        if race == "add_constraint":
+            assert got == {1: 5}
+        else:
+            assert got == {1: None, 900: 9}
+
+
 # ===================================================================
 # Lake as a DATA stream (round 9 — Delta non-CDF source parity):
 # appends stream as rows; change commits raise unless opted out.
