@@ -337,7 +337,7 @@ def _cluster_layout(df: DataFrame, cols: list[str], n: int) -> DataFrame:
     none — per-file footer ranges then stay tight on every listed
     column."""
     if len(cols) > 1:
-        from .sinks.maintenance import zorder_by
+        from .operators.zorder import zorder_by
 
         return zorder_by(df, cols, n)
     if cols:
@@ -1859,14 +1859,39 @@ class LakeTable:
     ) -> int | None:
         """:meth:`_commit` through ``txn``'s retry loop. The txn marker
         rides the commit record itself, so a crash can never separate
-        "data visible" from "batch recorded"."""
+        "data visible" from "batch recorded". A race the txn refuses
+        (it raises, or returns None: the batch is already committed)
+        removes what ``adds`` landed here that the pinned snapshot does
+        not reference — new data files and vector sidecars; a DV re-add
+        of a pinned file and a WAP or clone add of another table's file
+        stay. ``txn.commit`` raises these only before a publish (it
+        retries the lost race ``write`` raises), so a won commit is
+        never undone."""
         mark = txn.marker and {"app": txn.marker[0], "batch": txn.marker[1]}
-        return txn.commit(
-            lambda v, s: self._commit(
-                v, op, adds, removes, s, txn=mark, props=props, metrics=metrics
-            ),
-            schema,
-        )
+        try:
+            v = txn.commit(
+                lambda v, s: self._commit(
+                    v, op, adds, removes, s, txn=mark, props=props, metrics=metrics
+                ),
+                schema,
+            )
+        except (CommitConflict, ConstraintViolation):
+            self._unland(txn.snap, adds)
+            raise
+        if v is None:
+            self._unland(txn.snap, adds)
+        return v
+
+    def _unland(self, snap: Snapshot, adds: list[dict]) -> None:
+        """Remove the files ``adds`` landed in this table that ``snap``
+        does not reference."""
+
+        def files(es) -> set[str]:
+            return {p for a in es for p in (a["path"], a.get("dv", {}).get("path")) if p}
+
+        for p in files(adds) - files(snap.entries):
+            if not os.path.isabs(p) and os.path.exists(self._abs(p)):
+                os.remove(self._abs(p))
 
     def _append_recheck(
         self, wrote: dict, cons: dict, rows, props_base=None, schema_at=None
@@ -4768,7 +4793,7 @@ class LakeTable:
         range-repartition + sort so per-file footer [min,max] ranges are
         DISJOINT — ``read_pruned``/``files_overlapping`` then skip all
         but the hit files. With a LIST of columns, Z-ORDER: interleave
-        them into a Morton key (sinks/maintenance.zorder_value) so file
+        them into a Morton key (operators/zorder.zorder_value) so file
         stats stay tight on every listed column and multi-dimension
         range predicates prune on each.
 

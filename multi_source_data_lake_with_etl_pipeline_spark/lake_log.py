@@ -21,8 +21,9 @@ Cache safety:
   recreated at the same path. Every cached value therefore carries the
   stat signature (inode, size, mtime_ns) of its version's commit file
   and is revalidated with one ``os.stat`` per lookup.
-- Other writers only ever ADD version files, and ``latest_version`` is
-  an uncached listdir, so a cached snapshot never hides a newer commit.
+- Other writers only ever ADD version files, and ``latest_version``
+  stats forward to the first missing one uncached, so a cached
+  snapshot never hides a newer commit.
 - Parsed records are read-only: objects are ``types.MappingProxyType``
   and arrays are tuples, so a cached entry can be handed to every caller
   without a copy; build a changed entry with ``{**a, ...}``. Writers
@@ -170,10 +171,19 @@ class TableLog:
         )
 
     def latest_version(self) -> int:
-        vs = self.versions()
-        if not vs:
-            raise FileNotFoundError(f"empty log: {self.dir}")
-        return vs[-1]
+        """The head: stat forward from the ``_last_checkpoint`` pointer
+        (or version 0) until a commit is missing. Commits are created in
+        order, so only a missing start — a trimmed log — lists the
+        directory."""
+        v = self._pointer() or 0
+        if self._sig(v) is None:
+            vs = self.versions()
+            if not vs:
+                raise FileNotFoundError(f"empty log: {self.dir}")
+            v = vs[-1]
+        while self._sig(v + 1) is not None:
+            v += 1
+        return v
 
     def read_commit(self, v: int) -> Mapping:
         sig = self._sig(v)
@@ -229,21 +239,28 @@ class TableLog:
         ``_last_checkpoint`` pointer serves the common latest read
         without listing the directory; time travel before it, or a
         missing or corrupt pointer, falls back to a scan."""
-        try:
-            with open(os.path.join(self.dir, _POINTER)) as f:
-                last = json.load(f)["version"]
-            if last <= v:
+        last = self._pointer()
+        if last is not None and last <= v:
+            try:
                 ck = self._read_checkpoint(last)
                 if "props" in ck:
                     return ck
-        except (FileNotFoundError, KeyError, ValueError):
-            pass
+            except (FileNotFoundError, ValueError):
+                pass
         for cv in reversed(self._checkpoint_versions()):
             if cv <= v:
                 ck = self._read_checkpoint(cv)
                 if "props" in ck:
                     return ck
         return None
+
+    def _pointer(self) -> int | None:
+        """The ``_last_checkpoint`` version; None if missing or corrupt."""
+        try:
+            with open(os.path.join(self.dir, _POINTER)) as f:
+                return json.load(f)["version"]
+        except (FileNotFoundError, KeyError, ValueError):
+            return None
 
     def _write_checkpoint(self, v: int) -> None:
         # computed BEFORE the file exists and published by atomic
@@ -294,13 +311,8 @@ class TableLog:
         if fd is None:
             return
         try:
-            cur = -1
-            try:
-                with open(ptr) as f:
-                    cur = json.load(f)["version"]
-            except (FileNotFoundError, KeyError, ValueError):
-                pass
-            if v > cur:
+            cur = self._pointer()
+            if cur is None or v > cur:
                 tmp = ptr + f".tmp.{uuid.uuid4().hex}"
                 with open(tmp, "w") as f:
                     json.dump({"version": v}, f)

@@ -15,13 +15,15 @@ dimension to ``bits`` buckets between explicit bounds, spread the bits,
 OR them interleaved. No UDFs, no doubles — the z-value is engine-exact
 and therefore oracle-able.
 
-Relationship to ``sinks/maintenance.zorder_value`` (the generic n-dim
-bit-loop wired into ``LakeTable.compact(cluster_by=[...])``): for two
-dimensions the two produce THE SAME integer (col 0 on even bits, col 1
-on odd — equivalence pinned in tests/test_operators.py); this module is
-the 2-D fast path (4 magic-mask ops per dim instead of a 16-term bit
-loop) with explicit bounds so no statistics scan precedes the write,
-and shift-only quantization so an external engine can replay the key.
+Two keys live here. ``zorder_value`` / ``zorder_by`` are the generic
+n-dim bit loop over min-max-scaled buckets that
+``LakeTable.compact(cluster_by=[...])`` lays files out with.
+``morton2`` / ``zorder_key`` are the 2-D fast path (4 magic-mask ops
+per dim instead of a 16-term bit loop) with explicit bounds so no
+statistics scan precedes the write, and shift-only quantization so an
+external engine can replay the key. For two dimensions both produce
+THE SAME integer (col 0 on even bits, col 1 on odd — equivalence
+pinned in tests/test_operators.py).
 """
 
 from __future__ import annotations
@@ -62,6 +64,59 @@ def morton2(col_a: Column, col_b: Column) -> Column:
     """Interleave two 16-bit quantized values: a in even bits, b in odd
     bits of a 32-bit z-value."""
     return spread_bits(col_a).bitwiseOR(F.shiftleft(spread_bits(col_b), 1))
+
+
+def linear_bucket(col: Column, lo: float, hi: float, bits: int = 16) -> Column:
+    """Map ``col`` into [0, 2^bits) by linear min-max scaling (NULL and
+    out-of-range values clamp to the edges). Linear bucketing keeps the
+    expression a pure per-row projection; under heavy value skew the
+    resolution degrades (most rows share few buckets) — swap in
+    approxQuantile boundaries + a CASE/width_bucket lookup for
+    rank-based buckets, the z-interleave below is unchanged."""
+    n = (1 << bits) - 1
+    if hi <= lo:  # constant column — single bucket
+        return F.lit(0).cast("long")
+    scaled = F.floor((col.cast("double") - F.lit(float(lo))) * n / (float(hi) - float(lo)))
+    return F.least(F.greatest(F.coalesce(scaled, F.lit(0)), F.lit(0)), F.lit(n)).cast(
+        "long"
+    )
+
+
+def zorder_value(buckets: list[Column], bits: int = 16) -> Column:
+    """Interleave the bits of per-column bucket values into one Morton
+    (Z-order) key: sorting by it gives every participating column
+    locality in the file layout, so min/max stats prune on ALL of them,
+    not just the leading sort column. Pure shift/and/or expression tree
+    (bits × ncols terms) — whole-stage-codegen folds it into the scan
+    projection, no UDF, no shuffle beyond the final range exchange."""
+    k = len(buckets)
+    z = F.lit(0).cast("long")
+    for b in range(bits):
+        for i, bk in enumerate(buckets):
+            z = z.bitwiseOR(F.shiftleft(F.shiftright(bk, b).bitwiseAND(F.lit(1)), b * k + i))
+    return z
+
+
+def zorder_by(df: DataFrame, cols: list[str], n_files: int, bits: int = 16) -> DataFrame:
+    """Z-order ``df`` across ``cols``: one tiny min/max agg (driver-side
+    scalars), a per-row Morton key, then range-repartition + sort on it.
+    Output partition i owns a contiguous z-range = a compact region of
+    the multi-dimensional space, so each file's footer [min,max] is
+    tight on EVERY cluster column."""
+    bounds = df.agg(
+        *[F.min(c).cast("double").alias(f"_lo_{c}") for c in cols],
+        *[F.max(c).cast("double").alias(f"_hi_{c}") for c in cols],
+    ).collect()[0]
+    buckets = [
+        linear_bucket(F.col(c), bounds[f"_lo_{c}"], bounds[f"_hi_{c}"], bits)
+        for c in cols
+    ]
+    return (
+        df.withColumn("_z", zorder_value(buckets, bits))
+        .repartitionByRange(n_files, F.col("_z"))
+        .sortWithinPartitions("_z")
+        .drop("_z")
+    )
 
 
 def zorder_key(

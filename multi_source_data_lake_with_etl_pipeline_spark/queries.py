@@ -3966,28 +3966,31 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return score_corpus_self(_t(spark, sf_dir, "documents"))
 
 
-# Bloom-index point lookup: per-file Bloom sidecar built in one pass,
-# equality probe reads only candidate files (min/max stats can't prune
-# an unclustered high-cardinality key; Bloom can — no false negatives,
-# so the result is exactly the full-scan filter). Pruning effectiveness
-# is pinned in tests/test_lake.py; the oracle checks exactness.
+# Bloom-index point lookup: the lake's per-file Bloom index built in
+# one pass, and an equality probe that reads only candidate files
+# (min/max stats can't prune an unclustered high-cardinality key; Bloom
+# can — no false negatives, so the result is exactly the full-scan
+# filter). Pruning effectiveness is pinned in tests/test_lake_round8.py;
+# the oracle checks exactness.
 @register(
     "bloom_point_lookup",
     "SELECT o_orderkey, o_custkey, o_orderstatus FROM orders WHERE o_orderkey = 33",
 )
 def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
     import tempfile
 
     from .lake import LakeTable
-    from .sinks.bloom_index import build_bloom_index, point_read
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
     root = tempfile.mkdtemp(prefix="bloom_q_")
     t = LakeTable.create(spark, root + "/orders", o.repartition(8, "o_orderkey"))
-    build_bloom_index(t, "o_orderkey", bits=1 << 17, hashes=3)
-    return point_read(t, "o_orderkey", 33)
+    t.build_value_index("o_orderkey")
+    out = t.read_where_eq("o_orderkey", 33).localCheckpoint(eager=True)
+    shutil.rmtree(root, ignore_errors=True)
+    return out
 
 
 # Per-source quota cap: at most 25 docs per source, lowest doc_id first
@@ -9325,7 +9328,7 @@ def ship_delay_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Three-column Z-ORDER compaction round trip: OPTIMIZE the lake table
-# with the generic n-dim Morton loop (sinks/maintenance.zorder_by via
+# with the generic n-dim Morton loop (operators/zorder.zorder_by via
 # LakeTable.compact(cluster_by=[...])), then answer a THREE-range box
 # query through multi-column file skipping. The oracle is the plain
 # relational count — completeness of the clustered, pruned scan under

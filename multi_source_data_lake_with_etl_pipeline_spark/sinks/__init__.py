@@ -1,10 +1,4 @@
 """Sink writers (SURVEY.md §2.2 L1-L10)."""
 
 from .files import write_file  # noqa: F401
-from .merge import (  # noqa: F401
-    delete_where,
-    delete_where_partitioned,
-    merge_upsert,
-    merge_upsert_partitioned,
-)
 from .routing import LoaderManager, MultiTargetLoader, route_by_content  # noqa: F401

@@ -1,43 +1,21 @@
-"""Upsert / delete on parquet lake tables (reference L4 / L10).
+"""The MERGE upsert as a pure DataFrame plan (reference L4).
 
 Reference upsert is per-record find-then-update-or-insert
-(``base_loaders.py:149-181``); deletes are filter-based
-(``mongo_connector.py:152-161``, ``influx_connector.py:274-291``).
+(``base_loaders.py:149-181``); here it is one full outer join with
+``whenMatchedUpdateAll`` / ``whenNotMatchedInsertAll`` semantics. It
+writes nothing: upserts and deletes on stored tables go through
+``lake.LakeTable.merge`` / ``delete``, whose commit log makes them
+atomic.
 
-Lake-format equivalent: Delta ``MERGE INTO`` / ``DELETE FROM``. This
-container has no Delta package, so the same semantics are provided as
-copy-on-write over parquet, at two granularities:
-
-- ``merge_upsert`` / ``delete_where``: whole-table rewrite with an
-  atomic-ish directory swap (rename the live table ASIDE first, then
-  rename the new one in — there is never a moment with no table on
-  disk, and a crash mid-swap leaves a recoverable ``.old`` copy).
-- ``merge_upsert_partitioned`` / ``delete_where_partitioned``: the
-  100 TB path. The target is a partitioned parquet table; only
-  partitions containing matched keys are read (partition-pruned scan)
-  and only those are rewritten, via Spark's dynamic partition
-  overwrite — a 50-row upsert into one partition of a 100 TB table
-  touches exactly that partition's files; every other partition's
-  files are byte-identical afterwards (asserted by
-  ``tests/test_io_pipeline.py::test_partitioned_upsert_leaves_other_partitions_untouched``).
-
-NULL semantics (SQL MERGE / DELETE parity):
-
-- DELETE removes only rows where the predicate is TRUE; rows where it
-  evaluates to NULL are KEPT (``NOT coalesce(pred, false)``).
-- A source row with a NULL merge key never equality-matches any target
-  row, so it is an INSERT; presence is tracked with a literal flag
-  column, not key-null-ness, so NULL keys on either side cannot be
-  mistaken for "row absent".
+NULL semantics (SQL MERGE parity): a source row with a NULL merge key
+never equality-matches any target row, so it is an INSERT; presence
+is tracked with a literal flag column, not key-null-ness, so NULL keys
+on either side cannot be mistaken for "row absent".
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SRC_FLAG = "_mdl_src_present"
@@ -63,150 +41,3 @@ def merge_upsert_df(target: DataFrame, source: DataFrame, key: str) -> DataFrame
         for c in cols
     ]
     return joined.select(*picked)
-
-
-def _swap_table_dir(table_path: str, tmp: str) -> None:
-    """Replace ``table_path`` with ``tmp`` without a no-table window:
-    rename live aside → rename new in → drop the aside copy. A crash
-    between the renames leaves ``<path>.old`` intact for manual
-    recovery (vs. the rmtree-first pattern, which loses the table)."""
-    old = table_path + ".old"
-    if os.path.exists(old):  # stale leftover from a previous crash
-        shutil.rmtree(old)
-    os.rename(table_path, old)
-    try:
-        os.rename(tmp, table_path)
-    except OSError:
-        os.rename(old, table_path)  # roll back: restore the live table
-        raise
-    shutil.rmtree(old)
-
-
-def _upsert_counts(target: DataFrame, src: DataFrame, key: str) -> dict:
-    tgt_keys = target.select(key).distinct()
-    updated = src.join(tgt_keys, key, "left_semi").count()
-    inserted = src.count() - updated
-    return {"inserted": inserted, "updated": updated}
-
-
-def merge_upsert(
-    spark: SparkSession, table_path: str, source: DataFrame, key: str
-) -> dict:
-    """L4: upsert ``source`` into the parquet table at ``table_path``
-    by ``key``; returns {inserted, updated} counts like the reference
-    (base_loaders.py:177-181). Copy-on-write: temp write + aside swap.
-
-    Rewrites the WHOLE table — use :func:`merge_upsert_partitioned`
-    for large partitioned targets."""
-    target = spark.read.parquet(table_path)
-    src = source.persist()
-    counts = _upsert_counts(target, src, key)
-    merged = merge_upsert_df(target, src, key)
-    tmp = tempfile.mkdtemp(prefix="merge_", dir=os.path.dirname(table_path) or ".")
-    merged.write.mode("overwrite").parquet(tmp)
-    _swap_table_dir(table_path, tmp)
-    src.unpersist()
-    return counts
-
-
-def delete_where(spark: SparkSession, table_path: str, predicate: str) -> int:
-    """L10: DELETE FROM table WHERE predicate (copy-on-write). Returns
-    deleted-row count. Rows where the predicate evaluates to NULL are
-    KEPT (SQL DELETE semantics — only pred=TRUE rows are removed)."""
-    df = spark.read.parquet(table_path)
-    keep = df.filter(F.expr(f"NOT coalesce(({predicate}), false)"))
-    deleted = df.count() - keep.count()
-    tmp = tempfile.mkdtemp(prefix="del_", dir=os.path.dirname(table_path) or ".")
-    keep.write.mode("overwrite").parquet(tmp)
-    _swap_table_dir(table_path, tmp)
-    return deleted
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    table_path: str,
-    source: DataFrame,
-    key: str,
-    partition_col: str,
-) -> dict:
-    """Partition-pruned MERGE: read and rewrite ONLY the partitions the
-    source touches. The scan is pruned with an ``isin`` filter on the
-    partition column (partition pruning, no full-table read) and the
-    write uses dynamic partition overwrite, so partition directories
-    the source does not touch keep their exact files.
-
-    Source rows must carry ``partition_col``; a matched key keeps the
-    SOURCE's partition value (like Delta MERGE updating a partition
-    column, the row moves partitions — both old and new partitions are
-    then affected and rewritten)."""
-    src = source.persist()
-    parts = [r[0] for r in src.select(partition_col).distinct().collect()]
-    target = spark.read.parquet(table_path)
-    # Partitions a matched target row might LEAVE: where its key lives
-    # now. Usually identical to `parts`; differs only when an update
-    # moves a row across partitions.
-    key_parts = [
-        r[0]
-        for r in target.join(src.select(key).distinct(), key, "left_semi")
-        .select(partition_col)
-        .distinct()
-        .collect()
-    ]
-    affected_vals = sorted(set(parts) | set(key_parts), key=str)
-    affected = target.filter(F.col(partition_col).isin(affected_vals))
-    counts = _upsert_counts(affected, src, key)
-    merged = merge_upsert_df(affected, src, key)
-    # Sever lineage from table_path (Spark refuses to overwrite a path
-    # it is reading) — only the affected partitions are materialized.
-    out = merged.localCheckpoint(eager=True)
-    (
-        out.repartition(F.col(partition_col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(table_path)
-    )
-    # A cross-partition update can drain its old partition; dynamic
-    # overwrite never writes (hence never clears) an empty partition.
-    kept_parts = {r[0] for r in out.select(partition_col).distinct().collect()}
-    for v in affected_vals:
-        if v not in kept_parts:
-            pdir = os.path.join(table_path, f"{partition_col}={v}")
-            if os.path.exists(pdir):
-                shutil.rmtree(pdir)
-    src.unpersist()
-    return counts
-
-
-def delete_where_partitioned(
-    spark: SparkSession, table_path: str, predicate: str, partition_col: str
-) -> int:
-    """Partition-pruned DELETE: rewrite only partitions that contain at
-    least one pred=TRUE row (if the predicate constrains the partition
-    column, Catalyst prunes the discovery scan too). Partitions whose
-    rows are ALL deleted are dropped explicitly (dynamic overwrite
-    cannot express an empty partition). NULL-predicate rows are KEPT."""
-    df = spark.read.parquet(table_path)
-    cond = F.expr(f"coalesce(({predicate}), false)")
-    affected_vals = [r[0] for r in df.filter(cond).select(partition_col).distinct().collect()]
-    if not affected_vals:
-        return 0
-    affected = df.filter(F.col(partition_col).isin(affected_vals))
-    keep = affected.filter(~cond)
-    deleted = affected.count() - keep.count()
-    kept_parts = {r[0] for r in keep.select(partition_col).distinct().collect()}
-    emptied = [v for v in affected_vals if v not in kept_parts]
-    if kept_parts:
-        out = keep.localCheckpoint(eager=True)
-        (
-            out.repartition(F.col(partition_col))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(table_path)
-        )
-    for v in emptied:
-        pdir = os.path.join(table_path, f"{partition_col}={v}")
-        if os.path.exists(pdir):
-            shutil.rmtree(pdir)
-    return deleted

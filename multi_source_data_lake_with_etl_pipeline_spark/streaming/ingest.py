@@ -219,64 +219,6 @@ def stream_running_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_merge_upsert(
-    df: DataFrame,
-    table_path: str,
-    key: str,
-    checkpoint: str,
-    order_col: str | None = None,
-    partition_col: str | None = None,
-    timeout_s: int = 300,
-) -> None:
-    """CDC-style continuous upsert: MERGE each micro-batch into the
-    parquet lake table (streaming analog of L4; Delta's
-    ``foreachBatch`` + ``MERGE`` recipe, minus Delta).
-
-    - The batch is first collapsed to ONE row per key (keep the row
-      with the max ``order_col`` — e.g. an event time or change-log
-      sequence — else an arbitrary last-wins) so a batch containing
-      several changes for one key applies cleanly.
-    - ``partition_col`` switches to the partition-pruned MERGE: a
-      micro-batch touching one partition of a 100 TB table rewrites
-      exactly that partition.
-    - The stream checkpoint makes ingestion incremental and restart-
-      safe: a re-run with the same checkpoint re-reads nothing.
-      foreachBatch is at-least-once, and MERGE by key is idempotent
-      for same-key replays — together: effectively-once table state.
-
-    The target table must exist (write an initial/empty table first).
-    """
-    from ..sinks.merge import merge_upsert, merge_upsert_partitioned
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df
-        if b.isEmpty():
-            return
-        from pyspark.sql import Window
-
-        order = F.col(order_col).desc() if order_col else F.monotonically_increasing_id().desc()
-        w = Window.partitionBy(key).orderBy(order)
-        b = (
-            b.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if partition_col is not None:
-            merge_upsert_partitioned(b.sparkSession, table_path, b, key, partition_col)
-        else:
-            merge_upsert(b.sparkSession, table_path, b, key)
-
-    q = (
-        df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-
-
 def stream_interval_join(
     left: DataFrame,
     right: DataFrame,

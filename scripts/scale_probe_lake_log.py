@@ -13,7 +13,9 @@ a streaming ingest table between compactions.
 Each row also times the two per-batch lookups of a streaming writer and
 a change-feed reader: the stream's last committed batch and the table's
 overwrite versions, with the commit files each call reads (cache hits
-included).
+included); and the head lookup every snapshot starts with
+(``latest_ms``), with the directory entries one latest snapshot lists
+(``dir_entries_listed``).
 
 Usage: python scripts/scale_probe_lake_log.py [max_versions]
 """
@@ -55,6 +57,24 @@ def _reads(fn) -> int:
         fn()
     finally:
         TableLog.read_commit = real
+    return n[0]
+
+
+def _listed(fn) -> int:
+    """Directory entries one call of ``fn`` lists."""
+    real = os.listdir
+    n = [0]
+
+    def counted(d):
+        out = real(d)
+        n[0] += len(out)
+        return out
+
+    os.listdir = counted
+    try:
+        fn()
+    finally:
+        os.listdir = real
     return n[0]
 
 
@@ -120,6 +140,8 @@ def main() -> int:
                 "versions": v,
                 "active_files": len(active),
                 "snapshot_latest_ms": round(_time(lambda: t._snapshot()) * 1e3, 2),
+                "latest_ms": round(_time(t.latest_version) * 1e3, 3),
+                "dir_entries_listed": _listed(lambda: t._snapshot()),
                 "snapshot_v10_ms": round(_time(lambda: t._snapshot(10)) * 1e3, 2),
                 "snapshot_mid_ms": round(
                     _time(lambda: t._snapshot(v // 2)) * 1e3, 2

@@ -1,5 +1,5 @@
-"""Sources, sinks, merge/delete, routing, and the declarative
-pipeline layer — end-to-end round-trips on tmp dirs."""
+"""Sources, sinks, routing, and the declarative pipeline layer —
+end-to-end round-trips on tmp dirs."""
 
 from __future__ import annotations
 
@@ -16,12 +16,6 @@ from multi_source_data_lake_with_etl_pipeline_spark.plans.pipeline import (
     run_job,
 )
 from multi_source_data_lake_with_etl_pipeline_spark.sinks.files import write_file
-from multi_source_data_lake_with_etl_pipeline_spark.sinks.merge import (
-    delete_where_partitioned,
-    merge_upsert_partitioned,
-    delete_where,
-    merge_upsert,
-)
 from multi_source_data_lake_with_etl_pipeline_spark.sinks.routing import (
     LoaderManager,
     MultiTargetLoader,
@@ -60,28 +54,6 @@ def test_sql_passthrough_over_catalog(spark, sf_dir):
     register_views(spark, sf_dir)
     out = sql(spark, "SELECT count(*) AS n FROM orders WHERE o_orderstatus = 'F'")
     assert out.collect()[0]["n"] > 0
-
-
-def test_merge_upsert_counts_and_content(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "old", 10.0), (2, "keep", 20.0)], "id long, name string, v double"
-    ).write.parquet(path)
-    src = spark.createDataFrame(
-        [(1, "new", 11.0), (3, "ins", 30.0)], "id long, name string, v double"
-    )
-    res = merge_upsert(spark, path, src, "id")
-    assert res == {"inserted": 1, "updated": 1}
-    rows = {r["id"]: r for r in spark.read.parquet(path).collect()}
-    assert rows[1]["name"] == "new" and rows[2]["name"] == "keep" and rows[3]["v"] == 30.0
-
-
-def test_delete_where(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame([(i, float(i)) for i in range(10)], "id long, v double").write.parquet(path)
-    n = delete_where(spark, path, "v >= 7")
-    assert n == 3
-    assert spark.read.parquet(path).count() == 7
 
 
 def test_content_routing_rules():
@@ -177,95 +149,6 @@ def test_deep_merge_config():
         "mode": "overwrite",
     }
     assert base["reader"]["opts"] == {"a": 1, "b": 2}  # no mutation
-
-
-def _file_state(root):
-    """{relpath: (size, md5)} for every data file under a table dir."""
-    import hashlib
-
-    state = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.startswith(("_", ".")):
-                continue
-            p = os.path.join(dirpath, f)
-            with open(p, "rb") as fh:
-                state[os.path.relpath(p, root)] = (
-                    os.path.getsize(p),
-                    hashlib.md5(fh.read()).hexdigest(),
-                )
-    return state
-
-
-def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
-    """SQL DELETE removes only pred=TRUE rows; NULL-predicate rows stay."""
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, 5.0), (2, None), (3, 9.0)], "id long, v double"
-    ).write.parquet(path)
-    n = delete_where(spark, path, "v >= 7")
-    assert n == 1
-    left = {r["id"] for r in spark.read.parquet(path).collect()}
-    assert left == {1, 2}  # id=2 (NULL v) must survive
-
-
-def test_merge_upsert_null_key_source_row_is_insert(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(path)
-    src = spark.createDataFrame([(None, "nullkey"), (1, "upd")], "id long, name string")
-    res = merge_upsert(spark, path, src, "id")
-    assert res == {"inserted": 1, "updated": 1}
-    rows = sorted(spark.read.parquet(path).collect(), key=lambda r: (r["id"] is None, r["id"]))
-    assert [(r["id"], r["name"]) for r in rows] == [(1, "upd"), (None, "nullkey")]
-
-
-def test_partitioned_upsert_leaves_other_partitions_untouched(spark, tmp_path):
-    """VERDICT r1 #2: a one-partition upsert must leave every other
-    partition's data files byte-identical (partition-pruned COW)."""
-    path = str(tmp_path / "ptbl")
-    spark.createDataFrame(
-        [(i, i % 4, f"n{i}") for i in range(40)], "id long, p int, name string"
-    ).write.partitionBy("p").parquet(path)
-    before = _file_state(path)
-    src = spark.createDataFrame([(1, 1, "upd"), (101, 1, "new")], "id long, p int, name string")
-    res = merge_upsert_partitioned(spark, path, src, "id", "p")
-    assert res == {"inserted": 1, "updated": 1}
-    after = _file_state(path)
-    untouched_before = {k: v for k, v in before.items() if "p=1" not in k.split(os.sep)}
-    untouched_after = {k: v for k, v in after.items() if "p=1" not in k.split(os.sep)}
-    assert untouched_before == untouched_after, "non-target partitions were rewritten"
-    rows = {r["id"]: r for r in spark.read.parquet(path).collect()}
-    assert len(rows) == 41 and rows[1]["name"] == "upd" and rows[101]["name"] == "new"
-
-
-def test_partitioned_upsert_cross_partition_move_drains_old(spark, tmp_path):
-    path = str(tmp_path / "ptbl")
-    spark.createDataFrame(
-        [(1, 0, "only"), (2, 1, "other")], "id long, p int, name string"
-    ).write.partitionBy("p").parquet(path)
-    src = spark.createDataFrame([(1, 1, "moved")], "id long, p int, name string")
-    merge_upsert_partitioned(spark, path, src, "id", "p")
-    rows = {(r["id"], r["p"]) for r in spark.read.parquet(path).collect()}
-    assert rows == {(1, 1), (2, 1)}
-    assert not os.path.exists(os.path.join(path, "p=0"))  # drained dir dropped
-
-
-def test_partitioned_delete_prunes_and_drops_emptied(spark, tmp_path):
-    path = str(tmp_path / "ptbl")
-    spark.createDataFrame(
-        [(1, 0, 1.0), (2, 0, None), (3, 1, 9.0), (4, 2, 3.0)],
-        "id long, p int, v double",
-    ).write.partitionBy("p").parquet(path)
-    before = _file_state(path)
-    n = delete_where_partitioned(spark, path, "v >= 9", "p")
-    assert n == 1
-    after = _file_state(path)
-    # p=0 and p=2 untouched byte-for-byte; p=1 fully drained and dropped
-    same = lambda st: {k: v for k, v in st.items() if "p=1" not in k.split(os.sep)}
-    assert same(before) == same(after)
-    assert not os.path.exists(os.path.join(path, "p=1"))
-    left = {r["id"] for r in spark.read.parquet(path).collect()}
-    assert left == {1, 2, 4}  # NULL-v row kept
 
 
 def test_jdbc_option_mapping_and_dispatch(spark):
@@ -469,67 +352,6 @@ def test_yaml_write_read_roundtrip(spark, tmp_path):
     write_file(spark.createDataFrame([(3, "c", 3.5)], "id long, name string, v double"),
                path, file_format="yaml", mode="append")
     assert read_file(spark, path, file_format="yaml").count() == 3
-
-
-class TestMaintenance:
-    def test_compact_reduces_files_preserves_rows(self, spark, tmp_path):
-        from multi_source_data_lake_with_etl_pipeline_spark.sinks.maintenance import (
-            compact_table,
-        )
-
-        tbl = str(tmp_path / "t")
-        # 40 tiny files
-        spark.range(0, 4000).repartition(40).write.parquet(tbl)
-        before = spark.read.parquet(tbl).count()
-        stats = compact_table(spark, tbl, target_file_mb=1024)
-        assert stats["files_before"] == 40
-        assert stats["files_after"] == 1
-        assert spark.read.parquet(tbl).count() == before
-
-    def test_cluster_table_tightens_file_ranges(self, spark, tmp_path):
-        import pyarrow.parquet as pq
-
-        from multi_source_data_lake_with_etl_pipeline_spark.sinks.maintenance import (
-            _parquet_files,
-            cluster_table,
-        )
-
-        tbl = str(tmp_path / "t")
-        # value scattered across files: every file spans ~the full range
-        spark.range(0, 10000).select(
-            (F.col("id") * 7919 % 10000).alias("k"), F.col("id").alias("v")
-        ).repartition(8).write.parquet(tbl)
-        cluster_table(spark, tbl, ["k"], n_files=8)
-        ranges = []
-        for f in _parquet_files(tbl):
-            md = pq.ParquetFile(f).metadata
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(0)
-                mins.append(col.statistics.min)
-                maxs.append(col.statistics.max)
-            ranges.append((min(mins), max(maxs)))
-        ranges.sort()
-        # after clustering, file ranges are non-overlapping (range
-        # partitioner bounds) — the property min/max skipping needs
-        for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-            assert hi1 <= lo2
-        assert spark.read.parquet(tbl).count() == 10000
-
-    def test_vacuum_removes_debris_only(self, spark, tmp_path):
-        from multi_source_data_lake_with_etl_pipeline_spark.sinks.maintenance import (
-            vacuum_table,
-        )
-
-        tbl = str(tmp_path / "t")
-        spark.range(0, 10).write.parquet(tbl)
-        (tmp_path / "t.old").mkdir()
-        (tmp_path / "merge_abc").mkdir()
-        (tmp_path / "unrelated").mkdir()
-        removed = {p.split("/")[-1] for p in vacuum_table(tbl)}
-        assert removed == {"t.old", "merge_abc"}
-        assert (tmp_path / "unrelated").exists()
-        assert spark.read.parquet(tbl).count() == 10
 
 
 class TestTrainingShards:

@@ -142,6 +142,83 @@ class TestLakeMergeDelete:
         assert all(after[f] == h for f, h in before.items())
         assert t.read().count() == 99
 
+    @pytest.mark.parametrize("dv", [False, True])
+    def test_merge_null_key_source_row_is_insert(self, spark, tmp_path, dv):
+        t = _mk_from(
+            spark, tmp_path / "t",
+            spark.createDataFrame([(1, "a")], "id long, name string"),
+        )
+        src = spark.createDataFrame(
+            [(None, "nullkey"), (1, "upd")], "id long, name string"
+        )
+        res = t.merge(src, "id", dv=dv)
+        assert (res["inserted"], res["updated"]) == (1, 1)
+        rows = sorted(t.read().collect(), key=lambda r: (r.id is None, r.id))
+        assert [(r.id, r.name) for r in rows] == [(1, "upd"), (None, "nullkey")]
+
+    @staticmethod
+    def _parts(t: LakeTable, skip) -> dict[str, tuple]:
+        """{path: (entry, md5)} of the active files outside partition
+        ``p = skip``."""
+        out = {}
+        for a in t._snapshot()[1]:
+            if a["partition"]["p"] != skip:
+                with open(t._abs(a["path"]), "rb") as fh:
+                    out[a["path"]] = (a, hashlib.md5(fh.read()).hexdigest())
+        return out
+
+    @pytest.mark.parametrize("dv", [False, True])
+    def test_one_partition_merge_leaves_other_partitions(self, spark, tmp_path, dv):
+        """A one-partition merge leaves every other partition's entries
+        in the active set and their files byte-identical."""
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame(
+                [(i, i % 4, f"n{i}") for i in range(40)], "id long, p int, name string"
+            ),
+            partition_by=["p"],
+        )
+        before = self._parts(t, 1)
+        src = spark.createDataFrame(
+            [(1, 1, "upd"), (101, 1, "new")], "id long, p int, name string"
+        )
+        res = t.merge(src, "id", dv=dv)
+        assert (res["inserted"], res["updated"]) == (1, 1)
+        assert self._parts(t, 1) == before
+        rows = {r.id: r for r in t.read().collect()}
+        assert len(rows) == 41 and rows[1].name == "upd" and rows[101].name == "new"
+
+    @pytest.mark.parametrize("dv", [False, True])
+    def test_cross_partition_merge_drains_old_partition(self, spark, tmp_path, dv):
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame(
+                [(1, 0, "only"), (2, 1, "other")], "id long, p int, name string"
+            ),
+            partition_by=["p"],
+        )
+        src = spark.createDataFrame([(1, 1, "moved")], "id long, p int, name string")
+        t.merge(src, "id", dv=dv)
+        assert {(r.id, r.p) for r in t.read().collect()} == {(1, 1), (2, 1)}
+        assert t.partitions() == [{"p": 1}]  # the drained partition is gone
+
+    @pytest.mark.parametrize("dv", [False, True])
+    def test_partitioned_delete_drops_emptied_partition(self, spark, tmp_path, dv):
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame(
+                [(1, 0, 1.0), (2, 0, None), (3, 1, 9.0), (4, 2, 3.0)],
+                "id long, p int, v double",
+            ),
+            partition_by=["p"],
+        )
+        before = self._parts(t, 1)
+        assert t.delete("v >= 9", dv=dv)["deleted"] == 1
+        # p=0 and p=2 untouched byte-for-byte; p=1 drained and dropped
+        assert self._parts(t, 1) == before
+        assert t.partitions() == [{"p": 0}, {"p": 2}]
+        assert {r.id for r in t.read().collect()} == {1, 2, 4}  # NULL-v kept
+
 
 class TestLakeScale:
     def test_file_skipping_prunes_reads(self, spark, tmp_path):
@@ -189,6 +266,13 @@ class TestLakeScale:
         assert removed == 8
         assert t.read().count() == 100  # current snapshot intact
         assert t.read(1).count() == 100  # compacted version still readable
+
+    def test_compact_reduces_files_preserves_rows(self, spark, tmp_path):
+        t = _mk(spark, tmp_path, rows=4000, files=40)
+        assert len(t._snapshot()[1]) == 40
+        t.compact(target_files=1)
+        assert len(t._snapshot()[1]) == 1
+        assert t.read().count() == 4000
 
     def test_checkpoint_replay(self, spark, tmp_path):
         t = _mk(spark, tmp_path, rows=10, files=1)
@@ -345,68 +429,6 @@ class TestMaterializedAgg:
         assert delta[0]["_d_count"] == 0 and delta[0]["_d_v"] == 5 - 0
 
 
-class TestBloomIndex:
-    """Per-file Bloom point-lookup index: exact results, real pruning,
-    stale-index safety."""
-
-    def _mk_wide(self, spark, tmp_path, rows=4000, files=8):
-        from multi_source_data_lake_with_etl_pipeline_spark.lake import LakeTable
-
-        df = (
-            spark.range(0, rows)
-            .repartition(files, "id")
-            .select(F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
-        )
-        return LakeTable.create(spark, str(tmp_path / "bt"), df)
-
-    def test_point_read_exact_and_pruned(self, spark, tmp_path):
-        from multi_source_data_lake_with_etl_pipeline_spark.sinks.bloom_index import (
-            bloom_prune_files,
-            build_bloom_index,
-            point_read,
-        )
-
-        t = self._mk_wide(spark, tmp_path)
-        build_bloom_index(t, "k", bits=1 << 15, hashes=4)
-        got = point_read(t, "k", 1234).collect()
-        assert [(r.k, r.v) for r in got] == [(1234, 3702)]
-        # the key lives in exactly one file; Bloom must prune most of
-        # the other 7 (fpp ~ (500*4/32768-load)^4 — comfortably < 1)
-        n_active = len(t._snapshot()[1])
-        assert len(bloom_prune_files(t, "k", 1234)) < n_active
-
-    def test_absent_key_returns_empty(self, spark, tmp_path):
-        from multi_source_data_lake_with_etl_pipeline_spark.sinks.bloom_index import (
-            build_bloom_index,
-            point_read,
-        )
-
-        t = self._mk_wide(spark, tmp_path)
-        build_bloom_index(t, "k", bits=1 << 15, hashes=4)
-        assert point_read(t, "k", 999_999).count() == 0
-
-    def test_stale_index_stays_exact(self, spark, tmp_path):
-        """Appends after the build are conservatively read; files
-        removed by later commits are dropped from the candidate set."""
-        from multi_source_data_lake_with_etl_pipeline_spark.sinks.bloom_index import (
-            bloom_prune_files,
-            build_bloom_index,
-            point_read,
-        )
-
-        t = self._mk_wide(spark, tmp_path, rows=100, files=2)
-        build_bloom_index(t, "k", bits=1 << 12, hashes=4)
-        t.append(spark.createDataFrame([(7777, 1)], "k long, v long"))
-        got = point_read(t, "k", 7777).collect()
-        assert [(r.k, r.v) for r in got] == [(7777, 1)]
-        t.delete("k < 50")  # rewrites a file the index knew about
-        assert point_read(t, "k", 10).count() == 0
-        assert point_read(t, "k", 77).count() == 1
-        # pruned list only references currently-active files
-        active = {a["path"] for a in t._snapshot()[1]}
-        assert set(bloom_prune_files(t, "k", 77)) <= active
-
-
 class TestLakeClustering:
     def test_clustered_compaction_enables_skipping(self, spark, tmp_path):
         # write k shuffled across files → every file overlaps every range
@@ -457,7 +479,7 @@ class TestLakeZOrder:
         assert pruned.count() == full.count() == 256
 
     def test_zorder_value_is_morton(self, spark):
-        from multi_source_data_lake_with_etl_pipeline_spark.sinks.maintenance import (
+        from multi_source_data_lake_with_etl_pipeline_spark.operators.zorder import (
             zorder_value,
         )
 
@@ -2120,6 +2142,45 @@ def test_rebase_raises_when_concurrent_rewrite_steals_touched_file(spark, tmp_pa
         t.delete_keys(spark.createDataFrame([(5,)], "k long"), "k")
     t._write_files = orig
     assert t.latest_version() == 1  # only the racer's commit landed
+
+
+def test_refused_dv_merge_removes_only_its_own_files(spark, tmp_path, monkeypatch):
+    """A DV merge refused after a racing rewrite of its touched file
+    removes its new insert file and vector sidecar; every pre-existing
+    data file (a DV commit re-adds them) stays on disk."""
+    from multi_source_data_lake_with_etl_pipeline_spark.lake_log import TableLog
+
+    t = _mk(spark, tmp_path, rows=20, files=1)
+    pre = {a["path"] for a in t._snapshot()[1]}
+    real = TableLog.write_commit
+    fired = []
+
+    def racing(self, version, rec):
+        if rec["op"] == "merge" and not fired:
+            fired.append(True)
+            LakeTable.load(spark, t.path).delete("k = 7")
+        return real(self, version, rec)
+
+    monkeypatch.setattr(TableLog, "write_commit", racing)
+    src = spark.createDataFrame([(3, -3), (500, 5)], "k long, v long")
+    with pytest.raises(CommitConflict, match="modified"):
+        t.merge(src, "k", dv=True)
+    assert fired
+
+    def on_disk(d):
+        return {
+            os.path.relpath(os.path.join(r, f), t.path)
+            for r, _, fs in os.walk(d)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    active = t._snapshot()[1]
+    assert on_disk(t._data_dir) == pre | {a["path"] for a in active}
+    assert on_disk(t._dv_dir) == {a["dv"]["path"] for a in active if a.get("dv")}
+    assert {(r.k, r.v) for r in t.read().collect()} == {
+        (i, i * 10) for i in range(20) if i != 7
+    }
 
 
 def test_details_describe_detail_parity(spark, tmp_path):

@@ -178,6 +178,31 @@ class TestTableLog:
         assert t.last_committed_batch("other") is None
         assert t._log.snapshot().overwrites == (3, 12, 21)
 
+    def test_head_found_without_listing_the_log(self, tmp_path, monkeypatch):
+        """``snapshot()`` finds the head by stat-ing forward from the
+        ``_last_checkpoint`` pointer: at 100+ versions it lists nothing,
+        and commits past a lagging (or missing) pointer still count.
+        Only a log whose start commit is gone lists the directory."""
+        log = _log(tmp_path)
+        for v in range(105):
+            log.write_commit(v, _rec(v, adds=[f"f{v}"]))
+        _empty_caches(monkeypatch)
+        listed = []
+        real = os.listdir
+        monkeypatch.setattr(os, "listdir", lambda d: listed.append(d) or real(d))
+        snap = log.snapshot()
+        assert (snap.version, len(snap.entries)) == (104, 105)
+        pointer = os.path.join(log.dir, "_last_checkpoint")
+        with open(pointer, "w") as f:
+            json.dump({"version": 50}, f)
+        assert log.latest_version() == 104
+        os.remove(pointer)
+        assert log.latest_version() == 104
+        assert listed == []
+        os.remove(log._path(0))  # a trimmed log: no pointer, no commit 0
+        assert log.latest_version() == 104
+        assert listed == [log.dir]
+
 
 def _write(log: TableLog, path: str, **extra):
     """A ``Txn`` write callable that commits one add of ``path``."""
@@ -251,6 +276,45 @@ class TestTxn:
         assert "mine" not in {
             a["path"] for a in log.snapshot().entries
         }
+
+    @pytest.mark.parametrize("published", [False, True])
+    def test_only_a_refused_commit_removes_its_files(
+        self, tmp_path, monkeypatch, published
+    ):
+        """``LakeTable._commit_txn`` removes the data file of a commit
+        its txn refuses (here: the stream batch is already committed);
+        an error raised after the publish (a failing checkpoint write)
+        leaves the commit and its file."""
+        log = _log(tmp_path)
+        for v in range(CHECKPOINT_EVERY):
+            log.write_commit(v, _rec(v, adds=[f"data/f{v}"], props={}))
+        mine = tmp_path / "t" / "data" / "mine.parquet"
+        mine.parent.mkdir()
+        mine.write_bytes(b"")
+        snap = log.snapshot()
+        txn = Txn(snap, log, blind=True, marker=("s", 1))
+
+        def commit():
+            return LakeTable(None, str(tmp_path / "t"))._commit_txn(
+                txn, "append", [{"path": "data/mine.parquet", "rows": 1}], [], snap.schema
+            )
+
+        if published:
+
+            def failing(self, v):
+                raise OSError("checkpoint write failed")
+
+            monkeypatch.setattr(TableLog, "_write_checkpoint", failing)
+            with pytest.raises(OSError):
+                commit()
+            assert log.latest_version() == CHECKPOINT_EVERY
+            assert mine.exists()
+        else:
+            log.write_commit(
+                CHECKPOINT_EVERY, _rec(CHECKPOINT_EVERY, txn={"app": "s", "batch": 1})
+            )
+            assert commit() is None
+            assert not mine.exists()
 
 
 class TestLogCaches:

@@ -4,6 +4,7 @@ vacuum."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pytest
@@ -296,6 +297,12 @@ class TestBloomValueIndex:
         assert m["files_indexed"] == 1 and m["files_carried"] == 4
         r = t.read_where_eq("uid", "zz")
         assert len(r.inputFiles()) == 1
+        # a delete rewrites every indexed file (round-robin layout): the
+        # deleted key is gone and a kept key is still found
+        gone, kept = (hashlib.md5(str(k).encode()).hexdigest() for k in (10, 900))
+        t.delete("k < 50")
+        assert t.read_where_eq("uid", gone).count() == 0
+        assert t.read_where_eq("uid", kept).count() == 1
 
     def test_bloom_survives_rename_and_exactness_vs_full_scan(
         self, spark, tmp_path

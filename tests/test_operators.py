@@ -1171,11 +1171,11 @@ class TestSnapshotDiff:
 
 def test_morton2_equals_generic_zorder_value(spark):
     """operators/zorder.morton2 (magic-mask 2-D fast path) and
-    sinks/maintenance.zorder_value (generic n-dim bit loop) must emit
+    operators/zorder.zorder_value (generic n-dim bit loop) must emit
     THE SAME integer for two dimensions — same bit layout (col 0 even
     bits, col 1 odd), so either key sorts a table identically."""
-    from multi_source_data_lake_with_etl_pipeline_spark.operators.zorder import morton2
-    from multi_source_data_lake_with_etl_pipeline_spark.sinks.maintenance import (
+    from multi_source_data_lake_with_etl_pipeline_spark.operators.zorder import (
+        morton2,
         zorder_value,
     )
 

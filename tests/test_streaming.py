@@ -4,6 +4,7 @@ availableNow → memory sink, checked against batch equivalents."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -249,12 +250,13 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert all(r["value_sum"] < 100.0 for r in out2)
 
 
-def test_stream_merge_upsert_incremental_runs(spark, tmp_path):
+def test_stream_merge_lake_incremental_runs(spark, tmp_path):
     """Two availableNow runs over a growing source dir, one checkpoint:
     run 2 reads ONLY the new file (checkpoint-driven incremental) and
     MERGEs it — updated keys overwritten, untouched rows intact."""
+    from multi_source_data_lake_with_etl_pipeline_spark.lake import LakeTable
     from multi_source_data_lake_with_etl_pipeline_spark.streaming.ingest import (
-        stream_merge_upsert,
+        stream_merge_lake,
     )
 
     src = tmp_path / "src"
@@ -263,15 +265,16 @@ def test_stream_merge_upsert_incremental_runs(spark, tmp_path):
     schema = "k long, v string, seq long"
 
     # initial table
-    spark.createDataFrame(
-        [(1, "init1", 0), (2, "init2", 0)], schema
-    ).write.parquet(tbl)
+    t = LakeTable.create(
+        spark, tbl,
+        spark.createDataFrame([(1, "init1"), (2, "init2")], "k long, v string"),
+    )
 
     def run():
         stream = (
             spark.readStream.schema(schema).parquet(str(src))
         )
-        stream_merge_upsert(stream, tbl, key="k", checkpoint=ckpt, order_col="seq")
+        stream_merge_lake(stream, tbl, key="k", checkpoint=ckpt, order_col="seq")
 
     src.mkdir()
     # batch 1: update k=2 (two competing rows — seq 2 must win), insert k=3
@@ -279,7 +282,7 @@ def test_stream_merge_upsert_incremental_runs(spark, tmp_path):
         [(2, "old", 1), (2, "new", 2), (3, "ins", 1)], schema
     ).coalesce(1).write.mode("append").parquet(str(src))
     run()
-    got = {r.k: r.v for r in spark.read.parquet(tbl).collect()}
+    got = {r.k: r.v for r in t.read().collect()}
     assert got == {1: "init1", 2: "new", 3: "ins"}
 
     # batch 2 (same checkpoint): only the new file is processed
@@ -287,7 +290,7 @@ def test_stream_merge_upsert_incremental_runs(spark, tmp_path):
         1
     ).write.mode("append").parquet(str(src))
     run()
-    got = {r.k: r.v for r in spark.read.parquet(tbl).collect()}
+    got = {r.k: r.v for r in t.read().collect()}
     assert got == {1: "init1", 2: "new", 3: "upd", 4: "ins4"}
 
 
@@ -807,6 +810,14 @@ class TestLakeSink:
             assert got == {1: 5}
         else:
             assert got == {1: None, 900: 9}
+        # the refused batch's landed file is removed, not left for vacuum
+        on_disk = {
+            os.path.relpath(os.path.join(d, f), t.path)
+            for d, _, fs in os.walk(t._data_dir)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+        assert on_disk == {a["path"] for a in t._snapshot()[1]}
 
 
 # ===================================================================
