@@ -325,6 +325,49 @@ def _bindings(schema: StructType, names) -> dict[str, tuple]:
     }
 
 
+def _new_columns(
+    schema: StructType, props: Mapping, fields, who: str, assigned: dict | None = None
+) -> list[StructField]:
+    """Schema widening (Delta ``mergeSchema``), the one rule of append
+    and MERGE WITH SCHEMA EVOLUTION: the ``fields`` the table ``schema``
+    lacks, as nullable columns to add after it (earlier files read them
+    as NULL). A type change never evolves: it raises. A new column
+    whose name is a physical name in use, or tombstoned by a past DROP,
+    gets a uniquified physical name, so old files' bytes under the
+    recycled name can never resurrect. ``assigned`` keeps those names
+    stable across commit retries (the files are written once); a retry
+    finding one claimed by a racing writer conflicts."""
+    assigned = {} if assigned is None else assigned
+    have = {f.name: f for f in schema.fields}
+    used = {_phys(f) for f in schema.fields} | set(
+        json.loads(props.get(_DROPPED_PROP, "[]"))
+    )
+    out = []
+    for f in fields:
+        if f.name in have:
+            if have[f.name].dataType != f.dataType:
+                raise ValueError(
+                    f"{who} schema mismatch on '{f.name}': table has "
+                    f"{have[f.name].dataType.simpleString()}, batch has "
+                    f"{f.dataType.simpleString()} — type changes never evolve"
+                )
+            continue
+        p = assigned.get(f.name)
+        if p is None:
+            p = f.name if f.name not in used else f"{f.name}__p{uuid.uuid4().hex[:8]}"
+            assigned[f.name] = p
+        elif p in used:
+            raise CommitConflict(
+                f"concurrent schema change claimed physical column {p!r} "
+                "— re-run against the new head"
+            )
+        out.append(
+            StructField(f.name, f.dataType, True, {_PHYS_KEY: p} if p != f.name else {})
+        )
+    _check_reserved(StructType(out))
+    return out
+
+
 def _constraints(props: Mapping) -> dict[str, str]:
     """{name: CHECK predicate} recorded in table props."""
     pfx = "constraint."
@@ -1894,7 +1937,7 @@ class LakeTable:
                 os.remove(self._abs(p))
 
     def _append_recheck(
-        self, wrote: dict, cons: dict, rows, props_base=None, schema_at=None
+        self, wrote: dict, cons: dict, rows, schema_at, props_base=None
     ):
         """The lost-race re-check of every append-shaped writer, as a
         :class:`Txn` ``recheck``. At the new head: the identity
@@ -1907,8 +1950,8 @@ class LakeTable:
         CHECK constraints that moved are re-validated over
         ``rows(schema)``, so a racing ADD CONSTRAINT can't let a
         validated violating batch slip under it. ``schema_at(head)`` is
-        the schema to commit (default the head's) and raises when the
-        batch no longer fits it."""
+        the schema to commit and raises when the batch no longer fits
+        it."""
 
         def recheck(head: Snapshot) -> StructType:
             nonlocal cons
@@ -1917,7 +1960,7 @@ class LakeTable:
                     "identity watermark or table properties moved "
                     "concurrently — re-run against the new head"
                 )
-            schema = head.schema if schema_at is None else schema_at(head)
+            schema = schema_at(head)
             if _bindings(schema, wrote) != wrote:
                 raise CommitConflict(
                     "column mapping or generated columns changed "
@@ -2979,57 +3022,17 @@ class LakeTable:
         # identity ids
         df, props_base, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
 
-        # Physical names assigned to NEW columns (column mapping): a new
-        # column whose name collides with any physical name in use — or
-        # TOMBSTONED by a past DROP — gets a uniquified physical name,
-        # so old files' bytes under the recycled name can never
-        # resurrect. The dict keeps assignments stable across commit
-        # retries (files are written once).
-        assigned: dict[str, str] = {}
+        assigned: dict[str, str] = {}  # new columns' physical names
 
         def union(s: Snapshot) -> StructType:
-            cur_by_name = {f.name: f for f in s.schema.fields}
-            used = {_phys(f) for f in s.schema.fields} | set(
-                json.loads(s.props.get(_DROPPED_PROP, "[]"))
-            )
-            new_fields = []
-            for f in df.schema.fields:
-                have = cur_by_name.get(f.name)
-                if have is None:
-                    p = assigned.get(f.name)
-                    if p is None:
-                        p = (
-                            f.name
-                            if f.name not in used
-                            else f"{f.name}__p{uuid.uuid4().hex[:8]}"
-                        )
-                        assigned[f.name] = p
-                    elif p in used:  # a racing writer claimed our name
-                        raise CommitConflict(
-                            f"concurrent schema change claimed physical "
-                            f"column {p!r} — re-run against the new head"
-                        )
-                    if p != f.name:
-                        f = StructField(
-                            f.name, f.dataType, f.nullable, {_PHYS_KEY: p}
-                        )
-                    new_fields.append(f)
-                elif have.dataType != f.dataType:
-                    raise ValueError(
-                        f"{who} schema mismatch on '{f.name}': table has "
-                        f"{have.dataType.simpleString()}, batch has {f.dataType.simpleString()}"
-                    )
-            if new_fields and not merge_schema:
+            new = _new_columns(s.schema, s.props, df.schema.fields, who, assigned)
+            if new and not merge_schema:
                 raise ValueError(
                     f"{who} adds unknown column(s) "
-                    f"{[f.name for f in new_fields]}; evolve the table "
+                    f"{[f.name for f in new]}; evolve the table "
                     "schema with append(merge_schema=True) first"
                 )
-            return (
-                StructType(list(s.schema.fields) + new_fields)
-                if new_fields
-                else s.schema
-            )
+            return StructType([*s.schema.fields, *new]) if new else s.schema
 
         schema = union(snap)
         # physical names the files are written with — pinned; a retry
@@ -3043,7 +3046,7 @@ class LakeTable:
         else:
             adds = self._write_files(df, schema)
         recheck = self._append_recheck(
-            wrote, _constraints(snap.props), lambda _: df, props_base, union
+            wrote, _constraints(snap.props), lambda _: df, union, props_base
         )
         return self._commit_txn(
             Txn(snap, self._log, blind=True, marker=marker, recheck=recheck),
@@ -3059,7 +3062,9 @@ class LakeTable:
         schema — the batch's generated columns are computed when
         omitted and validated when supplied, exactly like append; a
         generation expression whose referenced column vanished from
-        the batch fails analysis loudly. Column mapping resets
+        the batch fails analysis loudly. Identity columns keep their
+        spec and watermark (ids never recycle across an overwrite) and
+        DEFAULT columns their default. Column mapping resets
         (physical == logical for the all-new files) and drop
         tombstones are released: no active file predates this commit,
         so recycled names can't collide — old snapshots keep their own
@@ -3067,89 +3072,125 @@ class LakeTable:
         (Delta: partition columns are fixed at create): the new files
         land under the partition columns' CURRENT logical names —
         which become their post-reset physical names — and the
-        partition prop follows."""
-        _check_reserved(df.schema)
-        v, active, cur = self._snapshot()
-        part_logical = self.partition_columns(v)
-        gen_fields = [f for f in cur.fields if _gen_expr(f)]
+        partition prop follows. A commit racing this one (an append, a
+        rewrite, a schema or props change) makes it raise
+        :class:`CommitConflict`."""
+        snap = self._readable_snapshot()
+        part_logical = self.partition_columns(snap.version)
         # generated columns materialize BEFORE the partition-presence
         # check: a table partitioned by a generated column (event_date
         # GENERATED AS CAST(ts AS DATE)) accepts a batch supplying only
         # ts, exactly like create/append/replace_where
-        if gen_fields:
-            df = self._apply_generated(df, StructType(gen_fields))
-        # DEFAULT columns survive the replace: an omitted defaulted
-        # column materializes (and keeps its metadata below) instead of
-        # silently vanishing from the post-overwrite schema
-        df = self._apply_defaults(df, cur)
+        df, _, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
         missing_part = [c for c in part_logical if c not in df.columns]
         if missing_part:
             raise ValueError(
                 f"overwrite batch is missing partition column(s) "
                 f"{missing_part} — partitioning is fixed at create"
             )
-        # identity columns survive the replace (spec + watermark): the
-        # batch must omit them; values are engine-assigned ABOVE the
-        # existing watermark — ids never recycle across an overwrite
-        id_fields = [f for f in cur.fields if _identity_spec(f)]
-        base_props = self.props(v)
-        fin_id = None
-        if id_fields:
-            df, fin_id = self._assign_identity(
-                df, StructType(id_fields), base_props
-            )
-        obs_c, val_c = self._fused_constraints(df)  # rides the write
-        if obs_c:
-            adds, _ = self._write_files(
-                df, partition_phys=part_logical, observe=obs_c,
-                validate=val_c,
-            )
-        else:
-            adds = self._write_files(df, partition_phys=part_logical)
-        schema = df.schema
-        dmap = {
-            f.name: _default_expr(f)
-            for f in cur.fields
-            if _default_expr(f) and f.name in df.columns
-        }
-        if gen_fields or id_fields or dmap:
-            gmap = {f.name: _gen_expr(f) for f in gen_fields}
-            imap = {
-                f.name: (f.metadata or {}).get(_IDENTITY_KEY)
-                for f in id_fields
+        rules = {
+            f.name: {
+                k: f.metadata[k]
+                for k in (_GEN_KEY, _IDENTITY_KEY, _DEFAULT_KEY)
+                if k in (f.metadata or {})
             }
-
-            def _remeta(f):
-                if f.name in gmap:
-                    return StructField(
-                        f.name, f.dataType, f.nullable, {_GEN_KEY: gmap[f.name]}
-                    )
-                if f.name in imap:
-                    return StructField(
-                        f.name, f.dataType, f.nullable,
-                        {_IDENTITY_KEY: imap[f.name]},
-                    )
-                if f.name in dmap:
-                    return StructField(
-                        f.name, f.dataType, f.nullable,
-                        {_DEFAULT_KEY: dmap[f.name]},
-                    )
-                return f
-
-            schema = StructType([_remeta(f) for f in df.schema.fields])
-        props = dict(base_props)
+            for f in snap.schema.fields
+        }
+        schema = StructType(
+            [
+                StructField(f.name, f.dataType, f.nullable, rules[f.name])
+                if rules.get(f.name)
+                else f
+                for f in df.schema.fields
+            ]
+        )
+        props = dict(snap.props)
         changed = props.pop(_DROPPED_PROP, None) is not None
         if part_logical:
             new_prop = json.dumps(part_logical)  # post-reset physical
             changed = changed or props.get(_PART_PROP) != new_prop
             props[_PART_PROP] = new_prop
+        return self._replace(
+            snap, df, fin_id, obs_c, val_c, "overwrite",
+            schema=schema, props=props if changed else None,
+            partition_phys=part_logical,
+        )
+
+    def _replace(
+        self,
+        snap: Snapshot,
+        df: DataFrame,
+        fin_id,
+        observe: dict,
+        validate,
+        who: str,
+        region=None,
+        schema: StructType | None = None,
+        props: dict | None = None,
+        partition_phys: list[str] | None = None,
+        metrics: dict | None = None,
+    ) -> int:
+        """The replace core of :meth:`overwrite`, :meth:`replace_where`
+        and :meth:`overwrite_partitions`: write the batch prepared
+        against ``snap`` (:meth:`_prepare_batch`) once, pick the
+        entries it replaces and commit an ``overwrite`` through
+        :class:`Txn`. ``region(adds)`` returns ``(match, cond)``:
+        ``match(entries)`` the current-layout entries in the replaced
+        partitions (metadata only; also the probe for interleaved
+        appends) and ``cond()`` those partitions as a row condition, or
+        None when nothing can lie in them. A file written under an
+        earlier partition layout can be neither kept nor dropped whole
+        when it holds rows in the region, so one bounded scan of those
+        files proves none does or refuses with the remedy. Without
+        ``region`` every active entry is replaced and any interleaved
+        add conflicts. A refusal after the write removes the batch's
+        files. ``schema`` (default the snapshot's), ``props`` (None:
+        unchanged) and ``partition_phys`` are the commit's and the
+        write's."""
+        schema = snap.schema if schema is None else schema
+        if observe:
+            adds, _ = self._write_files(
+                df, schema, partition_phys, observe=observe, validate=validate
+            )
+        else:
+            adds = self._write_files(df, schema, partition_phys)
+        targets, probe = list(snap.entries), lambda ents: True
+        try:
+            if region is not None:
+                match, cond = region(adds)
+                prunable, legacy = self._split_by_layout(snap.entries)
+                targets, probe = match(prunable), lambda ents: bool(match(ents))
+                in_region = cond() if legacy else None
+                if (
+                    in_region is not None
+                    and self._read_entries(legacy, snap.schema)
+                    .filter(in_region)
+                    .limit(1)
+                    .count()
+                ):
+                    raise ValueError(
+                        f"{who}: {len(legacy)} file(s) written under an "
+                        "earlier partition layout contain rows in a "
+                        "replaced partition — run compact() to rewrite "
+                        "them into the current layout first"
+                    )
+        except BaseException:
+            self._unland(snap, adds)
+            raise
         if fin_id is not None:
-            before = dict(props)
-            props = fin_id(props)
-            changed = changed or props != before
-        return self._commit(
-            v + 1, "overwrite", adds, [a["path"] for a in active], schema,
-            props=props if changed else None,
+            props = fin_id(dict(snap.props if props is None else props))
+        m = {"rows_written": sum(int(a.get("rows", 0)) for a in adds)}
+        if region is not None:
+            m["partitions_replaced"] = len(
+                {
+                    json.dumps(a.get("partition"), sort_keys=True, default=dict)
+                    for a in [*targets, *adds]
+                }
+            )
+        return self._commit_txn(
+            Txn(snap, self._log, touched=targets, probe=probe),
+            "overwrite", adds, [a["path"] for a in targets], schema,
+            props=props, metrics={**m, **(metrics or {})},
         )
 
     def partitions(self, version: int | None = None) -> list[dict]:
@@ -3280,23 +3321,12 @@ class LakeTable:
         unchanged. Concurrent appends INTO a matched partition
         conflict (metadata read-probe); appends elsewhere commute."""
         snap = self._readable_snapshot()
-        v, active, schema = snap.version, snap.entries, snap.schema
-        if not self._partition_phys(v):
+        if not self._partition_phys(snap.version):
             raise ValueError("replace_where requires a partitioned table")
-        df, id_props_base, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
-        # constraint + stray-row validation both ride the write job
-        # below (guide §1.2: two standalone scans of the batch fold
-        # into the write's single pass); either violation aborts before
-        # any file is renamed into data/, same contract as before.
-        # Error-precedence note (intentional trade, round 10): because
-        # validation now rides the write, a batch that BOTH contains
-        # stray rows AND overlaps a legacy-layout file reports the
-        # legacy-overlap error first (pre-fusion the stray error fired
-        # first), and an invalid batch pays the staging write before
-        # rejection — both rejections are loud ValueErrors and the
-        # table state is identical (nothing lands), so the saved scan
-        # on every VALID batch wins.
-        # NULL predicate rows are OUTSIDE the region (SQL boolean)
+        df, _, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
+        # the stray-row check rides the write job with the constraints
+        # (one pass over the batch); a violation aborts before any file
+        # lands. NULL predicate rows are OUTSIDE the region (SQL boolean)
         stray_pred = F.expr(f"coalesce(not ({predicate}), true)")
         obs_c["_stray"] = F.sum(stray_pred.cast("bigint"))
 
@@ -3313,50 +3343,15 @@ class LakeTable:
                     f"region ({predicate}), e.g. {sample}"
                 )
 
-        targets = self._matching_entries(active, predicate, schema)
-        # partition evolution: files from an earlier layout have no
-        # current-layout metadata — replaceWhere is a WHOLE-FILE
-        # operation, so a legacy file with even one matching row can
-        # neither be kept (its rows would survive the replace) nor
-        # dropped (its non-matching rows would vanish). Prove
-        # non-overlap with one bounded scan of the legacy files only;
-        # overlap refuses loudly with the remedy.
-        _, legacy = self._split_by_layout(active)
-        if legacy:
-            overlap = (
-                self._read_entries(legacy, schema)
-                .filter(F.expr(f"coalesce(({predicate}), false)"))
-                .limit(1)
-                .count()
+        def region(_adds):
+            return (
+                lambda ents: self._matching_entries(ents, predicate, snap.schema),
+                lambda: F.expr(f"coalesce(({predicate}), false)"),
             )
-            if overlap:
-                raise ValueError(
-                    f"replace_where: {len(legacy)} file(s) written under "
-                    "an earlier partition layout contain rows matching "
-                    f"({predicate}) — run compact() to rewrite them into "
-                    "the current layout first"
-                )
-        adds, _ = self._write_files(
-            df, schema, observe=obs_c, validate=_validate
-        )
-        n_rows = sum(int(a.get("rows", 0)) for a in adds)
-        probe = lambda ents: bool(  # noqa: E731 — metadata-only probe
-            self._matching_entries(ents, predicate, schema)
-        )
-        return self._commit_txn(
-            Txn(snap, self._log, touched=targets, probe=probe),
-            "overwrite", adds, [a["path"] for a in targets], schema,
-            props=fin_id(dict(id_props_base)) if fin_id is not None else None,
-            metrics={
-                "rows_written": n_rows,
-                "partitions_replaced": len(
-                    {
-                        json.dumps(a.get("partition"), sort_keys=True, default=dict)
-                        for a in targets
-                    }
-                ),
-                "predicate": predicate,
-            },
+
+        return self._replace(
+            snap, df, fin_id, obs_c, _validate, "replace_where", region,
+            metrics={"predicate": predicate},
         )
 
     def overwrite_partitions(self, df: DataFrame) -> int:
@@ -3369,70 +3364,38 @@ class LakeTable:
         (partition values recorded on add entries); concurrent appends
         into an overwritten partition conflict, elsewhere commute."""
         snap = self._readable_snapshot()
-        v, active, schema = snap.version, snap.entries, snap.schema
-        pp = self._partition_phys(v)
+        pp = self._partition_phys(snap.version)
         if not pp:
             raise ValueError(
                 "overwrite_partitions requires a partitioned table"
             )
-        df, id_props_base, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
-        if obs_c:
-            adds, _ = self._write_files(
-                df, schema, observe=obs_c, validate=val_c
-            )
-        else:
-            adds = self._write_files(df, schema)
-        new_keys = {
-            tuple(a["partition"].get(p) for p in pp) for a in adds
-        }
+        df, _, fin_id, obs_c, val_c = self._prepare_batch(df, snap)
         key_of = lambda a: tuple(  # noqa: E731
             (a.get("partition") or {}).get(p) for p in pp
         )
-        prunable, legacy = self._split_by_layout(active)
-        if legacy and new_keys:
-            # partition evolution: a legacy file's rows might belong to
-            # an overwritten partition — whole-file semantics can't
-            # split it; prove non-overlap (typed comparison against the
-            # hive-encoded keys) or refuse with the remedy
-            by_phys = {_phys(f): f for f in schema.fields}
-            convs = {p: _part_converter(by_phys[p].dataType) for p in pp}
-            cond = None
-            for key in new_keys:
-                c = None
-                for p, pv in zip(pp, key):
-                    col = F.col(by_phys[p].name)
-                    leg = (
-                        col.isNull()
-                        if pv is None
-                        else (col == F.lit(convs[p](pv)))
-                    )
-                    c = leg if c is None else (c & leg)
-                cond = c if cond is None else (cond | c)
-            overlap = (
-                self._read_entries(legacy, schema)
-                .filter(cond)
-                .limit(1)
-                .count()
-            )
-            if overlap:
-                raise ValueError(
-                    f"overwrite_partitions: {len(legacy)} file(s) written "
-                    "under an earlier partition layout contain rows in an "
-                    "overwritten partition — run compact() to rewrite "
-                    "them into the current layout first"
-                )
-        targets = [a for a in prunable if key_of(a) in new_keys]
-        probe = lambda ents: any(  # noqa: E731 — metadata-only probe
-            key_of(e) in new_keys for e in ents
-        )
-        return self._commit_txn(
-            Txn(snap, self._log, touched=targets, probe=probe),
-            "overwrite", adds, [a["path"] for a in targets], schema,
-            props=fin_id(dict(id_props_base)) if fin_id is not None else None,
-            metrics={
-                "rows_written": sum(int(a.get("rows", 0)) for a in adds),
-                "partitions_replaced": len(new_keys),
-            },
+        by_phys = {_phys(f): f for f in snap.schema.fields}
+        convs = {p: _part_converter(by_phys[p].dataType) for p in pp}
+
+        def region(adds):
+            keys = {key_of(a) for a in adds}
+
+            def cond():
+                # the written partitions as a row condition: a typed
+                # comparison against the hive-encoded keys
+                out = None
+                for key in keys:
+                    c = None
+                    for p, pv in zip(pp, key):
+                        col = F.col(by_phys[p].name)
+                        leg = col.isNull() if pv is None else col == F.lit(convs[p](pv))
+                        c = leg if c is None else (c & leg)
+                    out = c if out is None else (out | c)
+                return out
+
+            return (lambda ents: [e for e in ents if key_of(e) in keys]), cond
+
+        return self._replace(
+            snap, df, fin_id, obs_c, val_c, "overwrite_partitions", region
         )
 
     def apply_cdc(
@@ -3819,41 +3782,18 @@ class LakeTable:
         v, active, schema = self._snapshot()
         if evolve_schema:
             # MERGE ... WITH SCHEMA EVOLUTION (Delta parity): new SOURCE
-            # columns widen the target schema in the SAME commit —
-            # additive only, append(merge_schema=True)'s rules (type
-            # changes always reject; fresh PHYSICAL names when a new
-            # logical name collides with a used or drop-tombstoned
-            # physical name). Target files predating the commit read
-            # the new columns as NULL; CDF preimages carry NULL there
-            # too — exactly the widened-read semantics.
-            cur_by_name = {f.name: f for f in schema.fields}
-            used = {_phys(f) for f in schema.fields} | set(
-                json.loads(self.props(v).get(_DROPPED_PROP, "[]"))
+            # columns widen the target schema in the SAME commit, by
+            # append(merge_schema=True)'s rule. Target files predating
+            # the commit read the new columns as NULL; CDF preimages
+            # carry NULL there too — exactly the widened-read semantics.
+            schema = StructType(
+                [
+                    *schema.fields,
+                    *_new_columns(
+                        schema, self.props(v), source.schema.fields, "merge_into"
+                    ),
+                ]
             )
-            new_fields = []
-            for f in source.schema.fields:
-                have = cur_by_name.get(f.name)
-                if have is None:
-                    _check_reserved(StructType([f]))
-                    p = (
-                        f.name
-                        if f.name not in used
-                        else f"{f.name}__p{uuid.uuid4().hex[:8]}"
-                    )
-                    new_fields.append(
-                        StructField(f.name, f.dataType, True, {_PHYS_KEY: p})
-                        if p != f.name
-                        else StructField(f.name, f.dataType, True)
-                    )
-                elif have.dataType != f.dataType:
-                    raise ValueError(
-                        f"merge_into schema mismatch on '{f.name}': table "
-                        f"has {have.dataType.simpleString()}, source has "
-                        f"{f.dataType.simpleString()} — type changes never "
-                        "evolve"
-                    )
-            if new_fields:
-                schema = StructType(list(schema.fields) + new_fields)
         data_cols = [f.name for f in schema.fields]
         by_name = {f.name: f for f in schema.fields}
         gen_cols = {f.name for f in schema.fields if _gen_expr(f)}

@@ -137,8 +137,7 @@ class LakeCdfStreamReader(DataSourceStreamReader):
         return {"v": int(self.from_version)}
 
     def latestOffset(self) -> dict:
-        vs = TableLog.at(os.path.join(self.path, _LOG)).versions()
-        latest = vs[-1] if vs else int(self.from_version)
+        latest = TableLog.at(os.path.join(self.path, _LOG)).latest_version()
         if self.max_versions is not None:
             # maxFilesPerTrigger-style admission control at COMMIT
             # granularity: a backfilled table drains as a sequence of
@@ -384,53 +383,6 @@ def register_lakecdf_datasource(spark: SparkSession) -> None:
     spark.dataSource.register(LakeCdfDataSource)
 
 
-def lake_append_stream(
-    spark: SparkSession,
-    path: str,
-    from_version: int = -1,
-    ignore_deletes: bool = False,
-    skip_change_commits: bool = False,
-    max_versions_per_batch: int | None = None,
-) -> DataFrame:
-    """The lake table as a DATA stream (Delta non-CDF streaming-source
-    parity): each commit's INSERTED rows arrive as a micro-batch (the
-    table's columns; ``_change_type``/``_commit_version`` dropped). A
-    merge/update/delete commit in range RAISES — Delta's contract: a
-    data stream silently skipping changes desyncs downstream state —
-    unless ``ignore_deletes`` (delete-only commits tolerated:
-    partition/GDPR retention) or ``skip_change_commits`` (every change
-    commit skipped) opts in. Generated columns recompute like the CDF
-    wrapper."""
-    from pyspark.sql import functions as F
-
-    from ..lake import _gen_expr
-
-    register_lakecdf_datasource(spark)
-    reader = (
-        spark.readStream.format("lakecdf")
-        .option("path", path)
-        .option("from_version", str(from_version))
-        .option("mode", "appends")
-        .option("ignore_deletes", "true" if ignore_deletes else "false")
-        .option(
-            "skip_change_commits", "true" if skip_change_commits else "false"
-        )
-    )
-    if max_versions_per_batch is not None:
-        reader = reader.option(
-            "max_versions_per_batch", str(int(max_versions_per_batch))
-        )
-    out = reader.load()
-    _, _, schema = LakeTable(None, path)._snapshot()
-    for f in schema.fields:
-        e = _gen_expr(f)
-        if e:
-            out = out.withColumn(
-                f.name, F.coalesce(F.col(f.name), F.expr(e).cast(f.dataType))
-            )
-    return out.drop("_change_type", "_commit_version")
-
-
 def lake_cdf_stream(
     spark: SparkSession,
     path: str,
@@ -448,6 +400,43 @@ def lake_cdf_stream(
     source, and a post-read ``coalesce(col, generation expr)``
     projection here recomputes them — a narrow per-row map on the
     wrapper DataFrame, so the executor reader stays SQL-free."""
+    return _lake_stream(spark, path, from_version, max_versions_per_batch)
+
+
+def lake_append_stream(
+    spark: SparkSession,
+    path: str,
+    from_version: int = -1,
+    ignore_deletes: bool = False,
+    skip_change_commits: bool = False,
+    max_versions_per_batch: int | None = None,
+) -> DataFrame:
+    """The lake table as a DATA stream (Delta non-CDF streaming-source
+    parity): each commit's INSERTED rows arrive as a micro-batch (the
+    table's columns; ``_change_type``/``_commit_version`` dropped). A
+    merge/update/delete commit in range RAISES — Delta's contract: a
+    data stream silently skipping changes desyncs downstream state —
+    unless ``ignore_deletes`` (delete-only commits tolerated:
+    partition/GDPR retention) or ``skip_change_commits`` (every change
+    commit skipped) opts in. Generated columns recompute like
+    :func:`lake_cdf_stream`."""
+    return _lake_stream(
+        spark, path, from_version, max_versions_per_batch,
+        mode="appends",
+        ignore_deletes="true" if ignore_deletes else "false",
+        skip_change_commits="true" if skip_change_commits else "false",
+    ).drop("_change_type", "_commit_version")
+
+
+def _lake_stream(
+    spark: SparkSession,
+    path: str,
+    from_version: int,
+    max_versions_per_batch: int | None,
+    **options: str,
+) -> DataFrame:
+    """The ``lakecdf`` source over ``path`` with reader ``options``,
+    generated columns recomputed where the raw source reads NULL."""
     from pyspark.sql import functions as F
 
     from ..lake import _gen_expr
@@ -457,6 +446,7 @@ def lake_cdf_stream(
         spark.readStream.format("lakecdf")
         .option("path", path)
         .option("from_version", str(from_version))
+        .options(**options)
     )
     if max_versions_per_batch is not None:
         reader = reader.option(

@@ -5,13 +5,14 @@ source commits —
     table A (appends trickle)
       → appends-mode lake stream (``lake_append_stream``)
       → narrow transform (filter + computed column)
-      → native ``lakesink`` WRITER into table B
+      → ``stream_append_lake`` (foreachBatch + ``append_stream_batch``)
+        into table B
       → in-loop maintenance (``optimize_if_needed`` on a cadence)
       → ``vacuum(protect_checkpoints=[ck])`` consumer-floor guard
 
 measuring B's file-count and read-tax curves WITH vs WITHOUT the
 maintenance cadence (the bounded-files / flat-read claim), replaying a
-drain mid-run to prove exactly-once (the lakesink txn marker makes the
+drain mid-run to prove exactly-once (the batch's txn marker makes the
 replay a no-op), and exercising the vacuum guard against the live
 checkpoint (refuses while the stream lags, allows once caught up).
 
@@ -40,8 +41,8 @@ from multi_source_data_lake_with_etl_pipeline_spark.session import get_spark
 from multi_source_data_lake_with_etl_pipeline_spark.streaming.cdf_source import (
     lake_append_stream,
 )
-from multi_source_data_lake_with_etl_pipeline_spark.streaming.lake_sink import (
-    register_lakesink_datasource,
+from multi_source_data_lake_with_etl_pipeline_spark.streaming.ingest import (
+    stream_append_lake,
 )
 
 N_BATCHES = 50
@@ -53,7 +54,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("stream-loop-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    register_lakesink_datasource(spark)
     o = (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -89,22 +89,16 @@ def main() -> None:
         ck = os.path.join(root, "ck")
 
         def drain():
-            q = (
+            stream_append_lake(
                 lake_append_stream(spark, a.path)
                 .filter(F.col("o_totalprice") > 0)
                 .select(
                     "o_orderkey",
                     "o_custkey",
                     (F.col("o_totalprice") * F.lit(1.1)).alias("gross"),
-                )
-                .writeStream.format("lakesink")
-                .option("path", b.path)
-                .option("app_id", "loop")
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
+                ),
+                b.path, ck, "loop",
             )
-            q.awaitTermination(300)
 
         t_drain = time.time()
         drain()

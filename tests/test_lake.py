@@ -37,6 +37,16 @@ def _mk_from(spark, path, df) -> LakeTable:
     return LakeTable.create(spark, str(path), df)
 
 
+def _parquet_on_disk(t: LakeTable) -> set[str]:
+    """Every parquet file under the table's data/ dir, table-relative."""
+    return {
+        os.path.relpath(os.path.join(d, f), t.path)
+        for d, _, fs in os.walk(t._data_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
 def _file_md5s(t: LakeTable) -> dict[str, str]:
     out = {}
     for f in os.listdir(t._data_dir):
@@ -511,6 +521,9 @@ class TestLakeStreaming:
         stream = spark.readStream.schema("k long, v long").parquet(str(src))
         stream_append_lake(stream, str(tmp_path / "t"), str(tmp_path / "ckpt"), "app1")
         assert t.read().count() == 50
+        assert t.last_committed_batch("app1") == 0
+        # footer stats landed -> point lookup prunes like any append
+        assert sorted(r["v"] for r in t.read_where_eq("k", 7).collect()) == [14]
         # restart with the SAME checkpoint: nothing new → no extra rows
         stream2 = spark.readStream.schema("k long, v long").parquet(str(src))
         stream_append_lake(stream2, str(tmp_path / "t"), str(tmp_path / "ckpt"), "app1")
@@ -524,6 +537,184 @@ class TestLakeStreaming:
         stream4 = spark.readStream.schema("k long, v long").parquet(str(src))
         stream_append_lake(stream4, str(tmp_path / "t"), str(tmp_path / "ckpt3"), "app2")
         assert t.read().count() == 100
+        # new source data under the SAME checkpoint: the next batch appends
+        spark.createDataFrame([(99, 198)], "k long, v long").write.mode(
+            "append"
+        ).parquet(str(src))
+        stream5 = spark.readStream.schema("k long, v long").parquet(str(src))
+        stream_append_lake(stream5, str(tmp_path / "t"), str(tmp_path / "ckpt"), "app1")
+        assert t.read().count() == 101
+        assert t.last_committed_batch("app1") == 1
+
+    def test_stream_append_constraint_violation_fails_whole_batch(
+        self, spark, tmp_path
+    ):
+        from multi_source_data_lake_with_etl_pipeline_spark.streaming.ingest import (
+            stream_append_lake,
+        )
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(1, 5)], "k long, v long"),
+        )
+        t.add_constraint("v_pos", "v > 0")
+        src = str(tmp_path / "src")
+        spark.createDataFrame([(2, 10), (3, -1)], "k long, v long").write.parquet(src)
+        before = t.latest_version()
+        with pytest.raises(Exception, match="v_pos"):
+            stream_append_lake(
+                spark.readStream.schema("k long, v long").parquet(src),
+                t.path, str(tmp_path / "ck"), "bad",
+            )
+        assert t.latest_version() == before  # table untouched
+        assert t.read().count() == 1
+
+    def test_stream_append_partitioned_prunes_and_matches(self, spark, tmp_path):
+        import json
+
+        from multi_source_data_lake_with_etl_pipeline_spark.streaming.ingest import (
+            stream_append_lake,
+        )
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(0, "seed", 0)], "k long, region string, v long"),
+            partition_by=["region"],
+        )
+        src = str(tmp_path / "src")
+        spark.createDataFrame(
+            [(1, "us", 10), (2, "eu", 20), (3, "us", 30), (4, None, 40)],
+            "k long, region string, v long",
+        ).repartition(2).write.parquet(src)
+
+        def drain():
+            stream_append_lake(
+                spark.readStream.schema("k long, region string, v long").parquet(src),
+                t.path, str(tmp_path / "ck"), "psink",
+            )
+
+        drain()
+        got = sorted((r["k"], r["region"], r["v"]) for r in t.read().collect())
+        assert got == [
+            (0, "seed", 0), (1, "us", 10), (2, "eu", 20),
+            (3, "us", 30), (4, None, 40),
+        ]
+        # entries carry partition metadata -> replace_where prunes them
+        parts = {
+            json.dumps(a.get("partition"), default=dict)
+            for a in t._snapshot()[1]
+            if a.get("partition")
+        }
+        assert any("us" in p for p in parts) and any("null" in p for p in parts)
+        # metadata pruning works on stream-written files
+        pruned = t.read_pruned("region", "eu", "eu")
+        assert sorted(r["k"] for r in pruned.collect() if r["region"] == "eu") == [2]
+        # NULL partition skipping
+        assert sorted(r["k"] for r in t.read_where_null("region").collect()) == [4]
+        # replay: a second drain on the same checkpoint is a no-op
+        drain()
+        assert t.read().count() == 5
+
+    def test_stream_append_constraint_on_partition_column(self, spark, tmp_path):
+        from multi_source_data_lake_with_etl_pipeline_spark.streaming.ingest import (
+            stream_append_lake,
+        )
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(0, "ok", 0)], "k long, region string, v long"),
+            partition_by=["region"],
+        )
+        t.add_constraint("region_known", "region IN ('ok', 'us', 'eu')")
+        src = str(tmp_path / "src")
+        spark.createDataFrame(
+            [(1, "mars", 10)], "k long, region string, v long"
+        ).write.parquet(src)
+        with pytest.raises(Exception, match="region_known"):
+            stream_append_lake(
+                spark.readStream.schema("k long, region string, v long").parquet(src),
+                t.path, str(tmp_path / "ck"), "psink",
+            )
+        assert t.read().count() == 1  # batch aborted whole
+
+    def test_stream_append_generated_partition(self, spark, tmp_path):
+        """A stream batch omitting a generated partition column lands
+        each row in the partition its expression computes."""
+        from multi_source_data_lake_with_etl_pipeline_spark.streaming.ingest import (
+            stream_append_lake,
+        )
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(1, 5)], "k long, v long"),
+            generated_columns={"bucket": "pmod(k, 4)"},
+            partition_by=["bucket"],
+        )
+        src = str(tmp_path / "src")
+        spark.createDataFrame(
+            [(k, k * 10) for k in range(2, 12)], "k long, v long"
+        ).write.parquet(src)
+        stream_append_lake(
+            spark.readStream.schema("k long, v long").parquet(src),
+            t.path, str(tmp_path / "ck"), "gen",
+        )
+        assert t.partitions() == [{"bucket": b} for b in range(4)]
+        seen = []
+        for b in range(4):
+            pruned = t.read_pruned("bucket", b, b)
+            assert pruned.inputFiles()
+            assert all(f"/bucket={b}/" in f for f in pruned.inputFiles())
+            rows = pruned.collect()
+            assert all(r["k"] % 4 == b == r["bucket"] for r in rows)
+            seen += [r["k"] for r in rows]
+        assert sorted(seen) == list(range(1, 12))
+
+    @pytest.mark.parametrize("race", ["add_constraint", "drop_readd"])
+    def test_stream_batch_rechecks_a_racing_writer(
+        self, spark, tmp_path, monkeypatch, race
+    ):
+        """A writer landing just before a stream batch's txn-marked
+        commit makes ``append_stream_batch`` re-check the batch at the
+        new head: a racing CHECK constraint the batch violates refuses
+        it, a drop + re-add of a batch column conflicts."""
+        from multi_source_data_lake_with_etl_pipeline_spark.lake_log import TableLog
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(1, 5)], "k long, v long"),
+        )
+        real = TableLog.write_commit
+        fired = []
+
+        def racing(self, version, rec):
+            if rec.get("txn") and not fired:
+                fired.append(True)
+                other = LakeTable.load(spark, t.path)
+                if race == "add_constraint":
+                    other.add_constraint("v_pos", "v > 0")
+                else:
+                    other.drop_column("v")
+                    other.append(
+                        spark.createDataFrame([(900, 9)], "k long, v long"),
+                        merge_schema=True,
+                    )
+            return real(self, version, rec)
+
+        monkeypatch.setattr(TableLog, "write_commit", racing)
+        want = ConstraintViolation if race == "add_constraint" else CommitConflict
+        with pytest.raises(want):
+            t.append_stream_batch(
+                spark.createDataFrame([(2, -7)], "k long, v long"), "race", 0
+            )
+        assert fired
+        assert t.last_committed_batch("race") is None
+        got = {int(r["k"]): r["v"] for r in t.read().collect()}
+        if race == "add_constraint":
+            assert got == {1: 5}
+        else:
+            assert got == {1: None, 900: 9}
+        # the refused batch's landed file is removed, not left for vacuum
+        assert _parquet_on_disk(t) == {a["path"] for a in t._snapshot()[1]}
 
     def test_append_stream_batch_direct_replay(self, spark, tmp_path):
         t = _mk(spark, tmp_path, rows=10, files=1)
@@ -3513,6 +3704,50 @@ class TestPartitionedTables:
             type(t)._write_files = orig
         got = sorted(r["k"] for r in t.read().collect())
         assert 500 in got and 501 in got and 904 in got and 903 not in got
+
+    @pytest.mark.parametrize("op", ["overwrite_partitions", "replace_where"])
+    def test_legacy_overlap_refusal_leaves_no_file(self, spark, tmp_path, op):
+        """A replace refused because a file of an earlier partition
+        layout holds rows in a replaced partition leaves every data file
+        an active entry: the batch it wrote is removed."""
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(1, "us", 10), (2, "eu", 20)], "k long, region string, v long"),
+        )
+        t.set_partitioning(["region"])
+        v = t.latest_version()
+        batch = spark.createDataFrame([(8, "us", 80)], "k long, region string, v long")
+        with pytest.raises(ValueError, match="earlier partition layout"):
+            if op == "replace_where":
+                t.replace_where(batch, "region = 'us'")
+            else:
+                t.overwrite_partitions(batch)
+        assert t.latest_version() == v
+        assert _parquet_on_disk(t) == {a["path"] for a in t._snapshot()[1]}
+
+    def test_overwrite_losing_a_race_leaves_no_file(self, spark, tmp_path, monkeypatch):
+        """An overwrite racing an append conflicts (the append's rows are
+        never silently clobbered) and removes the files it landed."""
+        from multi_source_data_lake_with_etl_pipeline_spark.lake_log import TableLog
+
+        t = _mk(spark, tmp_path, rows=10, files=1)
+        real = TableLog.write_commit
+        fired = []
+
+        def racing(self, version, rec):
+            if rec["op"] == "overwrite" and not fired:
+                fired.append(True)
+                LakeTable.load(spark, t.path).append(
+                    spark.createDataFrame([(500, 5)], "k long, v long")
+                )
+            return real(self, version, rec)
+
+        monkeypatch.setattr(TableLog, "write_commit", racing)
+        with pytest.raises(CommitConflict):
+            t.overwrite(spark.createDataFrame([(1, 1)], "k long, v long"))
+        assert fired
+        assert t.read().count() == 11
+        assert _parquet_on_disk(t) == {a["path"] for a in t._snapshot()[1]}
 
     def test_overwrite_partitions_dynamic(self, spark, tmp_path):
         t = self._mk_part(spark, tmp_path / "t")

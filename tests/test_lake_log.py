@@ -203,6 +203,26 @@ class TestTableLog:
         assert log.latest_version() == 104
         assert listed == [log.dir]
 
+    def test_cdf_source_polls_the_head_without_listing(self, tmp_path, monkeypatch):
+        """The change-feed source's ``latestOffset``, polled on every
+        trigger, is the head ``latest_version`` finds: at 100+ versions
+        a poll lists nothing, capped or not."""
+        from multi_source_data_lake_with_etl_pipeline_spark.streaming.cdf_source import (
+            LakeCdfStreamReader,
+        )
+
+        log = _log(tmp_path)
+        for v in range(105):
+            log.write_commit(v, _rec(v, adds=[f"f{v}"]))
+        listed = []
+        real = os.listdir
+        monkeypatch.setattr(os, "listdir", lambda d: listed.append(d) or real(d))
+        path, schema = str(tmp_path / "t"), StructType([])
+        assert LakeCdfStreamReader(path, -1, schema).latestOffset() == {"v": 104}
+        capped = LakeCdfStreamReader(path, 100, schema, max_versions_per_batch=2)
+        assert capped.latestOffset() == {"v": 102}
+        assert listed == []
+
 
 def _write(log: TableLog, path: str, **extra):
     """A ``Txn`` write callable that commits one add of ``path``."""

@@ -1,15 +1,13 @@
 """Round 10: TIMESTAMP AS OF time travel, SQL-text DML/DDL front end,
 GENERATED BY DEFAULT identity, vacuum consumer-floor guard, plus the
 ADVICE r9 regression pins (CDF rate-limit restart monotonicity,
-appends-mode metadata-only commits, lakesink timezone, eager default
-validation)."""
+appends-mode metadata-only commits, eager default validation)."""
 
 from __future__ import annotations
 
 import datetime
 import json
 import os
-import time
 
 import pytest
 
@@ -358,51 +356,6 @@ class TestAdviceRegressions:
         )
         with pytest.raises(Exception):
             t.set_column_default("s", "nonexistent_col")
-
-    def test_lakesink_timestamps_correct_under_non_utc_system_tz(
-        self, spark, tmp_path
-    ):
-        """The staged-arrow path normalizes the worker's system-local
-        naive datetimes to UTC: simulate a non-UTC host by flipping TZ
-        in THIS process (write() is pure python/pyarrow) and assert the
-        staged file stores the true instant."""
-        import pyarrow.parquet as pq
-
-        from multi_source_data_lake_with_etl_pipeline_spark.streaming.lake_sink import (
-            LakeSinkStreamWriter,
-        )
-
-        t = LakeTable.create(
-            spark, str(tmp_path / "t"),
-            spark.createDataFrame(
-                [], "k long, ts timestamp"
-            ),
-        )
-        writer = LakeSinkStreamWriter(t.path, "tztest", t.read().schema)
-        old_tz = os.environ.get("TZ")
-        os.environ["TZ"] = "America/Chicago"
-        time.tzset()
-        try:
-            # the instant 2024-06-01T12:00:00Z renders as naive 07:00
-            # in Chicago — exactly what the python worker would hand us
-            naive_local = datetime.datetime(2024, 6, 1, 7, 0, 0)
-            msg = writer.write(iter([(1, naive_local)]))
-            assert len(msg.paths) == 1
-            staged_path, part = msg.paths[0]
-            assert part is None  # unpartitioned table
-            col = pq.read_table(staged_path, columns=["ts"]).column("ts")
-            got = col.to_pylist()[0]
-            want = datetime.datetime(
-                2024, 6, 1, 12, 0, 0, tzinfo=datetime.timezone.utc
-            )
-            assert got == want, got
-        finally:
-            if old_tz is None:
-                os.environ.pop("TZ", None)
-            else:
-                os.environ["TZ"] = old_tz
-            time.tzset()
-            writer._cleanup([msg])
 
 
 class TestSizeCoalescedWrites:
