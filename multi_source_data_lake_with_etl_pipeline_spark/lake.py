@@ -51,6 +51,8 @@ import shutil
 import time
 import uuid
 from collections.abc import Mapping
+from typing import NamedTuple
+from urllib.parse import quote, unquote
 
 from pyspark.errors import (
     AnalysisException,
@@ -62,7 +64,7 @@ from pyspark.errors import (
 )
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .lake_log import CommitConflict, Snapshot, TableLog, Txn
 
@@ -293,6 +295,20 @@ def _gen_expr(f) -> str | None:
     return md.get(_GEN_KEY)
 
 
+def _fill_generated(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` with each generated column of ``schema`` computed from its
+    stored expression where it reads NULL — rows of files that predate
+    the column's birth (identity for materialized rows: the same
+    deterministic expression recomputes the same value)."""
+    for f in schema.fields:
+        e = _gen_expr(f)
+        if e:
+            df = df.withColumn(
+                f.name, F.coalesce(F.col(f.name), F.expr(e).cast(f.dataType))
+            )
+    return df
+
+
 def _identity_spec(f) -> dict | None:
     md = f.metadata or {}
     raw = md.get(_IDENTITY_KEY)
@@ -518,6 +534,56 @@ def _part_converter(dt) -> "callable":
     return str
 
 
+def _hive_values(segs, types: Mapping) -> dict | None:
+    """{column: typed value} of the hive directory segments ``segs``
+    (``name=value``, URL-quoted; the null marker reads None), or None
+    when a segment is not ``name=value`` over a column in ``types``."""
+    part: dict[str, object] = {}
+    for s in segs:
+        name, eq, raw = s.partition("=")
+        if not eq or name not in types:
+            return None
+        part[name] = (
+            None
+            if raw == _HIVE_NULL
+            else _json_safe(_part_converter(types[name])(unquote(raw)))
+        )
+    return part
+
+
+def _file_entry(
+    abs_path: str, rel: str, part: dict | None, types: Mapping
+) -> dict | None:
+    """The add entry, stored as ``rel``, of the parquet file at
+    ``abs_path`` with its footer stats, or None for an empty file.
+    ``part``: {physical column: typed value} of a hive-partitioned
+    file, ``types`` their data types. The values are recorded on the
+    entry and injected into its stats: min == max == the value, and
+    NULL partitions carry nulls == rows so IS NULL skipping prunes them
+    too. Timestamps are excluded (their string form is format-ambiguous
+    — a mixed-format compare could FALSE-skip); booleans aren't
+    rangeable."""
+    rows, stats, nulls = _file_stats(abs_path)
+    if rows == 0:
+        return None
+    for p, v in (part or {}).items():
+        nulls[p] = rows if v is None else 0
+        if v is not None and not isinstance(v, bool) and not types[
+            p
+        ].simpleString().startswith("timestamp"):
+            stats[p] = [v, v]
+    entry = {
+        "path": rel,
+        "rows": rows,
+        "bytes": os.path.getsize(abs_path),
+        "stats": stats,
+        "nulls": nulls,
+    }
+    if part is not None:
+        entry["partition"] = dict(part)
+    return entry
+
+
 def _ts_epoch(ts) -> float:
     """Normalize a user-facing timestamp — epoch seconds (int/float),
     ``datetime.datetime``/``date``, or an ISO-8601 string — to epoch
@@ -637,6 +703,21 @@ def _prune_nulls(entries, schema: StructType, col: str, want_null: bool) -> list
         ):
             out.append(a)
     return out
+
+
+class _ChangeSource(NamedTuple):
+    """One input of a commit's change rows in :meth:`LakeTable._change_plan`:
+    add ``entries`` whose rows are all ``change`` ("insert" or
+    "delete"), or a ``cdf_dir`` of change files whose rows carry their
+    own ``_change_type``. ``era``: the schema the files were written
+    under. ``cols``: {current column: era physical column} for every
+    current column with lineage into the era; the rest read NULL."""
+
+    change: str | None
+    entries: tuple | None
+    cdf_dir: str | None
+    era: StructType
+    cols: dict[str, str]
 
 
 class LakeTable:
@@ -857,26 +938,13 @@ class LakeTable:
             props["optimizedWrite"] = "true"
             if optimized_write_salt > 1:
                 props["optimizedWrite.salt"] = str(int(optimized_write_salt))
-            if partition_by:
-                # the prop lands in THIS commit — apply the layout to
-                # the create batch directly (later writers resolve it
-                # from props inside _write_files)
-                keys: list = [F.col(c) for c in partition_by]
-                if optimized_write_salt > 1:
-                    keys.append(
-                        F.pmod(
-                            F.xxhash64(*[F.col(c) for c in df.columns]),
-                            F.lit(int(optimized_write_salt)),
-                        )
-                    )
-                df = df.repartition(*keys)
         t = cls(spark, path)
         os.makedirs(t._log_dir, exist_ok=False)
         os.makedirs(t._data_dir, exist_ok=True)
         fin_id = None
         if identity_columns:
             df, fin_id = t._assign_identity(df, schema, props)
-        adds = t._write_files(df, schema, partition_phys=pp, optimized=False)
+        adds, _ = t._write_files(df, schema, pp, props)
         if fin_id is not None:
             props = fin_id(props)
         t._commit(0, "create", adds, [], schema, props=props)
@@ -914,15 +982,12 @@ class LakeTable:
         partitioned by those columns from birth. The source directory
         is independent after conversion (hardlinks survive its
         deletion)."""
-        from urllib.parse import unquote
-
         part_fields = (
             list(StructType.fromDDL(partition_schema).fields)
             if partition_schema
             else []
         )
         pnames = [f.name for f in part_fields]
-        convs = {f.name: _part_converter(f.dataType) for f in part_fields}
         ptypes = {f.name: f.dataType for f in part_fields}
         adds = []
         data_schema: StructType | None = None
@@ -932,17 +997,8 @@ class LakeTable:
             pq_files = [f for f in sorted(files) if f.endswith(".parquet")]
             if not pq_files:
                 continue
-            part: dict[str, object] = {}
-            ok = True
-            for seg in segs:
-                name, eq, raw = seg.partition("=")
-                if not eq or name not in convs:
-                    ok = False
-                    break
-                part[name] = (
-                    None if raw == _HIVE_NULL else _json_safe(convs[name](unquote(raw)))
-                )
-            if pnames and (not ok or len(part) != len(pnames)):
+            part = _hive_values(segs, ptypes)
+            if pnames and (part is None or len(part) != len(pnames)):
                 raise ValueError(
                     f"convert_from_parquet: {dirpath!r} does not match the "
                     f"declared partition layout {pnames} — every data file "
@@ -950,28 +1006,10 @@ class LakeTable:
                 )
             for fname in pq_files:
                 ap = os.path.join(dirpath, fname)
-                rows, stats, nulls = _file_stats(ap)
-                if rows == 0:
+                # the path is relinked below once the table exists
+                entry = _file_entry(ap, ap, part if pnames else None, ptypes)
+                if entry is None:
                     continue
-                entry = {
-                    "path": ap,  # relinked below once the table exists
-                    "rows": rows,
-                    "bytes": os.path.getsize(ap),
-                    "stats": stats,
-                    "nulls": nulls,
-                }
-                if pnames:
-                    for p in pnames:
-                        v = part.get(p)
-                        if v is None:
-                            nulls[p] = rows
-                        else:
-                            nulls[p] = 0
-                            if not isinstance(v, bool) and not ptypes[
-                                p
-                            ].simpleString().startswith("timestamp"):
-                                stats[p] = [v, v]
-                    entry["partition"] = dict(part)
                 adds.append(entry)
                 if data_schema is None:
                     data_schema = spark.read.parquet(ap).schema
@@ -991,8 +1029,6 @@ class LakeTable:
         for a in adds:
             src_abs = a["path"]
             if pnames:
-                from urllib.parse import quote
-
                 rel_dir = "/".join(
                     f"{p}={_HIVE_NULL}"
                     if a["partition"][p] is None
@@ -1998,14 +2034,15 @@ class LakeTable:
         df: DataFrame,
         schema: StructType | None = None,
         partition_phys: list[str] | None = None,
-        optimized: bool | None = None,
+        props: Mapping | None = None,
         observe: dict | None = None,
         validate=None,
         copied: DataFrame | None = None,
-    ) -> list[dict]:
+    ) -> tuple[list[dict], dict]:
         """Materialize ``df`` as immutable data files; returns their add
-        entries (with footer stats). Files land under data/ with UUID
-        names so concurrent writers can never collide.
+        entries (with footer stats) and the ``observe`` metrics ({} when
+        none). Files land under data/ with UUID names so concurrent
+        writers can never collide.
 
         ``schema``: the commit's table schema. When it carries column
         mapping, ``df``'s LOGICAL column names are rewritten to their
@@ -2023,11 +2060,13 @@ class LakeTable:
         ranges + null counts — so partition pruning IS the existing
         metadata file-skipping, evaluated before any listing.
 
+        ``props``: the table props the write honors (default: the
+        committed ones; create passes the props of its own commit).
+
         ``observe``: {name: aggregate Column} metrics that ride the
         write job itself via an Observation over the batch's LOGICAL
         columns (guide §1.2: validations and counts that used to be
-        their own Spark actions fuse into the write's single pass).
-        When given, the return value is ``(adds, observed_dict)``. The
+        their own Spark actions fuse into the write's single pass). The
         metrics may read helper columns outside ``schema`` (merge's
         updated/inserted marker): those columns end at the observation
         and never reach the files.
@@ -2052,69 +2091,28 @@ class LakeTable:
                 df = df.select(*[c for c in df.columns if c in names])
         if copied is not None:
             df = df.unionByName(copied)
-
-        def _validated(tmp_dir: str) -> dict | None:
-            if obs_user is None:
-                return None
-            got = obs_user.get
-            if validate is not None:
-                try:
-                    validate(got)
-                except BaseException:
-                    shutil.rmtree(tmp_dir, ignore_errors=True)
-                    raise
-            return got
-
         df = _to_physical(df, schema)
         if partition_phys is None:
             partition_phys = self._partition_phys()
-        tmp = os.path.join(self.path, f"_tmp_{uuid.uuid4().hex}")
-        if not partition_phys:
-            # Right-size output files from the optimizer's size estimate
-            # (aim for ~128 MB files; small files tax every later read
-            # twice — listing/planning AND per-file open). coalesce() is
-            # narrow (no shuffle) and a no-op when the target >= the
-            # current partition count, so a 100 TB batch keeps its
-            # parallelism while a KB-sized commit lands as ONE file
-            # instead of (task count) KB shards.
-            df = _size_coalesce(df)
-            df.write.mode("overwrite").parquet(tmp)
-            observed = _validated(tmp)
-            adds = [
-                self._land(os.path.join(tmp, fname))
-                for fname in sorted(os.listdir(tmp))
-                if fname.endswith(".parquet")
-            ]
-            adds = [a for a in adds if a is not None]
-            shutil.rmtree(tmp)
-            return (adds, observed) if observe else adds
-        from urllib.parse import unquote
-
         missing = [c for c in partition_phys if c not in df.columns]
         if missing:
             raise ValueError(
                 f"write batch is missing partition column(s) {missing}"
             )
-        # Optimized writes (Delta autoOptimize.optimizeWrite parity):
-        # repartition the batch BY the partition columns before the
-        # write, so each partition receives ~1 file per write instead
-        # of (tasks × partitions) shards — the classic 32-task ×
-        # 200-dir = 6,400-file explosion (SCALE.md probe). Skew guard:
-        # `optimizedWrite.salt` > 1 hash-splits each partition's rows
-        # across that many shuffle keys (a giant hot date writes salt
-        # files in parallel, not one single-task file). Resolved from
-        # table props so EVERY writer honors it; `optimized` overrides
-        # (create: the prop is being written in the same commit).
-        if optimized is None:
-            try:
-                optimized = self.props().get("optimizedWrite") == "true"
-            except (FileNotFoundError, OSError):
-                optimized = False  # pre-create write: flag arrives explicitly
-        if optimized:
-            try:
-                salt = int(self.props().get("optimizedWrite.salt", "1"))
-            except (FileNotFoundError, OSError):
-                salt = 1
+        if partition_phys and props is None:
+            props = self.props()
+        if partition_phys and props.get("optimizedWrite") == "true":
+            # Optimized writes (Delta autoOptimize.optimizeWrite parity):
+            # repartition the batch BY the partition columns before the
+            # write, so each partition receives ~1 file per write instead
+            # of (tasks × partitions) shards — the classic 32-task ×
+            # 200-dir = 6,400-file explosion (SCALE.md probe). Skew
+            # guard: `optimizedWrite.salt` > 1 hash-splits each
+            # partition's rows across that many shuffle keys (a giant
+            # hot date writes salt files in parallel, not one
+            # single-task file). Resolved from table props so EVERY
+            # writer honors it.
+            salt = int(props.get("optimizedWrite.salt", "1"))
             keys = [F.col(c) for c in partition_phys]
             if salt > 1:
                 keys.append(
@@ -2125,11 +2123,15 @@ class LakeTable:
                 )
             df = df.repartition(*keys)
         else:
-            # Same file-sizing rule as the unpartitioned branch: without
-            # optimizedWrite's key repartition, a hive write shards into
-            # (tasks x partition values) files; coalescing the batch to
-            # its size-derived task count bounds that at (size-derived
-            # tasks x values) — one file per value for small batches.
+            # Right-size output files from the optimizer's size estimate
+            # (aim for ~128 MB files; small files tax every later read
+            # twice — listing/planning AND per-file open). coalesce() is
+            # narrow (no shuffle) and a no-op when the target >= the
+            # current partition count, so a 100 TB batch keeps its
+            # parallelism while a KB-sized commit lands as ONE file
+            # instead of (task count) KB shards — and a hive write
+            # shards into (size-derived tasks x partition values)
+            # files, one file per value for small batches.
             df = _size_coalesce(df)
         types = {f.name: f.dataType for f in df.schema.fields}
         # '' in a string partition column is unrepresentable: Spark
@@ -2154,8 +2156,16 @@ class LakeTable:
                     for c in str_parts
                 ],
             )
-        df.write.partitionBy(*partition_phys).mode("overwrite").parquet(tmp)
-        observed = _validated(tmp)
+        tmp = os.path.join(self.path, f"_tmp_{uuid.uuid4().hex}")
+        writer = df.write.partitionBy(*partition_phys) if partition_phys else df.write
+        writer.mode("overwrite").parquet(tmp)
+        observed = {} if obs_user is None else obs_user.get
+        if obs_user is not None and validate is not None:
+            try:
+                validate(observed)
+            except BaseException:
+                shutil.rmtree(tmp, ignore_errors=True)
+                raise
         if obs is not None:
             bad = [c for c, n in obs.get.items() if n]
             if bad:
@@ -2175,61 +2185,29 @@ class LakeTable:
             ]
             if len(segs) != len(partition_phys):
                 continue  # tmp root / intermediate dirs hold no data
-            part: dict[str, object] = {}
-            for s in segs:
-                name, _, raw = s.partition("=")
-                if raw == _HIVE_NULL:
-                    part[name] = None
-                else:
-                    conv = _part_converter(types[name]) if name in types else str
-                    part[name] = _json_safe(conv(unquote(raw)))
+            part = _hive_values(segs, types) if partition_phys else None
             for fname in sorted(files):
                 if fname.endswith(".parquet"):
                     a = self._land(os.path.join(dirpath, fname), segs, part, types)
                     if a is not None:
                         adds.append(a)
         shutil.rmtree(tmp)
-        return (adds, observed) if observe else adds
+        return adds, observed
 
     def _land(
-        self, src: str, segs=(), part: dict | None = None, types=None
+        self, src: str, segs: list, part: dict | None, types: Mapping
     ) -> dict | None:
         """Move the written parquet file ``src`` into data/ (under the
         hive dirs ``segs``) with a fresh uuid name and return its add
-        entry with footer stats, or None for an empty file (removed —
-        the schema lives in the log). ``part``: {physical column: typed
-        value} of a partitioned file, ``types`` their data types."""
+        entry (:func:`_file_entry`), or None for an empty file (removed
+        — the schema lives in the log)."""
         rel = "/".join([_DATA, *segs, f"{uuid.uuid4().hex}.parquet"])
         abs_new = self._abs(rel)
         os.makedirs(os.path.dirname(abs_new), exist_ok=True)
         os.rename(src, abs_new)
-        rows, stats, nulls = _file_stats(abs_new)
-        if rows == 0:
+        entry = _file_entry(abs_new, rel, part, types)
+        if entry is None:
             os.remove(abs_new)
-            return None
-        entry = {
-            "path": rel,
-            "rows": rows,
-            "bytes": os.path.getsize(abs_new),
-            "stats": stats,
-            "nulls": nulls,
-        }
-        if part is not None:
-            # exact partition stats: min == max == the value; NULL
-            # partitions carry nulls == rows so IS NULL skipping prunes
-            # them too. Timestamps are excluded (their string form is
-            # format-ambiguous — a mixed-format compare could
-            # FALSE-skip); booleans aren't rangeable.
-            for p, v in part.items():
-                if v is None:
-                    nulls[p] = rows
-                else:
-                    nulls[p] = 0
-                    if not isinstance(v, bool) and not types[
-                        p
-                    ].simpleString().startswith("timestamp"):
-                        stats[p] = [v, v]
-            entry["partition"] = dict(part)
         return entry
 
     def _abs(self, rel: str) -> str:
@@ -2362,23 +2340,10 @@ class LakeTable:
         else:
             df = _scan(paths, None)
 
-        def _fill_gen(d: DataFrame) -> DataFrame:
-            # generated columns: files predating the column's birth read
-            # NULL — compute from the stored expression (identity for
-            # materialized rows: same deterministic expr, same value)
-            for f in schema.fields:
-                e = _gen_expr(f)
-                if e:
-                    d = d.withColumn(
-                        f.name,
-                        F.coalesce(F.col(f.name), F.expr(e).cast(f.dataType)),
-                    )
-            return d
-
+        df = _fill_generated(df, schema)
         if not need_meta:
-            return _fill_gen(df)
+            return df
         data_cols = [f.name for f in schema.fields]
-        df = _fill_gen(df)
         if dv_rels:
             dv = self.spark.read.schema("_dv_base string, _dv_pos long").parquet(
                 *[self._abs(p) for p in dv_rels]
@@ -2933,7 +2898,7 @@ class LakeTable:
             self.clustering_columns(snap.version),
             int(nfiles),
         )
-        adds = self._write_files(df, schema)
+        adds, _ = self._write_files(df, schema)
         v = self._commit_txn(
             Txn(snap, self._log, touched=targets),
             "compact", adds, target_paths, schema,
@@ -3039,12 +3004,7 @@ class LakeTable:
         # whose recomputed schema maps any batch column elsewhere must
         # conflict, not silently commit files the mapping can't see
         wrote = _bindings(schema, df.columns)
-        if obs_c:
-            adds, _ = self._write_files(
-                df, schema, observe=obs_c, validate=val_c
-            )
-        else:
-            adds = self._write_files(df, schema)
+        adds, _ = self._write_files(df, schema, observe=obs_c, validate=val_c)
         recheck = self._append_recheck(
             wrote, _constraints(snap.props), lambda _: df, union, props_base
         )
@@ -3148,12 +3108,9 @@ class LakeTable:
         unchanged) and ``partition_phys`` are the commit's and the
         write's."""
         schema = snap.schema if schema is None else schema
-        if observe:
-            adds, _ = self._write_files(
-                df, schema, partition_phys, observe=observe, validate=validate
-            )
-        else:
-            adds = self._write_files(df, schema, partition_phys)
+        adds, _ = self._write_files(
+            df, schema, partition_phys, observe=observe, validate=validate
+        )
         targets, probe = list(snap.entries), lambda ents: True
         try:
             if region is not None:
@@ -4275,10 +4232,9 @@ class LakeTable:
             adds = []
             if rows is not None:
                 obs, val = checks
-                out = self._write_files(
+                adds, got = self._write_files(
                     rows, schema, observe=obs, validate=val, copied=kept
                 )
-                adds, got = out if obs else (out, {})
                 counts.update({n: int(x or 0) for n, x in got.items()})
             m = {
                 **metrics(counts),
@@ -4399,33 +4355,71 @@ class LakeTable:
         render NULL, never someone else's bytes. ``overwrites``: the
         overwrite versions up to ``current``'s version
         (``Snapshot.overwrites``)."""
-        boundaries = [w for w in overwrites if w > v]
+        # {physical name in the era being walked: current logical name},
+        # walked back from now over each overwrite boundary past v
+        to_cur = {_phys(f): f.name for f in current.fields}
+        for ov in reversed([w for w in overwrites if w > v]):
+            post = {f.name: _phys(f) for f in self._log.snapshot(ov).schema.fields}
+            to_cur = {
+                _phys(f): to_cur[post[f.name]]
+                for f in self._log.snapshot(ov - 1).schema.fields
+                if post.get(f.name) in to_cur
+            }
+        return {to_cur[_phys(f)]: _phys(f) for f in era.fields if _phys(f) in to_cur}
 
-        def schema_at(x: int) -> StructType:
-            return self._log.snapshot(x).schema
+    def _change_plan(
+        self,
+        lo: int,
+        hi: int,
+        current: StructType,
+        overwrites: tuple[int, ...],
+    ) -> list[tuple[int, str, list[_ChangeSource]]]:
+        """The change feed's one walk from commits to change rows:
+        ``(version, op, sources)`` for every version in ``(lo, hi]``,
+        oldest first, read by both :meth:`changes` and the ``lakecdf``
+        stream source. A missing commit raises.
 
-        def resolve(p: str) -> str | None:
-            """Follow physical ``p`` from the era forward to a current
-            logical name, hopping each overwrite boundary by name."""
-            for ov in boundaries:
-                pre = schema_at(ov - 1)
-                nm = next((f.name for f in pre.fields if _phys(f) == p), None)
-                if nm is None:
-                    return None  # dropped before the boundary
-                post = schema_at(ov)
-                f2 = next((f for f in post.fields if f.name == nm), None)
-                if f2 is None:
-                    return None  # the overwrite did not carry the name
-                p = _phys(f2)
-            cur = next((f.name for f in current.fields if _phys(f) == p), None)
-            return cur
+        create/append commits derive inserts from their immutable add
+        files (zero write-time overhead). An overwrite derives deletes
+        from the entries it removed, resolved against snapshot v-1 with
+        that snapshot's deletion vectors (a vectored row is not
+        resurrected as a phantom delete) and schema, plus inserts from
+        its adds. merge/delete/update read the change files captured at
+        write time under ``_cdf/<v>`` (O(changed rows), like Delta CDF);
+        they store the PHYSICAL names of that commit's schema. compact
+        and metadata-only commits change no row: no sources.
 
-        out: dict[str, str] = {}
-        for ef in era.fields:
-            tgt = resolve(_phys(ef))
-            if tgt is not None:
-                out[tgt] = _phys(ef)
-        return out
+        Each source's ``cols`` map the ``current`` columns onto its era
+        by lineage (:meth:`_cdf_lineage`): a file stores its era's
+        physical names, so reading it with the current mapping would
+        NULL a renamed column across an overwrite boundary.
+        ``overwrites``: the overwrite versions up to ``current``'s."""
+        def source(change, entries, cdf_dir, era, era_v) -> _ChangeSource:
+            lineage = self._cdf_lineage(era, era_v, current, overwrites)
+            return _ChangeSource(change, entries, cdf_dir, era, lineage)
+
+        plan = []
+        for v in range(lo + 1, hi + 1):
+            c = self._log.read_commit(v)
+            op = c["op"]
+            era = StructType.fromJson(json.loads(c["schema"]))
+            sources = []
+            if op in ("create", "append"):
+                sources = [source("insert", c["add"], None, era, v)]
+            elif op == "overwrite":
+                prev = self._readable_snapshot(v - 1)
+                by_path = {a["path"]: a for a in prev.entries}
+                removed = tuple(by_path.get(p, {"path": p}) for p in c["remove"])
+                sources = [
+                    source("delete", removed, None, prev.schema, v - 1),
+                    source("insert", c["add"], None, era, v),
+                ]
+            elif op in ("merge", "delete", "update"):
+                cdf_dir = os.path.join(self.path, _CDF, f"{v:020d}")
+                if os.path.isdir(cdf_dir):
+                    sources = [source(None, None, cdf_dir, era, v)]
+            plan.append((v, op, [s for s in sources if s.entries or s.cdf_dir]))
+        return plan
 
     def _write_cdf(
         self, version: int, df: DataFrame, schema: StructType | None = None
@@ -4460,19 +4454,10 @@ class LakeTable:
         subtract the old contribution and add the new one
         (operators/materialized incremental aggregates).
 
-        create/append commits derive inserts from their immutable add
-        files (zero write-time overhead); merge/delete commits read the
-        change file captured at write time (O(changed rows), like Delta
-        CDF). compact is logically a no-op; overwrite derives
-        delete+insert from the removed/added file sets. Vacuuming past a
+        Which files carry each commit's rows, and how their era columns
+        map onto the current ones, is :meth:`_change_plan` — the same
+        plan the ``lakecdf`` stream source reads. Vacuuming past a
         version drops its derivable changes — read the feed first.
-
-        File-derived entries are read with the ERA schema of the commit
-        that governs them and aligned to the current columns by LINEAGE
-        (_cdf_lineage), exactly like change files: the era's files store
-        era PHYSICAL names, and reading them with the CURRENT mapping
-        would silently NULL a renamed column across an overwrite
-        boundary (overwrite resets physical == logical).
 
         Wall-clock bounds (Delta CDF ``startingTimestamp`` /
         ``endingTimestamp`` parity, against MONOTONIZED commit times):
@@ -4506,120 +4491,47 @@ class LakeTable:
                 raise ValueError("pass to_version OR to_timestamp")
             to_version = self.version_at(to_timestamp)
         snap = self._readable_snapshot()
-        now, schema, overwrites = snap.version, snap.schema, snap.overwrites
-        hi = now if to_version is None else to_version
-        schema_json = schema.jsonValue()
-
-        def _era_read(entries: list[dict], era: StructType, era_v: int) -> DataFrame:
-            """Read add entries with their era's schema (physical names
-            of that era), then project onto the CURRENT columns via
-            lineage — a column with no surviving lineage reads NULL,
-            never another column's bytes."""
-            if era.jsonValue() == schema_json:  # common fast path
-                return self._read_entries(entries, schema)
-            src_by_cur = self._cdf_lineage(era, era_v, schema, overwrites)
-            era_log_by_phys = {_phys(f): f.name for f in era.fields}
-            df = self._read_entries(entries, era)
-            cols = []
-            for f in schema.fields:
-                p = src_by_cur.get(f.name)
-                if p is not None and p in era_log_by_phys:
-                    cols.append(
-                        F.col(era_log_by_phys[p]).cast(f.dataType).alias(f.name)
-                    )
-                else:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-            out = df.select(*cols)
-            # generated columns born AFTER this era read NULL through
-            # lineage — recompute from the stored expression over the
-            # projected (current-name) columns, exactly like the
-            # era==current fast path does via _read_entries' gen fill
-            for f in schema.fields:
-                e = _gen_expr(f)
-                if e:
-                    out = out.withColumn(
-                        f.name,
-                        F.coalesce(F.col(f.name), F.expr(e).cast(f.dataType)),
-                    )
-            return out
-
+        schema = snap.schema
+        hi = snap.version if to_version is None else to_version
+        unmoved = {f.name: _phys(f) for f in schema.fields}
         parts: list[DataFrame] = []
-        for v in range(from_version + 1, hi + 1):
-            c = self._log.read_commit(v)
-            op = c["op"]
-            era = StructType.fromJson(json.loads(c["schema"]))
-            # (entries, change_type, era schema, era version)
-            tagged: list[tuple[list[dict], str, StructType, int]] = []
-            if op in ("create", "append"):
-                tagged = [(c["add"], "insert", era, v)]
-            elif op == "overwrite":
-                # the removed entries' DV state (and schema) lives in
-                # the PRIOR snapshot — resolve both so a vectored row is
-                # not resurrected as a phantom delete/insert and a
-                # renamed column's pre-overwrite bytes read under the
-                # era's physical names, not the reset current mapping
-                _, prev_active, prev_schema = self._snapshot(v - 1)
-                prev_by_path = {a["path"]: a for a in prev_active}
-                removed = [prev_by_path.get(p, {"path": p}) for p in c["remove"]]
-                tagged = [
-                    (removed, "delete", prev_schema, v - 1),
-                    (c["add"], "insert", era, v),
-                ]
-            elif op in ("merge", "delete", "update"):
-                cdf_dir = os.path.join(self.path, _CDF, f"{v:020d}")
-                if os.path.isdir(cdf_dir):
-                    # Change files carry the PHYSICAL names of the
-                    # commit that wrote them (see _write_cdf) — read
-                    # each with ITS OWN era's physical schema and align
-                    # to the CURRENT columns by LINEAGE (_cdf_lineage):
-                    # physical names are stable across renames, and an
-                    # overwrite boundary is bridged by the name the
-                    # column held just before it. Reading every era with
-                    # the LATEST mapping would silently NULL renamed
-                    # columns across an overwrite.
-                    from pyspark.sql.types import StringType
-
-                    era = StructType.fromJson(json.loads(c["schema"]))
-                    cdf_schema = StructType(
-                        list(_physical_schema(era).fields)
-                        + [StructField("_change_type", StringType())]
-                    )
-                    src_by_cur = self._cdf_lineage(era, v, schema, overwrites)
+        for v, _op, sources in self._change_plan(
+            from_version, hi, schema, snap.overwrites
+        ):
+            for src in sources:
+                if src.cdf_dir is None:
+                    df = self._read_entries(src.entries, src.era)
+                    # _read_entries names the era's columns logically
+                    era_name = {_phys(f): f.name for f in src.era.fields}
+                    change = F.lit(src.change)
+                else:  # change files keep their era's physical names
+                    df = self.spark.read.schema(
+                        StructType(
+                            [
+                                *_physical_schema(src.era).fields,
+                                StructField("_change_type", StringType()),
+                            ]
+                        )
+                    ).parquet(src.cdf_dir)
+                    era_name = {}
+                    change = F.col("_change_type")
+                if src.cdf_dir is None and src.era == schema and src.cols == unmoved:
+                    # _read_entries already returned the current columns;
+                    # a projection would only add py4j round trips
+                    df = df.withColumn("_change_type", change)
+                else:
                     cols = [
-                        F.col(src_by_cur[f.name]).cast(f.dataType).alias(f.name)
-                        if f.name in src_by_cur
-                        else F.lit(None).cast(f.dataType).alias(f.name)
+                        (F.col(era_name.get(p, p)) if p else F.lit(None))
+                        .cast(f.dataType)
+                        .alias(f.name)
                         for f in schema.fields
+                        for p in [src.cols.get(f.name)]
                     ]
-                    cf = (
-                        self.spark.read.schema(cdf_schema)
-                        .parquet(cdf_dir)
-                        .select(*cols, "_change_type")
+                    df = _fill_generated(
+                        df.select(*cols, change.alias("_change_type")), schema
                     )
-                    # generated columns born after this change file's
-                    # era recompute (same rule as _era_read above)
-                    for f in schema.fields:
-                        e = _gen_expr(f)
-                        if e:
-                            cf = cf.withColumn(
-                                f.name,
-                                F.coalesce(
-                                    F.col(f.name), F.expr(e).cast(f.dataType)
-                                ),
-                            )
-                    parts.append(
-                        cf.withColumn("_commit_version", F.lit(v).cast("long"))
-                    )
-                continue
-            else:  # compact: physical rearrangement, no logical change
-                continue
-            for entries, typ, e_schema, e_v in tagged:
-                if not entries:
-                    continue
                 parts.append(
-                    _era_read(entries, e_schema, e_v)
-                    .withColumn("_change_type", F.lit(typ))
-                    .withColumn("_commit_version", F.lit(v).cast("long"))
+                    df.withColumn("_commit_version", F.lit(v).cast("long"))
                 )
         if not parts:
             empty = self.spark.createDataFrame([], schema)
@@ -4769,7 +4681,7 @@ class LakeTable:
         df = _cluster_layout(
             self._read_entries(targets, schema), cols, target_files
         )
-        adds = self._write_files(df, schema)
+        adds, _ = self._write_files(df, schema)
         # the targets are the read set: a concurrent append rebases
         # cleanly, a concurrent rewrite of a target conflicts
         return self._commit_txn(

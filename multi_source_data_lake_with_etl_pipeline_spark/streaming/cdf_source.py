@@ -15,25 +15,25 @@ Design (scale-first):
   makes the whole loop exactly-once). The commit log is immutable, so
   ``partitions(start, end)`` is deterministic for any replayed range
   — the readBetweenOffsets guarantee, for free.
-- One ``InputPartition`` per CHANGE-CARRYING FILE (add file, removed
-  file, or CDF change file), so a micro-batch over a burst of commits
-  scans in parallel across executors — the driver only reads the
-  commit JSONs; all parquet bytes are read executor-side via pyarrow.
+- Which files carry each commit's rows, and how their era columns map
+  onto the current ones, is ``LakeTable._change_plan`` — the one plan
+  batch ``changes()`` reads too. Each plan source becomes one
+  ``InputPartition`` per CHANGE-CARRYING FILE (add file, removed file,
+  or CDF change file), so a micro-batch over a burst of commits scans
+  in parallel across executors — the driver only walks the plan; all
+  parquet bytes are read executor-side via pyarrow.
 - Schema = the table's CURRENT logical columns + ``_change_type`` +
-  ``_commit_version`` (same contract as ``changes()``). Era files are
-  projected through the SAME column-lineage rule ``changes()`` uses:
-  each partition ships its {output column → era physical column} map
-  computed on the driver; a column with no surviving lineage reads
-  NULL, never another column's bytes. Partitioned tables ship the
-  file's hive partition values and fill them as constants.
+  ``_commit_version`` (same contract as ``changes()``). Each partition
+  ships its source's {output column → era physical column} map from
+  the plan; a column with no surviving lineage reads NULL, never
+  another column's bytes. Partitioned tables ship the file's hive
+  partition values and fill them as constants.
 
 Generated columns: the executor reader has no SQL evaluator, so files
 that PREDATE a generated column's birth yield NULL from the raw
-source — ``lake_cdf_stream`` closes the gap with a post-read
-``coalesce(col, expr)`` projection on the wrapper DataFrame (where
-Spark SQL CAN evaluate), exactly how batch ``changes()`` recomputes
-(``lake.py:_fill_gen``). Identity for materialized rows: the same
-deterministic expression recomputes the same value.
+source — ``lake_cdf_stream`` closes the gap on the wrapper DataFrame
+(where Spark SQL CAN evaluate) with ``lake._fill_generated``, the
+helper every batch read uses.
 
 Limitations (documented, loud):
 
@@ -55,7 +55,6 @@ Limitations (documented, loud):
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,18 +65,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..lake import LakeTable, _CDF, _LOG, _part_converter, _phys
+from ..lake import LakeTable, _LOG, _fill_generated, _part_converter, _phys
 from ..lake_log import TableLog
-
-
-def _col_spec(era: StructType, lineage: dict[str, str], out_fields) -> list:
-    """[(era physical column or None)] aligned to the output fields."""
-    era_phys = {_phys(f) for f in era.fields}
-    out = []
-    for f in out_fields:
-        p = lineage.get(f.name)
-        out.append(p if p is not None and p in era_phys else None)
-    return out
 
 
 class _CdfPartition(InputPartition):
@@ -167,60 +156,18 @@ class LakeCdfStreamReader(DataSourceStreamReader):
         # restart) must never drag the cursor backwards
         self._advance(max(lo, hi))
         snap = t._readable_snapshot(hi)
-        current, overwrites = snap.schema, snap.overwrites
-        out_fields = [f for f in self.out_schema.fields][:-2]  # minus meta
+        out_fields = self.out_schema.fields[:-2]  # minus meta
         parts: list[InputPartition] = []
-
-        def file_parts(entries, typ, era, era_v, version):
-            lin = t._cdf_lineage(era, era_v, current, overwrites)
-            spec_cols = _col_spec(era, lin, out_fields)
-            # hive partition values ship as TYPED constants (dates/
-            # timestamps parse on the driver once per file, not per row)
-            conv = {_phys(f): _part_converter(f.dataType) for f in era.fields}
-            for a in entries:
-                dv = a.get("dv")
-                parts.append(
-                    _CdfPartition(
-                        {
-                            "kind": "file",
-                            "path": t._abs(a["path"]),
-                            "cols": spec_cols,
-                            "part_values": {
-                                # keyed by era physical name
-                                k: (None if v is None else conv.get(k, str)(v))
-                                for k, v in (a.get("partition") or {}).items()
-                            },
-                            "change": typ,
-                            "version": version,
-                            "dv_path": t._abs(dv["path"]) if dv else None,
-                            "dv_base": os.path.basename(a["path"]) if dv else None,
-                        }
-                    )
-                )
-
-        for v in range(lo + 1, hi + 1):
-            try:
-                c = t._log.read_commit(v)
-            except FileNotFoundError:
-                continue
-            op = c["op"]
-            era = StructType.fromJson(json.loads(c["schema"]))
-            if op in ("create", "append"):
-                file_parts(c["add"], "insert", era, v, v)
-            elif self.mode == "appends":
-                # data-only stream: change commits are not representable
-                if op == "compact":
-                    continue
-                # METADATA-ONLY commits (setprops, constraints, column
-                # defaults, cluster-by, generated/rename/drop column,
-                # …) change zero rows — Delta's non-CDF source does not
-                # fail on them either; only genuine data-changing ops
-                # (overwrite/merge/delete/update) desync downstream
-                if not c.get("add") and not c.get("remove") and not os.path.isdir(
-                    os.path.join(self.path, _CDF, f"{v:020d}")
-                ):
-                    continue
-                if self.skip_change_commits:
+        for v, op, sources in t._change_plan(lo, hi, snap.schema, snap.overwrites):
+            if self.mode == "appends" and op not in ("create", "append"):
+                # data-only stream: change commits are not representable.
+                # compact and METADATA-ONLY commits (setprops,
+                # constraints, column defaults, cluster-by,
+                # generated/rename/drop column, …) carry no change rows
+                # — Delta's non-CDF source does not fail on them either;
+                # only genuine data-changing ops (overwrite/merge/
+                # delete/update) desync downstream
+                if not sources or self.skip_change_commits:
                     continue
                 if self.ignore_deletes and op == "delete":
                     continue
@@ -231,35 +178,46 @@ class LakeCdfStreamReader(DataSourceStreamReader):
                     "for delete-only retention) to skip, or stream the "
                     "CDF mode instead"
                 )
-            elif op == "overwrite":
-                _, prev_active, prev_schema = t._snapshot(v - 1)
-                prev_by_path = {a["path"]: a for a in prev_active}
-                removed = [
-                    prev_by_path.get(p, {"path": p}) for p in c["remove"]
-                ]
-                file_parts(removed, "delete", prev_schema, v - 1, v)
-                file_parts(c["add"], "insert", era, v, v)
-            elif op in ("merge", "delete", "update"):
-                cdf_dir = os.path.join(self.path, _CDF, f"{v:020d}")
-                if not os.path.isdir(cdf_dir):
-                    continue
-                lin = t._cdf_lineage(era, v, current, overwrites)
-                spec_cols = _col_spec(era, lin, out_fields)
-                for fname in sorted(os.listdir(cdf_dir)):
-                    if not fname.endswith(".parquet"):
-                        continue
-                    parts.append(
+            for src in sources:
+                cols = [src.cols.get(f.name) for f in out_fields]
+                if src.cdf_dir is not None:
+                    parts += [
                         _CdfPartition(
                             {
                                 "kind": "cdf",
-                                "path": os.path.join(cdf_dir, fname),
-                                "cols": spec_cols,
+                                "path": os.path.join(src.cdf_dir, fname),
+                                "cols": cols,
                                 "part_values": {},
                                 "version": v,
                             }
                         )
+                        for fname in sorted(os.listdir(src.cdf_dir))
+                        if fname.endswith(".parquet")
+                    ]
+                    continue
+                # hive partition values ship as TYPED constants (dates/
+                # timestamps parse on the driver once per file, not per
+                # row), keyed by era physical name
+                conv = {_phys(f): _part_converter(f.dataType) for f in src.era.fields}
+                for a in src.entries:
+                    dv = a.get("dv")
+                    parts.append(
+                        _CdfPartition(
+                            {
+                                "kind": "file",
+                                "path": t._abs(a["path"]),
+                                "cols": cols,
+                                "part_values": {
+                                    k: (None if x is None else conv.get(k, str)(x))
+                                    for k, x in (a.get("partition") or {}).items()
+                                },
+                                "change": src.change,
+                                "version": v,
+                                "dv_path": t._abs(dv["path"]) if dv else None,
+                                "dv_base": os.path.basename(a["path"]) if dv else None,
+                            }
+                        )
                     )
-            # compact: physical rearrangement — no logical change
         return parts
 
     # ----------------------------------------------------- executor
@@ -397,9 +355,9 @@ def lake_cdf_stream(
 
     Generated columns stream with their VALUES in every era (batch
     ``changes()`` parity): pre-birth files read NULL from the raw
-    source, and a post-read ``coalesce(col, generation expr)``
-    projection here recomputes them — a narrow per-row map on the
-    wrapper DataFrame, so the executor reader stays SQL-free."""
+    source, and ``lake._fill_generated`` recomputes them on the
+    wrapper DataFrame — a narrow per-row map, so the executor reader
+    stays SQL-free."""
     return _lake_stream(spark, path, from_version, max_versions_per_batch)
 
 
@@ -437,10 +395,6 @@ def _lake_stream(
 ) -> DataFrame:
     """The ``lakecdf`` source over ``path`` with reader ``options``,
     generated columns recomputed where the raw source reads NULL."""
-    from pyspark.sql import functions as F
-
-    from ..lake import _gen_expr
-
     register_lakecdf_datasource(spark)
     reader = (
         spark.readStream.format("lakecdf")
@@ -452,12 +406,5 @@ def _lake_stream(
         reader = reader.option(
             "max_versions_per_batch", str(int(max_versions_per_batch))
         )
-    out = reader.load()
     _, _, schema = LakeTable(None, path)._snapshot()
-    for f in schema.fields:
-        e = _gen_expr(f)
-        if e:
-            out = out.withColumn(
-                f.name, F.coalesce(F.col(f.name), F.expr(e).cast(f.dataType))
-            )
-    return out
+    return _fill_generated(reader.load(), schema)

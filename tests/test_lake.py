@@ -2484,7 +2484,7 @@ def test_rebase_conflicts_on_concurrent_append_of_matching_rows(
     rows still rebase cleanly."""
     # --- delete_keys vs matching concurrent append: conflict
     t = _mk(spark, tmp_path / "a", rows=20, files=1)
-    racer_adds = t._write_files(
+    racer_adds, _ = t._write_files(
         spark.createDataFrame([(5, 111)], "k long, v long")
     )
     orig = _racer_append_hook(t, racer_adds)
@@ -2496,7 +2496,7 @@ def test_rebase_conflicts_on_concurrent_append_of_matching_rows(
 
     # --- delete_keys vs disjoint concurrent append: clean rebase
     t2 = _mk(spark, tmp_path / "b", rows=20, files=1)
-    racer2 = t2._write_files(
+    racer2, _ = t2._write_files(
         spark.createDataFrame([(999, 1)], "k long, v long")
     )
     orig2 = _racer_append_hook(t2, racer2)
@@ -2509,7 +2509,7 @@ def test_rebase_conflicts_on_concurrent_append_of_matching_rows(
     # --- merge vs concurrent append of the same key: conflict (both
     # the update path and the pure-insert path would duplicate the key)
     t3 = _mk(spark, tmp_path / "c", rows=20, files=1)
-    racer3 = t3._write_files(
+    racer3, _ = t3._write_files(
         spark.createDataFrame([(100, 1)], "k long, v long")
     )
     orig3 = _racer_append_hook(t3, racer3)
@@ -2527,7 +2527,7 @@ def test_rebase_conflicts_on_concurrent_append_of_matching_rows(
     import json as _json
 
     t4 = _mk(spark, tmp_path / "d", rows=20, files=1)
-    racer4 = t4._write_files(
+    racer4, _ = t4._write_files(
         spark.createDataFrame([(7, 70)], "k long, v long")
     )
     orig_tf = type(t4)._touched_counts
@@ -2746,7 +2746,7 @@ class TestCheckConstraints:
 
         # (a) add_constraint loses to an interleaved violating append
         t = _mk(spark, tmp_path / "a", rows=5, files=1)
-        racer_adds = t._write_files(
+        racer_adds, _ = t._write_files(
             spark.createDataFrame([(50, -1)], "k long, v long")
         )
 
@@ -3262,7 +3262,7 @@ class TestLakeUpdate:
         self, spark, tmp_path
     ):
         t = _mk(spark, tmp_path, rows=20, files=1)
-        racer_adds = t._write_files(
+        racer_adds, _ = t._write_files(
             spark.createDataFrame([(5, 999)], "k long, v long")
         )
         orig = _racer_append_hook(t, racer_adds)
@@ -3282,7 +3282,7 @@ class TestRound7ReviewFixes:
         no-op, never a double-apply."""
         t = _mk(spark, tmp_path, rows=5, files=1)
         batch = spark.createDataFrame([(50, 1)], "k long, v long")
-        racer_adds = t._write_files(batch)
+        racer_adds, _ = t._write_files(batch)
         import json as _json
 
         orig = type(t)._write_files

@@ -470,6 +470,76 @@ class TestLakeCdfStreamSource:
         self._drain(spark, t.path, out, ck)  # exhausted: no-op
         assert spark.read.parquet(out).count() == len(want)
 
+    def test_full_history_stream_matches_batch_changes(self, spark, tmp_path):
+        """Every commit shape the change feed knows, streamed and read
+        in batch: a DV merge, a DV delete, a rename, a props change, an
+        overwrite of the vectored files (deletes resolved against the
+        prior snapshot's vectors and names), an append, a copy-on-write
+        update and a compact (no rows). The drained stream equals
+        changes(-1) row for row."""
+        from multi_source_data_lake_with_etl_pipeline_spark.lake import LakeTable
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "k long, v long"),
+        )
+        t.merge(
+            spark.createDataFrame([(2, 99), (7, 70)], "k long, v long"), "k", dv=True
+        )
+        t.delete("k = 1", dv=True)
+        t.rename_column("v", "val")
+        t.set_properties({"owner": "me"})
+        t.overwrite(
+            spark.createDataFrame([(4, 40), (5, 50), (6, 60)], "k long, val long")
+        )
+        t.append(spark.createDataFrame([(8, 80)], "k long, val long"))
+        t.update("k = 4", {"val": "444"})
+        t.compact()
+        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+        self._drain(spark, t.path, out, ck)
+        got = sorted(
+            (r["k"], r["val"], r["_change_type"], r["_commit_version"])
+            for r in spark.read.parquet(out).collect()
+        )
+        want = sorted(
+            (r["k"], r["val"], r["_change_type"], r["_commit_version"])
+            for r in t.changes(-1).collect()
+        )
+        assert got == want
+        assert len(got) == 16
+        # the overwrite deletes exactly the rows live before it, under
+        # the renamed column's current name
+        assert [r[:3] for r in got if r[3] == 5 and r[2] == "delete"] == [
+            (2, 99, "delete"), (3, 30, "delete"), (7, 70, "delete")
+        ]
+        assert {r[3] for r in got} == {0, 1, 2, 5, 6, 7}
+
+    def test_missing_commit_fails_both_readers(self, spark, tmp_path):
+        """A commit file gone from below a checkpoint (the snapshot
+        still replays from the checkpoint) is an error for the change
+        feed, never a silently skipped version: changes() raises and
+        the stream's planning fails before any batch lands."""
+        from multi_source_data_lake_with_etl_pipeline_spark.lake import LakeTable
+        from multi_source_data_lake_with_etl_pipeline_spark.lake_log import (
+            CHECKPOINT_EVERY,
+        )
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"), spark.createDataFrame([(0, 0)], "k long, v long")
+        )
+        for i in range(1, CHECKPOINT_EVERY + 2):
+            t.append(spark.createDataFrame([(i, i)], "k long, v long"))
+        os.remove(os.path.join(t._log_dir, f"{3:020d}.json"))
+        assert t.read().count() == CHECKPOINT_EVERY + 2  # checkpoint replay
+        with pytest.raises(FileNotFoundError):
+            t.changes(-1)
+        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+        with pytest.raises(Exception, match="FileNotFoundError|No such file"):
+            self._drain(spark, t.path, out, ck)
+        assert not os.path.isdir(out) or not [
+            f for f in os.listdir(out) if f.endswith(".parquet")
+        ]
+
     def test_partitioned_renamed_table_streams_current_names(
         self, spark, tmp_path
     ):
