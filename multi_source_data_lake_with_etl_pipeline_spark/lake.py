@@ -4373,9 +4373,9 @@ class LakeTable:
         hi: int,
         current: StructType,
         overwrites: tuple[int, ...],
-    ) -> list[tuple[int, str, list[_ChangeSource]]]:
+    ) -> list[tuple[int, str, list[_ChangeSource], bool]]:
         """The change feed's one walk from commits to change rows:
-        ``(version, op, sources)`` for every version in ``(lo, hi]``,
+        ``(version, op, sources, changed)`` for every version in ``(lo, hi]``,
         oldest first, read by both :meth:`changes` and the ``lakecdf``
         stream source. A missing commit raises.
 
@@ -4388,6 +4388,11 @@ class LakeTable:
         write time under ``_cdf/<v>`` (O(changed rows), like Delta CDF);
         they store the PHYSICAL names of that commit's schema. compact
         and metadata-only commits change no row: no sources.
+
+        ``changed``: the commit changed rows. It is read from the
+        commit's add/remove lists, not from its sources, so a merge,
+        delete or update whose change files are gone (vacuumed, or not
+        yet written) still counts as a data change.
 
         Each source's ``cols`` map the ``current`` columns onto its era
         by lineage (:meth:`_cdf_lineage`): a file stores its era's
@@ -4418,7 +4423,9 @@ class LakeTable:
                 cdf_dir = os.path.join(self.path, _CDF, f"{v:020d}")
                 if os.path.isdir(cdf_dir):
                     sources = [source(None, None, cdf_dir, era, v)]
-            plan.append((v, op, [s for s in sources if s.entries or s.cdf_dir]))
+            sources = [s for s in sources if s.entries or s.cdf_dir]
+            changed = op != "compact" and bool(sources or c["add"] or c["remove"])
+            plan.append((v, op, sources, changed))
         return plan
 
     def _write_cdf(
@@ -4495,7 +4502,7 @@ class LakeTable:
         hi = snap.version if to_version is None else to_version
         unmoved = {f.name: _phys(f) for f in schema.fields}
         parts: list[DataFrame] = []
-        for v, _op, sources in self._change_plan(
+        for v, _op, sources, _changed in self._change_plan(
             from_version, hi, schema, snap.overwrites
         ):
             for src in sources:

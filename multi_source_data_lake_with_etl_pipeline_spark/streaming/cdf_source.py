@@ -158,7 +158,8 @@ class LakeCdfStreamReader(DataSourceStreamReader):
         snap = t._readable_snapshot(hi)
         out_fields = self.out_schema.fields[:-2]  # minus meta
         parts: list[InputPartition] = []
-        for v, op, sources in t._change_plan(lo, hi, snap.schema, snap.overwrites):
+        plan = t._change_plan(lo, hi, snap.schema, snap.overwrites)
+        for v, op, sources, changed in plan:
             if self.mode == "appends" and op not in ("create", "append"):
                 # data-only stream: change commits are not representable.
                 # compact and METADATA-ONLY commits (setprops,
@@ -166,8 +167,9 @@ class LakeCdfStreamReader(DataSourceStreamReader):
                 # generated/rename/drop column, …) carry no change rows
                 # — Delta's non-CDF source does not fail on them either;
                 # only genuine data-changing ops (overwrite/merge/
-                # delete/update) desync downstream
-                if not sources or self.skip_change_commits:
+                # delete/update, even one whose change files are gone)
+                # desync downstream
+                if not changed or self.skip_change_commits:
                     continue
                 if self.ignore_deletes and op == "delete":
                     continue

@@ -768,6 +768,33 @@ class TestLakeAppendStream:
             if q.exception() is not None:
                 raise RuntimeError(str(q.exception()))
 
+    def test_appends_stream_raises_on_merge_without_change_files(
+        self, spark, tmp_path
+    ):
+        """A merge whose change files are gone (vacuumed, or planned
+        between its commit and its change-file write) still changed
+        rows: the appends stream raises on it, lands nothing, and does
+        not move its offset past it."""
+        import shutil
+
+        from multi_source_data_lake_with_etl_pipeline_spark.lake import LakeTable
+
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"),
+        )
+        t.merge(spark.createDataFrame([(2, 99)], "k long, v long"), "k")
+        shutil.rmtree(os.path.join(t.path, "_cdf", f"{1:020d}"))
+        out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+        for _ in range(2):  # a restart hits the same commit again
+            with pytest.raises(Exception, match="appends-mode"):
+                q = self._drain(spark, t.path, out, ck)
+                if q.exception() is not None:
+                    raise RuntimeError(str(q.exception()))
+        assert not os.path.isdir(out) or not [
+            f for f in os.listdir(out) if f.endswith(".parquet")
+        ]
+
     def test_skip_change_commits_and_ignore_deletes(self, spark, tmp_path):
         from multi_source_data_lake_with_etl_pipeline_spark.lake import LakeTable
 
